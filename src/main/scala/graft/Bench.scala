@@ -6,30 +6,28 @@ object Bench {
     * counting sink; report entries/sec (produce excluded).
     */
   private def streamIngestEps(spark: SparkSession): Long = {
-    try {
-      val root = graft.TempDirs.scratch("graft-bench-stream")
-      val n = 50000
-      val w = new graft.log.LogWriter(root, "bench")
-      // 1k-entry appends → 50 segments, so each micro-batch's range prunes
-      // to its own files instead of re-parsing one giant segment
-      (1 to n).grouped(1000).foreach(g =>
-        w.produceAll(g.map(i => Map[String, Any]("i" -> i, "p" -> s"payload_$i"))))
-      val t0 = System.nanoTime()
-      val q = spark.readStream.format("graftlog")
-        .option("path", root).option("stream", "bench")
-        .option("startingOffsets", "earliest")
-        .option("maxEntriesPerTrigger", "25000")
-        .load()
-        .writeStream.format("memory").queryName("bench_stream")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation",
-          graft.TempDirs.scratch("graft-bench-ckpt"))
-        .start()
-      q.processAllAvailable()
-      q.stop()
-      val secs = (System.nanoTime() - t0) / 1e9
-      math.round(n / secs)
-    } catch { case _: Throwable => -1L }
+    val root = graft.TempDirs.scratch("graft-bench-stream")
+    val n = 50000
+    val w = new graft.log.LogWriter(root, "bench")
+    // 1k-entry appends → 50 segments, so each micro-batch's range prunes
+    // to its own files instead of re-parsing one giant segment
+    (1 to n).grouped(1000).foreach(g =>
+      w.produceAll(g.map(i => Map[String, Any]("i" -> i, "p" -> s"payload_$i"))))
+    val t0 = System.nanoTime()
+    val q = spark.readStream.format("graftlog")
+      .option("path", root).option("stream", "bench")
+      .option("startingOffsets", "earliest")
+      .option("maxEntriesPerTrigger", "25000")
+      .load()
+      .writeStream.format("memory").queryName("bench_stream")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation",
+        graft.TempDirs.scratch("graft-bench-ckpt"))
+      .start()
+    q.processAllAvailable()
+    q.stop()
+    val secs = (System.nanoTime() - t0) / 1e9
+    math.round(n / secs)
   }
 
   /** Distributed bulk-ingest throughput: 50k explicit-timestamp rows through
@@ -38,16 +36,14 @@ object Bench {
     */
   private def bulkProduceEps(spark: SparkSession): Long = {
     import org.apache.spark.sql.functions._
-    try {
-      val root = graft.TempDirs.scratch("graft-bench-bulk")
-      val n = 50000
-      val df = spark.range(n).select(
-        (lit(1700000000000L) + col("id") / 10L).as("ms"),
-        concat(lit("payload_"), col("id")).as("p"))
-      val t0 = System.nanoTime()
-      graft.log.LogBulkProducer.produceAt(df, "ms", root, "bulk", Seq("p"))
-      math.round(n / ((System.nanoTime() - t0) / 1e9))
-    } catch { case _: Throwable => -1L }
+    val root = graft.TempDirs.scratch("graft-bench-bulk")
+    val n = 50000
+    val df = spark.range(n).select(
+      (lit(1700000000000L) + col("id") / 10L).as("ms"),
+      concat(lit("payload_"), col("id")).as("p"))
+    val t0 = System.nanoTime()
+    graft.log.LogBulkProducer.produceAt(df, "ms", root, "bulk", Seq("p"))
+    math.round(n / ((System.nanoTime() - t0) / 1e9))
   }
 
   /** Live append-sink throughput: 50k rows through the default
@@ -58,18 +54,16 @@ object Bench {
     */
   private def sinkAppendEps(spark: SparkSession): Long = {
     import org.apache.spark.sql.functions._
-    try {
-      val root = graft.TempDirs.scratch("graft-bench-sink")
-      val n = 50000
-      val df = spark.range(n).select(
-        col("id").cast("string").as("i"),
-        concat(lit("payload_"), col("id")).as("p"))
-      val t0 = System.nanoTime()
-      df.write.format("graftlog")
-        .option("path", root).option("stream", "sink")
-        .mode("append").save()
-      math.round(n / ((System.nanoTime() - t0) / 1e9))
-    } catch { case _: Throwable => -1L }
+    val root = graft.TempDirs.scratch("graft-bench-sink")
+    val n = 50000
+    val df = spark.range(n).select(
+      col("id").cast("string").as("i"),
+      concat(lit("payload_"), col("id")).as("p"))
+    val t0 = System.nanoTime()
+    df.write.format("graftlog")
+      .option("path", root).option("stream", "sink")
+      .mode("append").save()
+    math.round(n / ((System.nanoTime() - t0) / 1e9))
   }
 
   /** Sharded append-sink throughput: same 50k rows through a 4-shard
@@ -79,40 +73,22 @@ object Bench {
     */
   private def sinkAppendShardedEps(spark: SparkSession, shards: Int): Long = {
     import org.apache.spark.sql.functions._
-    try {
-      val root = graft.TempDirs.scratch("graft-bench-sink-sharded")
-      val n = 50000
-      val df = spark.range(n).select(
-        col("id").cast("string").as("i"),
-        concat(lit("payload_"), col("id")).as("p"))
-      val t0 = System.nanoTime()
-      df.write.format("graftlog")
-        .option("path", root).option("stream", "sink")
-        .option("shards", shards.toString).option("shardKey", "i")
-        .mode("append").save()
-      math.round(n / ((System.nanoTime() - t0) / 1e9))
-    } catch { case _: Throwable => -1L }
+    val root = graft.TempDirs.scratch("graft-bench-sink-sharded")
+    val n = 50000
+    val df = spark.range(n).select(
+      col("id").cast("string").as("i"),
+      concat(lit("payload_"), col("id")).as("p"))
+    val t0 = System.nanoTime()
+    df.write.format("graftlog")
+      .option("path", root).option("stream", "sink")
+      .option("shards", shards.toString).option("shardKey", "i")
+      .mode("append").save()
+    math.round(n / ((System.nanoTime() - t0) / 1e9))
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // Let AQE size CACHED plans' output partitions from their bytes
-      // (default false for historical compat): CacheScope-cached frames
-      // otherwise freeze the session shuffle-partition count into every
-      // downstream scan, so a KB-sized cached table is re-read as `cpus`
-      // near-empty partitions by every action that touches it — per-task
-      // overhead that scales with the core count, not the data (the r11
-      // verdict's 8-core-beats-32-core pathology). Scale-adaptive by
-      // construction: at real input sizes AQE keeps caches many-partitioned.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val wallT0 = System.nanoTime()
     // THROUGHPUT PHASE FIRST (round-11 verdict task): the query loop below
@@ -128,17 +104,27 @@ object Bench {
     // are early-JVM numbers by design — do not compare absolute levels
     // against rounds <= 10, where the probes ran after 400+ queries of C2
     // warm-up (and against whatever fixture-production load that left).
-    def best3eps(probe: => Long): Long = (1 to 3).map(_ => probe).max
-    val eps = best3eps(streamIngestEps(spark))
-    val bulkEps = best3eps(bulkProduceEps(spark))
-    val sinkEps = best3eps(sinkAppendEps(spark))
-    val shardedEps = best3eps(sinkAppendShardedEps(spark, 4))
+    // A failing probe still reports -1 in its slot, so the headline line
+    // keeps its shape; the reason goes to stderr and to the detail file.
+    val probeErrors = scala.collection.mutable.LinkedHashMap[String, String]()
+    def probe[T](name: String, failed: T)(run: => T): T =
+      try run
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: $e")
+        probeErrors(name) = e.toString
+        failed
+      }
+    def best3eps(name: String)(run: => Long): Long =
+      (1 to 3).map(_ => probe(name, -1L)(run)).max
+    val eps = best3eps("stream_entries_per_sec")(streamIngestEps(spark))
+    val bulkEps = best3eps("bulk_produce_eps")(bulkProduceEps(spark))
+    val sinkEps = best3eps("sink_append_eps")(sinkAppendEps(spark))
+    val shardedEps = best3eps("sink_append_sharded4_eps")(sinkAppendShardedEps(spark, 4))
     // one untimed run to absorb session warmup (codegen, parquet reader JIT).
     // FIXED query + sorted iteration order below: round-over-round deltas
     // must compare like-for-like — a Map-order-dependent warm-up shifted
     // whenever a query was added and made q01 look 5x slower in round 4.
-    try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    probe("q01_warmup", 0L)(SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count())
     // best of 2 runs per query: single-run numbers on a shared box swing
     // ±20% with background load; the min is the engine's actual cost.
     // A throwing query must NOT blend into the timings: an analysis error
@@ -157,7 +143,7 @@ object Bench {
         val t0 = System.nanoTime()
         val ok = try { fn(spark, sfDir).count(); true }
                  catch { case e: Throwable =>
-                   System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
+                   System.err.println(s"[bench] $name FAILED: $e")
                    false
                  }
         finally spark.sparkContext.setJobDescription(null)
@@ -179,7 +165,7 @@ object Bench {
       sys.props("user.dir"), "BENCH_DETAIL.json").toAbsolutePath
     java.nio.file.Files.write(detailPath,
       detailLine(results, eps, bulkEps, sinkEps, shardedEps, sfDir,
-        failed.toSeq, wallSec)
+        failed.toSeq, wallSec, probeErrors.toSeq)
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     println(headlineLine(results, eps, bulkEps, sinkEps, shardedEps, sfDir,
       detailPath.toString, failed.toSeq))
@@ -225,7 +211,8 @@ object Bench {
 
   private[graft] def detailLine(results: Map[String, Double], eps: Long,
       bulkEps: Long, sinkEps: Long, shardedEps: Long, sfDir: String,
-      failed: Seq[String] = Nil, wallSec: Double = -1.0): String = {
+      failed: Seq[String] = Nil, wallSec: Double = -1.0,
+      probeErrors: Seq[(String, String)] = Nil): String = {
     val total = if (results.nonEmpty) results.values.sum else 0.0
     // wall_sec >> total is EXPECTED: total sums each query's best-of-2
     // (the engine's warmed cost), while the wall clock additionally pays
@@ -233,8 +220,13 @@ object Bench {
     // on the driver's loaded box the wall has run 3-4x the reported total.
     // Recorded here so a round's adjudication doesn't need NOTES archeology.
     val wall = if (wallSec >= 0) s""","wall_sec":${r3(wallSec)},"wall_note":"wall = cold runs + fixture production + box load; total = sum of per-query best-of-2 (warmed)"""" else ""
-    s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"failures":${failed.size},"failed":${jarr(failed.sorted)},"queries":${jmap(results.toSeq.sortBy(_._1))},"stream_entries_per_sec":$eps,"bulk_produce_eps":$bulkEps,"sink_append_eps":$sinkEps,"sink_append_sharded4_eps":$shardedEps,"sf":"$sfDir"$wall}"""
+    s"""{"metric":"total","value":${r3(total)},"unit":"sec","n_queries":${results.size},"failures":${failed.size},"failed":${jarr(failed.sorted)},"queries":${jmap(results.toSeq.sortBy(_._1))},"stream_entries_per_sec":$eps,"bulk_produce_eps":$bulkEps,"sink_append_eps":$sinkEps,"sink_append_sharded4_eps":$shardedEps,"probe_errors":${jstrmap(probeErrors)},"sf":"$sfDir"$wall}"""
   }
+
+  private val json = new com.fasterxml.jackson.databind.ObjectMapper()
+  private def jstrmap(m: Seq[(String, String)]): String =
+    m.map { case (k, v) => json.writeValueAsString(k) + ":" + json.writeValueAsString(v) }
+      .mkString("{", ",", "}")
 
   /** The headline (stdout) line carries only the failure COUNT — the names
     * live in the detail file, because a mass failure (the round-6 mode:

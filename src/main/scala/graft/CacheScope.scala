@@ -47,7 +47,7 @@ object CacheScope {
     * lazy plan whose leaves reference it) throws on its next action — the
     * blocks are dropped and, unlike a cache, there is no lineage left to
     * recompute. Runners must rebuild via the query fn after a release, as
-    * Bench/Verify/TimeQuery do; never re-action a frame returned before it.
+    * Bench/Verify/TimeQueries do; never re-action a frame returned before it.
     *
     * The checkpointed RDD is captured DIRECTLY off the returned Dataset's
     * LogicalRDD leaf (a registry diff around the call would mis-capture any

@@ -114,7 +114,8 @@ object ColFns {
     * codegen'd plan node (functions.DetLnRat — the Column-composed form of
     * the same program built ~1.5k-node trees whose duplication through
     * downstream operators cost whole seconds of analysis/codegen);
-    * resolution is guaranteed by the Tables.load registration chokepoint.
+    * the function resolves on sessions built through GraftSession and in
+    * every QueryDef run.
     */
   def detLn(p0: Column, q0: Column): Column =
     call_function("graft_detln", p0.cast("long"), q0.cast("long"))

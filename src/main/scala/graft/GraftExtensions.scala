@@ -1,43 +1,27 @@
 package graft
 
-import graft.functions.{DotProduct, DotProductInt, MinHashSig, PolyHash, SimHash32, SquaredDistInt}
+import graft.functions.GraftExpressions
 import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
 
-/** SparkSessionExtensions entry point: registers the engine's native
-  * functions at session build time, so
+/** SparkSessionExtensions entry point: injects every function in
+  * `GraftExpressions.functions` at session build time. A builder's
+  * `.withExtensions(new GraftExtensions)`, or
   *
   * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)   // or
-  *   .config("spark.sql.extensions", "graft.GraftExtensions")
+  * spark-sql --conf spark.sql.extensions=graft.GraftExtensions
   * }}}
   *
-  * makes `graft_polyhash` / `graft_minhash` / `graft_simhash32` / `graft_dot`
-  * available in SQL on every session — including `spark-sql` / Thrift users
-  * who never touch the Scala API. (Queries also self-register via
-  * `GraftExpressions.register` so they work on vanilla sessions.)
+  * for `spark-sql` / Thrift users who never touch the Scala API, makes the
+  * graft_* functions available in SQL on every session. Every engine entry
+  * point builds through `GraftSession.builder`, which adds this. A session
+  * built without it (an embedding application's own) gets the same list
+  * from `GraftExpressions.ensureRegistered`, which each `QueryDef` run
+  * calls first.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(e: SparkSessionExtensions): Unit = {
-    e.injectFunction((FunctionIdentifier("graft_polyhash"),
-      new ExpressionInfo(classOf[PolyHash].getName, "graft_polyhash"),
-      es => PolyHash(es.head)))
-    e.injectFunction((FunctionIdentifier("graft_minhash"),
-      new ExpressionInfo(classOf[MinHashSig].getName, "graft_minhash"),
-      es => MinHashSig(es.head)))
-    e.injectFunction((FunctionIdentifier("graft_simhash32"),
-      new ExpressionInfo(classOf[SimHash32].getName, "graft_simhash32"),
-      es => SimHash32(es.head)))
-    e.injectFunction((FunctionIdentifier("graft_dot"),
-      new ExpressionInfo(classOf[DotProduct].getName, "graft_dot"),
-      es => DotProduct(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("graft_doti"),
-      new ExpressionInfo(classOf[DotProductInt].getName, "graft_doti"),
-      es => DotProductInt(es(0), es(1))))
-    e.injectFunction((FunctionIdentifier("graft_sqdisti"),
-      new ExpressionInfo(classOf[SquaredDistInt].getName, "graft_sqdisti"),
-      es => SquaredDistInt(es(0), es(1))))
-  }
+  override def apply(e: SparkSessionExtensions): Unit =
+    GraftExpressions.functions.foreach { case (name, builder) =>
+      e.injectFunction((FunctionIdentifier(name), GraftExpressions.info(name), builder))
+    }
 }

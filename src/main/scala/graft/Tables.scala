@@ -26,11 +26,6 @@ object Tables {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, String), DataFrame]()
 
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    // every query path flows through here, so this is the one chokepoint
-    // that guarantees the graft_* native functions (incl. the graft_detln /
-    // graft_detexp kernels ColFns builds on) resolve in whatever session
-    // executes the query; registration is idempotent
-    graft.functions.GraftExpressions.register(spark)
     if (cache.size > 256) cache.clear()
     cache.computeIfAbsent((spark, dir, name), { _ =>
       if (name == "events") loadEvents(spark, dir)

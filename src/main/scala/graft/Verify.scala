@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -25,15 +24,7 @@ object Verify {
       require(unknown.isEmpty, s"unknown query name(s): ${unknown.mkString(", ")}")
     }
     if (!sqlOnly) {
-      val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-      val spark = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val spark = GraftSession.builder(GraftSession.envCpus).getOrCreate()
       spark.sparkContext.setLogLevel("WARN")
       val selected = only.fold(SparkEntry.queries)(f =>
         SparkEntry.queries.filter { case (n, _) => f(n) })
@@ -42,7 +33,7 @@ object Verify {
         try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
           .parquet(s"$outDir/$name")
         catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          System.err.println(s"[verify] $name failed: $e")
         }
         finally CacheScope.release() // drop query-internal caches between queries
       }

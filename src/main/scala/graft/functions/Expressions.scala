@@ -1,9 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistry.FunctionBuilder
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, BloomFilterMightContain, Expression, ExpressionInfo, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -21,27 +24,40 @@ object GraftExpressions {
 
   val P = 1000000007L
 
-  /** Register all graft_* functions for use in SQL / expr() lambdas. */
-  def register(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_polyhash", es => PolyHash(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash", es => MinHashSig(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash32", es => SimHash32(es.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot", es => DotProduct(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_doti", es => DotProductInt(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sqdisti", es => SquaredDistInt(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_detln", es => DetLnRat(es(0), es(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_detexp", es => DetExpMicro(es.head), "built-in")
+  /** Every graft_* function, by SQL name: the one list that
+    * `GraftExtensions` injects at session build and `ensureRegistered`
+    * fills in on sessions built without the extensions.
+    */
+  val functions: Seq[(String, FunctionBuilder)] = Seq(
+    "graft_polyhash" -> (es => PolyHash(es.head)),
+    "graft_minhash" -> (es => MinHashSig(es.head)),
+    "graft_simhash32" -> (es => SimHash32(es.head)),
+    "graft_dot" -> (es => DotProduct(es(0), es(1))),
+    "graft_doti" -> (es => DotProductInt(es(0), es(1))),
+    "graft_sqdisti" -> (es => SquaredDistInt(es(0), es(1))),
+    "graft_detln" -> (es => DetLnRat(es(0), es(1))),
+    "graft_detexp" -> (es => DetExpMicro(es.head)),
     // Spark's internal bloom pair (what its own runtime filters use),
     // surfaced as engine functions: build a filter over the small side's
     // keys, probe it map-side on the fact side BEFORE the shuffle — the
     // explicit form of the semi-join pruning that matters at 100 TB.
-    reg.createOrReplaceTempFunction("graft_bloom_agg",
-      es => new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        es(0), es(1), es(2)).toAggregateExpression(), "built-in")
-    reg.createOrReplaceTempFunction("graft_might_contain",
-      es => org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        es(0), es(1)), "built-in")
+    "graft_bloom_agg" -> (es =>
+      new BloomFilterAggregate(es(0), es(1), es(2)).toAggregateExpression()),
+    "graft_might_contain" -> (es => BloomFilterMightContain(es(0), es(1))))
+
+  private[graft] def info(name: String): ExpressionInfo =
+    new ExpressionInfo(getClass.getName, name)
+
+  /** Register the graft_* functions this session lacks. Idempotent: a name
+    * already present (injected by `GraftExtensions`, or by an earlier call)
+    * keeps its builder, so repeat calls replace nothing.
+    */
+  def ensureRegistered(spark: SparkSession): Unit = {
+    val reg = spark.sessionState.functionRegistry
+    functions.foreach { case (name, builder) =>
+      val id = FunctionIdentifier(name)
+      if (!reg.functionExists(id)) reg.registerFunction(id, info(name), builder)
+    }
   }
 
   def polyHashBytes(s: UTF8String): Long = {

@@ -1461,7 +1461,6 @@ object Advanced {
         |ORDER BY ka, kb"""
       }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val P = graft.functions.TextHash.P
       // raw LCG mixes of the key are degenerate here: x and y would both
       // be linear in c_custkey, so the points fall on one lattice line and
@@ -1527,7 +1526,6 @@ object Advanced {
         |FROM nb, tot t ORDER BY cx, cy"""
       }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val P = graft.functions.TextHash.P
       val cells = T(s, dir, "customer")
         .withColumn("h", expr("graft_polyhash(CAST(c_custkey AS STRING))"))

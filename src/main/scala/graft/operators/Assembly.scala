@@ -222,7 +222,6 @@ object Assembly {
 
     q("q411_fim_spans", fimOracleSql) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // Fill-in-the-middle span accounting (the FIM transform of Bavarian
       // et al.: move a middle span to the end so a causal LM learns to
       // infill). Cut points and mode flag derive from the deterministic
@@ -239,7 +238,6 @@ object Assembly {
 
     q("q419_streaming_fim_spans", fimOracleSql) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // Streaming twin of q411 — which it literally shares its oracle and
       // per-source aggregate with: documents stream through the engine's
       // source, the FIM cut-point derivation runs as a stateless
@@ -695,7 +693,6 @@ object Assembly {
       // traffic. Prefix hashing is map-side; the (depth, key) count is
       // the only shuffle, 3 instances per doc. At 100 TB the same plan
       // holds: groups are keyed, never enumerated pairwise.
-      graft.functions.GraftExpressions.register(s)
       T(s, dir, "documents")
         .select(split($"text", " ").as("w"),
           explode(expr("array(8, 16, 32)")).as("d"))

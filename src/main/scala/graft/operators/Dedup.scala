@@ -33,7 +33,6 @@ object Dedup {
   private def shingled(s: SparkSession, dir: String,
       spreadInput: Boolean = false): DataFrame = {
     import s.implicits._
-    graft.functions.GraftExpressions.register(s)
     val docs = T(s, dir, "documents")
     (if (spreadInput) graft.Tables.spread(docs) else docs)
       .withColumn("w", split($"text", " "))
@@ -61,7 +60,6 @@ object Dedup {
     // bytes and all string allocation (measured: q437 alone >280 s at
     // sf0.1; this form: ~1 s). HOF lambda bodies are interpreted, so
     // the hot loop must be integer-only.
-    graft.functions.GraftExpressions.register(df.sparkSession)
     df
     .withColumn("n", size(col("w")).cast("long"))
     .withColumn("wh", expr("transform(w, x -> graft_polyhash(x))"))
@@ -96,7 +94,6 @@ object Dedup {
     // same two-level rolling hash as [[withCdcChunks]]: word hashes via
     // the native kernel once, the 5-gram fingerprint as an integer fold
     // — HOF lambdas are interpreted, so no string building in them
-    graft.functions.GraftExpressions.register(df.sparkSession)
     df
     .withColumn("m", (size(col("w")) - 4).cast("long"))
     .withColumn("wh", expr("transform(w, x -> graft_polyhash(x))"))

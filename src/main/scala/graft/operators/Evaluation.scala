@@ -441,7 +441,6 @@ object Evaluation {
          |  CAST(64 AS BIGINT) AS n_replicas FROM pt, sel"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // THE distributed bootstrap: resampling-with-replacement is
       // impossible to coordinate across a 100 TB shuffle, but Poisson(1)
       // weights are independent per (row, replica) — one map to draw 64
@@ -1931,7 +1930,6 @@ object Evaluation {
         |FROM srm, pt, ci"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val P = graft.functions.TextHash.P
       val e = T(s, dir, "events").select($"user_id",
         when(to_date($"ts") < lit("2024-01-16").cast("date"), 0).otherwise(1)
@@ -2241,7 +2239,6 @@ object Evaluation {
          |FROM pt"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // Paired bootstrap model comparison — the standard significance test
       // for "is scorer A actually better than scorer B on this eval set?"
       // (Koehn 2004 for MT; universal for LM evals). The two "models" are

@@ -1658,7 +1658,6 @@ object Extras {
         |ORDER BY table_name"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       def sums(df: DataFrame, name: String, cols: String): DataFrame =
         df.select(expr(
             s"graft_polyhash(concat_ws('|', $cols))").as("h"))

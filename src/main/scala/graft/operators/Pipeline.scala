@@ -49,7 +49,6 @@ object Pipeline {
     */
   private def hashedShingles(s: SparkSession, docs: DataFrame): DataFrame = {
     import s.implicits._
-    graft.functions.GraftExpressions.register(s)
     docs
       .withColumn("w", split($"text", " "))
       .filter(size($"w") >= 3)
@@ -240,7 +239,6 @@ object Pipeline {
       // At 100 TB the probe prunes the fact scan down to ~selectivity
       // before any exchange; the result is oracle-exact because the bloom
       // has no false negatives and the final IN is exact.
-      graft.functions.GraftExpressions.register(s)
       Tables.registerAll(s, dir)
       s.sql(
         s"""WITH keys AS (SELECT o_orderkey FROM orders WHERE o_totalprice > 300000),
@@ -397,7 +395,6 @@ object Pipeline {
       // probe is broadcast back, and the contamination join is map-side.
       // Result is identical to capping on full-corpus df because the cap
       // only ever applies to n-grams the probe contains.
-      graft.functions.GraftExpressions.register(s)
       val ex = T(s, dir, "documents")
         .withColumn("w", split($"text", " "))
         .filter(size($"w") >= 13)
@@ -464,7 +461,6 @@ object Pipeline {
          |    END AS BIGINT) AS gap_ppm
          |FROM lab GROUP BY source ORDER BY source""") { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val d = T(s, dir, "documents")
         .withColumn("w", split($"text", " "))
         .selectExpr("doc_id", "source", "w",
@@ -834,7 +830,6 @@ object Pipeline {
          |ORDER BY key_pico DESC, doc_id LIMIT 50"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // Weighted sampling without replacement (Efraimidis-Spirakis A-ES):
       // each item draws a deterministic pseudo-uniform u from its id hash
       // (scattered — q165's short-key lesson) and gets key = ln(u)/w; the
@@ -1175,7 +1170,6 @@ object Pipeline {
       // md5-half of the corpus (the standing split rule); one map-side
       // hash pass, one per-source aggregation. Roots stay far inside
       // BIGINT: each hash < 2^30, so 2^33 docs per source fit.
-      graft.functions.GraftExpressions.register(s)
       T(s, dir, "documents")
         .select($"source",
           expr("CASE WHEN substring(md5(CAST(CAST(doc_id AS STRING) AS " +
@@ -1206,7 +1200,6 @@ object Pipeline {
               $"doc_id", $"source", $"text"),
           "ms", r, "docs", orderCols = Seq("doc_id"))
       }
-      graft.functions.GraftExpressions.register(s)
       val nIn = T(s, dir, "documents").count()
       graft.streaming.StreamHarness
         .runToMemory(s, "q434", 4, mode = "complete") {
@@ -1661,7 +1654,6 @@ object Pipeline {
          |    // (SUM(n_docs) OVER ()) AS BIGINT) AS hit_ppm
          |FROM hist ORDER BY cluster_size""") { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val cl = T(s, dir, "documents")
         .select(expr("graft_polyhash(concat_ws(' ', " +
           "slice(split(text, ' '), 1, 10)))").as("h"))
@@ -1716,7 +1708,6 @@ object Pipeline {
          |    AS BIGINT) AS n_flagged
          |FROM d GROUP BY source ORDER BY source""") { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val w = T(s, dir, "documents")
         .withColumn("w", split($"text", " "))
         .filter(size($"w") >= 2)
@@ -1881,7 +1872,6 @@ object Pipeline {
          |FROM d GROUP BY source ORDER BY source"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val root = graft.LogFixtures.producedLog(dir, "q388") { r =>
         graft.log.LogBulkProducer.produceAt(
           T(s, dir, "documents")
@@ -2205,7 +2195,6 @@ object Pipeline {
       // into one map-side corpus pass: span marking, token filtering, and
       // the re-scan all happen inside the row, no corpus shuffle beyond
       // the per-source rollup. 100 TB-safe.
-      graft.functions.GraftExpressions.register(s)
       val words = T(s, dir, "documents")
         .select($"doc_id", $"source", split($"text", " ").as("w"))
         .transform(graft.CacheScope.cached) // probe build + scrub pass
@@ -2311,7 +2300,6 @@ object Pipeline {
       // oracle is q438's batch statement verbatim; streamed counters
       // must equal the batch aggregation exactly (row-for-row law in
       // QueriesSpec).
-      graft.functions.GraftExpressions.register(s)
       val root = graft.LogFixtures.producedLog(dir, "q445") { r =>
         graft.log.LogBulkProducer.produceAt(
           T(s, dir, "documents")

@@ -106,7 +106,6 @@ object Release {
          |) ORDER BY stage"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // ---- stage 1: crawl — synthesize page + URL, extract text ----
       // (map-side; the extracted column is the only thing later stages read)
       val ex = graft.Tables.spread(T(s, dir, "documents"))

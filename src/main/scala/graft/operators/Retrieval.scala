@@ -17,10 +17,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Retrieval {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.GraftExpressions.register(s)
+  private def T(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
-  }
 
   /** BM25 constants, scaled to integers: k1 = 1.2 (=12/10), b = 0.75 (=3/4).
     * With num/den cross-multiplied by 10*avgdl_micro every division in the
@@ -614,7 +612,6 @@ object Retrieval {
         |FROM dm, df_"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val docs = T(s, dir, "documents")
       val mid = docs.agg(
         expr("(MIN(doc_id) + MAX(doc_id)) div 2").as("mid"))

@@ -22,10 +22,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   */
 object Similarity {
 
-  private def T(s: SparkSession, dir: String, name: String): DataFrame = {
-    graft.functions.GraftExpressions.register(s)
+  private def T(s: SparkSession, dir: String, name: String): DataFrame =
     Tables.load(s, dir, name)
-  }
 
   private val duckDotSql: (String, String) => String = duckDot
 
@@ -925,7 +923,6 @@ object Similarity {
          |GROUP BY t8.q_id ORDER BY t8.q_id"""
       }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val e = T(s, dir, "embeddings")
       val gm = e.agg(max(expr(
         "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))"))
@@ -1104,7 +1101,6 @@ object Similarity {
         |    AS n_violations
         |FROM mg GROUP BY label ORDER BY label""") { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val e = T(s, dir, "embeddings")
       val gm = e.agg(max(expr(
         "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))"))
@@ -2057,7 +2053,6 @@ object Similarity {
       val nDelta = e.count() - nBase
       val state = graft.streaming.StreamHarness
         .runToMemory(s, "q452", 4, mode = "complete") {
-          graft.functions.GraftExpressions.register(s)
           s.readStream.format("graftlog")
             .option("path", root).option("stream", "embeddings")
             .option("valueSchema", "vec_id BIGINT, emb STRING")

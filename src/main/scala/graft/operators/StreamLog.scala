@@ -650,7 +650,6 @@ object StreamLog {
          |SELECT doc_id, doc_id IN (SELECT doc_id FROM dup) AS is_dup
          |FROM sig ORDER BY doc_id""") { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // the sentinel's event time (seconds = doc_id) exceeds every real
       // doc's by far more than the watermark delay, so the last batch
       // advances the watermark past the whole corpus and the trailing
@@ -1228,7 +1227,6 @@ object StreamLog {
         |FROM (SELECT $ph AS h FROM k)"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val v0 = Tables.load(s, dir, "events")
         .select($"event_id", $"user_id", $"event_type",
           expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
@@ -1301,7 +1299,6 @@ object StreamLog {
         |FROM (SELECT user_id, event_id, valid_to, $ph AS h FROM iv)"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val v0 = Tables.load(s, dir, "events")
         .select($"event_id", $"user_id", $"event_type",
           expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
@@ -1539,7 +1536,6 @@ object StreamLog {
         |FROM c, q, t"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val v0 = Tables.load(s, dir, "events")
         .select($"event_id", $"event_type",
           expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
@@ -1713,7 +1709,6 @@ object StreamLog {
         |  FROM events WHERE event_type <> 'error'))"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val v0 = Tables.load(s, dir, "events")
         .select($"event_id", $"event_type",
           expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
@@ -1773,7 +1768,6 @@ object StreamLog {
         |  FROM events WHERE event_type <> 'error'))"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val v0 = Tables.load(s, dir, "events")
         .select($"event_id", $"event_type",
           expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
@@ -1844,7 +1838,6 @@ object StreamLog {
         |  FROM events WHERE event_type <> 'error'))"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val v0 = Tables.load(s, dir, "events")
         .select($"event_id", $"user_id", $"event_type",
           expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
@@ -2015,7 +2008,6 @@ object StreamLog {
          |FROM r GROUP BY event_type ORDER BY event_type"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // q184's KMV sketch AS STREAMING STATE: the typed Aggregator rides a
       // complete-mode streaming aggregation, so each micro-batch merges new
       // hashes into the persisted K-long buffer — the distinct-count-
@@ -2137,7 +2129,6 @@ object StreamLog {
          |FROM est e, nn ORDER BY exact_n DESC, user_id"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val cellExpr = "graft_polyhash(CAST(user_id AS STRING) || '#' || " +
         "CAST(r AS STRING)) % 256"
       val v0 = Tables.load(s, dir, "events")

@@ -397,7 +397,6 @@ object TextAnalysis {
          |  ${duckPolyHash("text")} AS fp_poly
          |FROM documents ORDER BY doc_id""") { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       T(s, dir, "documents").select(
         $"doc_id",
         md5($"text").as("fp_md5"),
@@ -1014,7 +1013,6 @@ object TextAnalysis {
          |FROM fo GROUP BY doc_id ORDER BY doc_id"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // N-gram novelty: what fraction of a document's distinct 3-grams has
       // never appeared in any EARLIER document (doc_id = ingest order) —
       // the incremental-crawl signal for "is this new content or a re-hash
@@ -1063,7 +1061,6 @@ object TextAnalysis {
          |FROM fo WHERE doc_id >= 250 GROUP BY doc_id ORDER BY doc_id"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // q187 run the way a daily crawl actually runs it: the BASE corpus
       // (doc_id < 250) has already been collapsed into a persisted
       // gram -> first-seen INDEX; the DELTA batch is scored against that

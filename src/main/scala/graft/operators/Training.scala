@@ -310,7 +310,6 @@ object Training {
          |ORDER BY pick_no"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val e = T(s, dir, "embeddings")
       val gm = e.agg(max(expr(
         "array_max(transform(embedding, x -> abs(CAST(x AS DOUBLE))))")).as("gm"))
@@ -381,7 +380,6 @@ object Training {
          |FROM agg ORDER BY doc_id"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       val d = T(s, dir, "documents")
         .select($"doc_id", size(split($"text", " ")).cast("long").as("n"))
       val mk = d
@@ -1017,7 +1015,6 @@ object Training {
       // global sort a naive ORDER BY hash audit would need never
       // materializes. Complements q409 (curriculum order) and q123
       // (split assignment) on the same md5/polyhash discipline.
-      graft.functions.GraftExpressions.register(s)
       val b = T(s, dir, "documents")
         .select($"doc_id", explode(expr("sequence(0, 2)")).as("e"))
         .select($"doc_id", $"e".cast("long").as("e"),

@@ -190,7 +190,6 @@ object UdfSurface {
       // vanilla sessions). The query itself is "which event type wins each
       // user's FIRST touch" — one window over user_id + one aggregation,
       // with the same (micros, id) tie-break discipline as q174/q185.
-      graft.functions.GraftExpressions.register(s)
       T(s, dir, "events").createOrReplaceTempView("g_events")
       s.sql(
         """WITH fx AS (SELECT user_id, event_type,
@@ -222,7 +221,6 @@ object UdfSurface {
          |FROM k ORDER BY event_type"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // K-minimum-values distinct-count sketch (Bar-Yossef et al.): keep the
       // K smallest distinct hash values; estimate = (K-1) * P / kth_min.
       // Unlike approx_count_distinct's opaque HLL (q13), every byte of this
@@ -280,7 +278,6 @@ object UdfSurface {
          |FROM k JOIN ex ON ex.rname = k.rname ORDER BY range_name"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // The SKETCH-TABLE pattern q184's UDAF enables at warehouse scale:
       // persist one tiny KMV sketch per day-partition, then answer any
       // day-range distinct-count from the sketches ALONE — the raw rows
@@ -365,7 +362,6 @@ object UdfSurface {
          |ORDER BY type_a, type_b"""
     }) { (s, dir) =>
       import s.implicits._
-      graft.functions.GraftExpressions.register(s)
       // Audience-overlap matrix from KMV sketches alone — the classic
       // inclusion estimate (Beyer et al. 2007): for each segment pair,
       // merge the two K-lists, take the K smallest, estimate the union

@@ -502,7 +502,6 @@ object WebCorpus {
       // exact join runs alongside as the certificate — at 100 TB you keep
       // the sketches and drop the exact pass, which is the point: estimate
       // cost is constant in the data.
-      graft.functions.GraftExpressions.register(s)
       val cms = udaf(CmsSketch)
       val ev = T(s, dir, "events")
         .select($"event_type", expr(

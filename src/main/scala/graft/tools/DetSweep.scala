@@ -1,7 +1,6 @@
 package graft.tools
 
 import graft.ColFns
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import java.nio.file.{Files, Paths}
@@ -19,13 +18,8 @@ import java.nio.file.{Files, Paths}
 object DetSweep {
   def main(args: Array[String]): Unit = {
     val out = args.headOption.getOrElse("/tmp/detsweep")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftExpressions.register(spark)
     import spark.implicits._
     val small = for { q <- 1L to 200L; p <- 1L to 200L } yield (p, q)
     val rnd = new scala.util.Random(42)

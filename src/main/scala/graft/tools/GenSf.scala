@@ -243,13 +243,7 @@ object GenSf {
     val out = args.headOption.getOrElse("/tmp/graft-sf1.0")
     val factor = if (args.length > 1) args(1).toInt else 10
     val seed = if (args.length > 2) args(2).toLong else 43L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession.builder(graft.GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, out, factor, seed)
     println(s"""{"gen":"$out","factor":$factor,"seed":$seed}""")

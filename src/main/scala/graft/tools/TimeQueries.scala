@@ -1,12 +1,11 @@
 package graft.tools
 
-import graft.{CacheScope, SparkEntry}
-import org.apache.spark.sql.SparkSession
+import graft.{CacheScope, GraftSession, SparkEntry}
 
-/** Time several named queries in ONE session (best of N each) — the round-12
-  * measurement workhorse: one JVM/JIT warmup shared across the list, so a
-  * before/after pair of invocations with the same list is apples-to-apples
-  * (never compare these numbers to Bench or single-query TimeQuery runs).
+/** Time one or more named queries in ONE session (best of N each) — the
+  * round-12 measurement workhorse: one JVM/JIT warmup shared across the
+  * list, so a before/after pair of invocations with the same list is
+  * apples-to-apples (never compare these numbers to Bench runs).
   * Run: sbt "runMain graft.tools.TimeQueries q261_link_prediction,q423_unigram_lm_tokenizer /root/testdata/sf0.1 3"
   */
 object TimeQueries {
@@ -14,21 +13,13 @@ object TimeQueries {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val n = if (args.length > 2) args(2).toInt else 3
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      // A/B knob for the round-12 cached-plan AQE experiment
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        sys.env.getOrElse("GRAFT_CACHED_AQE", "true"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder(GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // fixed warmup, as in Bench
     try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
     catch { case _: Throwable => () }
+    // same methodology as Bench: caches live across the runs of one query
+    // (the warm run is the measurement), released once at the end
     val out = names.map { name =>
       val fn = SparkEntry.queries(name)
       val times = try (1 to n).map { _ =>

@@ -151,7 +151,6 @@ class AnalyticsSpec extends AnyFunSuite {
   test("q181 containment catches a short doc quoted in a long one") {
     import spark.implicits._
     import graft.functions.TextHash.{hashedSetSql, shinglesSql}
-    graft.functions.GraftExpressions.register(spark)
     // A is 12 words; B embeds A verbatim inside 40 words of padding.
     // Containment must be ~1.0 while Jaccard stays far below the 0.6
     // near-dup cut — the case this operator exists for.

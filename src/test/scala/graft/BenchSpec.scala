@@ -50,6 +50,17 @@ class BenchSpec extends AnyFunSuite {
     assert(!d.get("queries").has("q78_streaming_agg"))
   }
 
+  test("a failed probe keeps -1 in its slot and its reason in the detail") {
+    val err = "java.io.IOException: disk \"full\"\n at staging"
+    val detail = Bench.detailLine(Map("q01_pricing_summary" -> 1.0), -1L, 1L, 1L, 1L,
+      "/sf", probeErrors = Seq("stream_entries_per_sec" -> err))
+    assert(!detail.contains("\n"))
+    val d = new com.fasterxml.jackson.databind.ObjectMapper().readTree(detail)
+    assert(d.get("stream_entries_per_sec").asLong() == -1L)
+    assert(d.get("probe_errors").size() == 1)
+    assert(d.get("probe_errors").get("stream_entries_per_sec").asText() == err)
+  }
+
   test("every headline query name is a real query") {
     val unknown = Bench.HeadlineQueries.filterNot(SparkEntry.queries.contains)
     assert(unknown.isEmpty, s"unknown headline queries: $unknown")

@@ -18,11 +18,7 @@ import scala.util.Random
   * mismatches.
   */
 class DetMathSpec extends AnyFunSuite {
-  private lazy val spark = {
-    val sp = TestSpark.spark
-    functions.GraftExpressions.register(sp) // det kernels used off Tables.load
-    sp
-  }
+  private lazy val spark = TestSpark.spark
 
   test("detMln equals the libm-rounded micro-log across the (p,q) domain") {
     import spark.implicits._

@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.{GraftExpressions, TextHash}
+import graft.functions.TextHash
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
@@ -17,7 +17,6 @@ class ExpressionsSpec extends AnyFunSuite {
     (1 to (1 + rnd.nextInt(12))).map(_ => ('a' + rnd.nextInt(26)).toChar).mkString
 
   test("native graft_polyhash equals the HOF formulation on ASCII strings") {
-    GraftExpressions.register(spark)
     import spark.implicits._
     val words = Seq.fill(200)(word())
     val df = words.toDF("s")
@@ -26,7 +25,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("native minhash/simhash equal the HOF formulations") {
-    GraftExpressions.register(spark)
     import spark.implicits._
     val texts = Seq.fill(20)(Seq.fill(30)(word()).mkString(" "))
     val df = texts.toDF("text")
@@ -45,7 +43,6 @@ class ExpressionsSpec extends AnyFunSuite {
   test("minhash/simhash codegen compiles and agrees (CODEGEN_ONLY, no fallback)") {
     // force the generated-code path: with factoryMode=CODEGEN_ONLY a
     // broken doGenCode fails loudly instead of silently interpreting
-    GraftExpressions.register(spark)
     import spark.implicits._
     val prev = spark.conf.getOption("spark.sql.codegen.factoryMode")
     spark.conf.set("spark.sql.codegen.factoryMode", "CODEGEN_ONLY")
@@ -69,7 +66,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("native graft_dot equals the zip_with/aggregate fold bit-for-bit") {
-    GraftExpressions.register(spark)
     import spark.implicits._
     val vecs = Seq.fill(50)((
       List.fill(64)(rnd.nextFloat() * 2 - 1),
@@ -85,7 +81,6 @@ class ExpressionsSpec extends AnyFunSuite {
   }
 
   test("native graft_doti / graft_sqdisti equal the integer HOF folds") {
-    GraftExpressions.register(spark)
     import spark.implicits._
     // int8-quantized range, the retrieval kernels' domain; exact equality is
     // required (integer arithmetic, no rounding anywhere)

@@ -403,7 +403,6 @@ class QueriesSpec extends AnyFunSuite {
         r.getAs[Long]("delta_root"))
       assert(r.getAs[Long]("n_docs_prev") <= r.getAs[Long]("n_docs_now"))
     }
-    graft.functions.GraftExpressions.register(spark)
     val reshuffled = spark.read.parquet(s"$dir/documents.parquet")
       .repartition(7, col("doc_id"))
       .select(col("source"), expr("graft_polyhash(text)").as("h"))

@@ -22,7 +22,7 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   AO="$AO --add-opens=java.base/$p=ALL-UNNAMED"
 done
-JAVA="java -Xmx24g -cp $CP $AO -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC"
+JAVA="java -Xmx24g -cp $CP $AO"
 
 for sf in sf0.01 sf0.001; do
   out="/tmp/gate_verify_$sf"
