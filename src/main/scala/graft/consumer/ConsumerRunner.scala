@@ -4,6 +4,8 @@ import graft.log.{LogId, LogStore}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import java.nio.ByteBuffer
+import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
 import scala.jdk.CollectionConverters._
@@ -106,8 +108,11 @@ final case class ConsumerConfig(
   * the reference acks per message (XACK) — the ledger closes that gap
   * (SURVEY.md §7 hard part (a)): acked ids are never re-dispatched inside a
   * replayed batch, and `Defer`red ids survive restarts until acked, exactly
-  * like Redis's pending-entries list. Append-only files; a compactor would
-  * fold them at scale.
+  * like Redis's pending-entries list. Append-only files, one set per writer
+  * tag, each written through an append-mode channel that stays open from
+  * the first record until [[close]] (the owning consumer closes it on stop;
+  * a parallel-mode task closes its ledger when its partition ends).
+  * [[compact]] folds every writer's files into this writer's.
   */
 final class AckLedger(dir: Path, writerTag: String = "driver",
     clock: () => Long = () => System.currentTimeMillis()) {
@@ -170,9 +175,25 @@ final class AckLedger(dir: Path, writerTag: String = "driver",
   private var failCounts: Map[String, Int] = readCounts("fails-")
   private var deliveryMeta: Map[String, (Long, Int)] = readTimes("times-")
 
-  private def appendLine(p: Path, line: String): Unit =
-    Files.write(p, (line + "\n").getBytes(StandardCharsets.UTF_8),
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+  // One append-mode channel per ledger file, opened on first write and kept
+  // until close(). FileChannel.write is an unbuffered write(2), so each
+  // record reaches the OS before the caller's next handler call.
+  private val channels = scala.collection.mutable.Map.empty[Path, FileChannel]
+
+  private def appendLine(p: Path, line: String): Unit = {
+    val ch = channels.getOrElseUpdate(p, FileChannel.open(p,
+      StandardOpenOption.CREATE, StandardOpenOption.WRITE, StandardOpenOption.APPEND))
+    val buf = ByteBuffer.wrap((line + "\n").getBytes(StandardCharsets.UTF_8))
+    while (buf.hasRemaining) ch.write(buf)
+  }
+
+  /** Close this writer's open channels. The ledger stays usable: the next
+    * write reopens its file.
+    */
+  def close(): Unit = synchronized {
+    channels.values.foreach(_.close())
+    channels.clear()
+  }
 
   /** Fold every writer's files into this writer's and drop acks at or below
     * the committed-offset `floor` (batches ending there are committed in the
@@ -205,6 +226,8 @@ final class AckLedger(dir: Path, writerTag: String = "driver",
       ackedSet = retained
       failCounts = retainedFails
       deliveryMeta = retainedTimes
+      // the rewrites truncate in place; an open channel is in append mode,
+      // so its next record still lands after the rewritten content
       Files.write(acksFile, (ackedSet.toSeq.sorted.mkString("", "\n", "\n"))
         .getBytes(StandardCharsets.UTF_8))
       Files.write(pendingFile, (pendingSet.toSeq.sorted.mkString("", "\n", "\n"))
@@ -364,9 +387,12 @@ final class GraftConsumer(
         .filter(k => l.idleMs(k) >= cfg.minIdleMs)
         .map(k => GraftConsumer.parseLedgerKey(cfg, k))
         .sortBy(_._2)
+      // one listing per stream and one read per segment holding pending ids
+      val entries = pending.groupBy(_._1).map { case (stream, ids) =>
+        stream -> LogStore.readIds(cfg.logRoot, stream, ids.map(_._2).toSet)
+      }
       pending.foreach { case (stream, id) =>
-        LogStore.readRange(cfg.logRoot, stream, LogId(id.millis, id.seq - 1), id)
-          .filter(_.id == id).filterNot(_.isTombstone)
+        entries(stream).get(id).filterNot(_.isTombstone)
           .foreach(e => dispatch(stream, e.id.toString, e.values))
       }
     }
@@ -453,14 +479,18 @@ final class GraftConsumer(
           // Ordered, driver-side dispatch: the reference is explicitly
           // sequential ("callbacks ... block all processing", README.md:124);
           // analytics workloads should use the DataFrame API instead of a
-          // per-message handler, so this path is not a data plane.
+          // per-message handler, so this path is not a data plane. The rows
+          // end up on the driver anyway, so the batch is collected once and
+          // sorted here by (ts, seq), stream name breaking ties between
+          // streams: one Spark job, where a DataFrame orderBy costs three
+          // (a sampling job that scans the batch again, a shuffle and the
+          // result).
           val rows = batch
-            .selectExpr("stream", "id", "seq", "ts", "values")
-            .orderBy("ts", "seq")
+            .selectExpr("stream", "id", "seq", "unix_micros(ts) AS ts_us", "values")
             .collect()
+            .sortBy(r => (r.getLong(3), r.getLong(2), r.getString(0)))
           rows.foreach { r =>
-            dispatch(r.getAs[String]("stream"), r.getAs[String]("id"),
-              r.getAs[Map[String, String]]("values"))
+            dispatch(r.getString(0), r.getString(1), r.getAs[Map[String, String]](4))
           }
         } else {
           // Parallel mode ≙ N consumers in one group (2A#15): partitions are
@@ -484,7 +514,7 @@ final class GraftConsumer(
               val ledger = ledgerDir.map(d =>
                 new AckLedger(Paths.get(d), s"p$pid"))
               val acked = ledger.map(_.acked).getOrElse(Set.empty[String])
-              it.foreach { r =>
+              try it.foreach { r =>
                 val streamName = r.getAs[String]("stream")
                 val id = r.getAs[String]("id")
                 val key = if (multi) s"$streamName\t$id" else id
@@ -497,7 +527,7 @@ final class GraftConsumer(
                       if (raise) throw cause else ledger.foreach(_.defer(key))
                   }
                 }
-              }
+              } finally ledger.foreach(_.close())
             }
         }
         ()
@@ -509,25 +539,35 @@ final class GraftConsumer(
 
   /** Per-stream committed floors from the last committed checkpoint batch's
     * offset file (both the flat single-stream and the multi-stream
-    * `{"streams":...}` wire formats). Empty map when nothing committed.
+    * `{"streams":...}` wire formats). Empty map when nothing committed. A
+    * committed batch whose offset file is missing or holds no graftlog
+    * offset fails loudly: guessing "no floors" would keep every ack forever,
+    * and guessing any other floor could drop acks a replay still needs.
     */
   private[graft] def committedOffsetFloors(): Map[String, LogId] = {
-    try {
-      val commits = Paths.get(cfg.checkpointDir, "commits")
-      if (!Files.isDirectory(commits)) Map.empty
+    val commits = Paths.get(cfg.checkpointDir, "commits")
+    val batches =
+      if (!Files.isDirectory(commits)) Nil
       else {
-        val batches = Files.list(commits).iterator().asScala
-          .flatMap(p => p.getFileName.toString.toLongOption).toSeq
-        if (batches.isEmpty) Map.empty
-        else {
-          val offsetFile = Paths.get(cfg.checkpointDir, "offsets", batches.max.toString)
-          Files.readAllLines(offsetFile, StandardCharsets.UTF_8).asScala
-            .flatMap(l => scala.util.Try(
-              graft.sources.GraftLogOffset.parse(l.trim, cfg.streams.head)).toOption)
-            .headOption.map(_.ids).getOrElse(Map.empty)
-        }
+        val ls = Files.list(commits)
+        try ls.iterator().asScala.flatMap(_.getFileName.toString.toLongOption).toList
+        finally ls.close()
       }
-    } catch { case _: Throwable => Map.empty }
+    if (batches.isEmpty) Map.empty
+    else {
+      val offsetFile = Paths.get(cfg.checkpointDir, "offsets", batches.max.toString)
+      def corrupt(why: String, cause: Throwable = null) = new IllegalStateException(
+        s"consumer checkpoint ${cfg.checkpointDir}: committed batch ${batches.max} " +
+          s"$why ($offsetFile); repair the checkpoint or start a new one", cause)
+      val lines =
+        try Files.readAllLines(offsetFile, StandardCharsets.UTF_8).asScala
+        catch { case e: java.io.IOException => throw corrupt("has no readable offset file", e) }
+      lines.iterator
+        .flatMap(l => scala.util.Try(
+          graft.sources.GraftLogOffset.parse(l.trim, cfg.streams.head)).toOption)
+        .nextOption().map(_.ids)
+        .getOrElse(throw corrupt("has no graftlog offset in its offset file"))
+    }
   }
 
   private[graft] def committedOffsetFloor(): Option[LogId] =
@@ -540,11 +580,14 @@ final class GraftConsumer(
     * running at the deadline is interrupted; its unacked work replays on the
     * next start (at-least-once, same as the reference's kill-after-timeout).
     */
-  def stop(): Unit = query.foreach { q =>
-    val deadline = System.nanoTime() + cfg.supTimeoutMs * 1000000L
-    while (q.isActive && q.status.isTriggerActive && System.nanoTime() < deadline)
-      Thread.sleep(10)
-    q.stop()
+  def stop(): Unit = {
+    query.foreach { q =>
+      val deadline = System.nanoTime() + cfg.supTimeoutMs * 1000000L
+      while (q.isActive && q.status.isTriggerActive && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      q.stop()
+    }
+    ledger.foreach(_.close())
   }
 
   def processAllAvailable(): Unit = query.foreach(_.processAllAvailable())

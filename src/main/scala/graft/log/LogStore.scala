@@ -335,6 +335,21 @@ object LogStore {
       .distinctBy(_.id)
       .sortBy(_.id)
 
+  /** The entries whose ids are in `ids`, keyed by id: one listing, and one
+    * read of each segment whose name range holds a wanted id. An entry seen
+    * twice (a reader racing a compaction) is kept once.
+    */
+  def readIds(root: String, stream: String, ids: Set[LogId]): Map[LogId, LogEntry] = {
+    val wanted = ids.toVector.sorted
+    segments(root, stream)
+      .filter { s =>
+        val i = wanted.search(s.first).insertionPoint
+        i < wanted.size && wanted(i) <= s.last
+      }
+      .iterator.flatMap(s => readSegment(s.path).filter(e => ids.contains(e.id)))
+      .map(e => e.id -> e).toMap
+  }
+
   /** First `limit` entries after `start`, reading segments in id order and
     * stopping as soon as the quota is met — the admission-control path must
     * not scan the whole backlog just to pick a cut-off id.

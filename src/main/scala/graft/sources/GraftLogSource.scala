@@ -416,8 +416,14 @@ final class GraftLogMicroBatchStream(root: String, stream: String,
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) should be called instead")
 
+  // Per-stream live heads as the latest latestOffset read them, so that
+  // reportLatestOffset in the same trigger need not list every stream again
+  // (the Kafka source keeps latestPartitionOffsets for the same reason).
+  private val liveHeads = new java.util.concurrent.ConcurrentHashMap[String, LogId]()
+
   private def cappedMax(st: String): LogId = {
     val liveMax = LogStore.maxId(root, st)
+    liveHeads.put(st, liveMax)
     // under Trigger.AvailableNow, never read past the frozen cap
     availableNowCap.flatMap(_.get(st)).filter(_ < liveMax).getOrElse(liveMax)
   }
@@ -475,8 +481,12 @@ final class GraftLogMicroBatchStream(root: String, stream: String,
     end
   }
 
+  /** The live heads this trigger's latestOffset already read; a stream it
+    * has not read yet (no latestOffset call so far) is listed here.
+    */
   override def reportLatestOffset(): Offset =
-    GraftLogOffset(streams.map(st => st -> LogStore.maxId(root, st)).toMap)
+    GraftLogOffset(streams.map(st =>
+      st -> Option(liveHeads.get(st)).getOrElse(LogStore.maxId(root, st))).toMap)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s0 = start.asInstanceOf[GraftLogOffset]

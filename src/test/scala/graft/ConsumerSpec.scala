@@ -1,7 +1,7 @@
 package graft
 
 import graft.consumer._
-import graft.log.LogWriter
+import graft.log.{LogId, LogStore, LogWriter}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.collection.mutable
@@ -799,5 +799,201 @@ class ConsumerSpec extends AnyFunSuite {
     val summary = c.pendingSummary()
     assert(summary.size == 4)
     assert(summary.forall(p => p.deliveries == 1 && p.idleMs >= 0))
+  }
+
+  test("ordered batch over two interleaved streams and >16 segments dispatches in (ts, seq, stream) order") {
+    val root = TestSpark.tmpDir("log")
+    var nowA = 0L
+    var nowB = 0L
+    val wa = new LogWriter(root, "a", () => nowA)
+    val wb = new LogWriter(root, "b", () => nowB)
+    // one segment per produce; b's timestamps fall between a's
+    (0 until 10).foreach { i =>
+      nowA = 1000L + 2 * i; wa.produce(Map("n" -> s"a$i"))
+      nowB = 1001L + 2 * i; wb.produce(Map("n" -> s"b$i"))
+    }
+    // ties: equal (ts, seq) on both streams, and a seq-1 entry after both
+    nowA = 2000L; nowB = 2000L
+    wa.produce(Map("n" -> "a-tie0")); wb.produce(Map("n" -> "b-tie0"))
+    wa.produce(Map("n" -> "a-tie1"))
+    assert(LogStore.segments(root, "a").size + LogStore.segments(root, "b").size > 16)
+    val seen = mutable.ArrayBuffer.empty[(String, LogId)]
+    val c = new GraftConsumer(spark, cfg(root, "a,b", Some("g1")),
+      (stream, _, id, _) => { seen += stream -> LogId.parse(id); HandlerResult.Ok })
+    c.start().processAllAvailable()
+    c.stop()
+    val expected = Seq("a", "b").flatMap(st =>
+      LogStore.readRange(root, st, LogId.Zero, LogStore.maxId(root, st)).map(e => st -> e.id))
+      .sortBy { case (st, id) => (id.millis, id.seq, st) }
+    assert(seen.size == 23)
+    assert(seen.toList == expected.toList)
+    assert(seen.takeRight(3).toList ==
+      List("a" -> LogId(2000, 0), "b" -> LogId(2000, 0), "a" -> LogId(2000, 1)))
+  }
+
+  test("each non-empty ordered batch runs exactly one Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = TestSpark.tmpDir("log")
+    val w = new LogWriter(root, "s")
+    val sc = spark.sparkContext
+    val barrier = "graft.test.jobBarrier"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+    @volatile var barrierSeen = false
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = {
+        val p = e.properties
+        if (p != null && p.getProperty(barrier) != null) barrierSeen = true
+        else if (p != null && p.getProperty("sql.streaming.queryId") != null)
+          jobs.add(p.getProperty("sql.streaming.queryId") ->
+            p.getProperty("streaming.sql.batchId"))
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      // the ordered handler runs on the query's thread, which carries the
+      // batch id as a local property
+      val batches = mutable.Set.empty[String]
+      var seen = 0
+      val c = new GraftConsumer(spark, cfg(root, "s", Some("g1")),
+        (_, _, _, _) => {
+          batches += sc.getLocalProperty("streaming.sql.batchId")
+          seen += 1
+          HandlerResult.Ok
+        })
+      (1 to 3).foreach(i => w.produce(Map("n" -> i.toString)))
+      val q = c.start()
+      (1 to 3).foreach { round =>
+        q.processAllAvailable()
+        (1 to 3).foreach(i => w.produce(Map("n" -> s"$round-$i")))
+      }
+      q.processAllAvailable()
+      c.stop()
+      assert(seen == 12)
+      // a job posted after the query stopped: once the listener sees it,
+      // every earlier job event has been delivered (the bus is FIFO)
+      sc.setLocalProperty(barrier, "1")
+      try spark.range(1).count() finally sc.setLocalProperty(barrier, null)
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!barrierSeen && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(barrierSeen)
+      val perBatch = jobs.toArray(Array.empty[(String, String)]).toSeq
+        .filter(_._1 == q.id.toString).groupBy(_._2).map { case (b, js) => b -> js.size }
+      assert(batches.size >= 2)
+      assert(batches.toSeq.map(b => b -> perBatch.getOrElse(b, 0)).toMap ==
+        batches.toSeq.map(_ -> 1).toMap)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("an ack written through the open channel is visible to a fresh ledger before stop") {
+    val root = TestSpark.tmpDir("log")
+    val w = new LogWriter(root, "s")
+    (1 to 3).foreach(i => w.produce(Map("n" -> i.toString)))
+    val shared = cfg(root, "s", Some("g1"))
+    val c = new GraftConsumer(spark, shared, (_, _, _, values) =>
+      if (values("n") == "3") HandlerResult.Defer else HandlerResult.Ok)
+    c.start().processAllAvailable()
+    try {
+      val fresh = new AckLedger(shared.ledgerDir.get, "reader")
+      assert(fresh.acked.size == 2)
+      assert(fresh.deferred.size == 1)
+      assert(fresh.deliveryInfo(fresh.deferred.head).exists(_._2 == 1))
+    } finally c.stop()
+  }
+
+  test("an append after compact() survives a reload") {
+    val dir = java.nio.file.Paths.get(TestSpark.tmpDir("ledger"))
+    val other = new AckLedger(dir, "p0") // another writer's file, folded away
+    other.ack("1-0")
+    other.close()
+    val l = new AckLedger(dir)
+    l.ack("2-0")
+    l.ack("3-0")
+    l.defer("4-0")
+    l.compact(Some(LogId(2, 0)))
+    l.ack("5-0")
+    l.defer("6-0")
+    l.close()
+    val reloaded = new AckLedger(dir)
+    assert(reloaded.acked == Set("3-0", "5-0"))
+    assert(reloaded.deferred == Set("4-0", "6-0"))
+    assert(dir.toFile.list().toSet.forall(_.endsWith("-driver.log")))
+  }
+
+  test("parallel-mode batches close their task ledgers (open fd count stays flat)") {
+    val fdDir = new java.io.File("/proc/self/fd")
+    def openFds = fdDir.list().length
+    val root = TestSpark.tmpDir("log")
+    val w = new LogWriter(root, "s")
+    ConsumerSpec.parallelSeen.clear()
+    val shared = cfg(root, "s", Some("g1")).copy(ordered = false)
+    // an unclosed channel is only reclaimed when the GC runs, so also look
+    // for open ledger files right after each batch
+    lazy val ledgerDir = shared.ledgerDir.get.toRealPath().toString
+    def openLedgerFiles = fdDir.listFiles().toSeq
+      .flatMap(f => scala.util.Try(java.nio.file.Files.readSymbolicLink(f.toPath)).toOption)
+      .count(_.toString.startsWith(ledgerDir))
+    val c = new GraftConsumer(spark, shared, ConsumerSpec.parallelHandler)
+    w.produce(Map("n" -> "0"))
+    val q = c.start()
+    q.processAllAvailable()
+    val before = openFds
+    val openAfterBatch = (1 to 20).map { i =>
+      w.produce(Map("n" -> i.toString))
+      q.processAllAvailable()
+      openLedgerFiles
+    }
+    val after = openFds
+    c.stop()
+    assert(ConsumerSpec.parallelSeen.size == 21)
+    assert(openAfterBatch.forall(_ == 0), s"ledger files open after batches: $openAfterBatch")
+    assert(after - before < 10, s"open fds grew from $before to $after over 20 batches")
+  }
+
+  test("a committed batch with an unreadable offset file fails start() loudly") {
+    val root = TestSpark.tmpDir("log")
+    val w = new LogWriter(root, "s")
+    (1 to 3).foreach(i => w.produce(Map("n" -> i.toString)))
+    val shared = cfg(root, "s", Some("g1"))
+    // no commits directory yet: no floors
+    assert(new GraftConsumer(spark, shared, (_, _, _, _) => HandlerResult.Ok)
+      .committedOffsetFloors().isEmpty)
+    val c1 = new GraftConsumer(spark, shared, (_, _, _, _) => HandlerResult.Ok)
+    c1.start().processAllAvailable()
+    c1.stop()
+    assert(c1.committedOffsetFloors() == Map("s" -> LogStore.maxId(root, "s")))
+    val offsets = java.nio.file.Paths.get(shared.checkpointDir, "offsets")
+    val latest = offsets.toFile.list().flatMap(_.toLongOption).max
+    val file = offsets.resolve(latest.toString)
+    java.nio.file.Files.writeString(file, "v1\n{}\nnot-an-offset\n")
+    val corrupt = intercept[IllegalStateException](
+      new GraftConsumer(spark, shared, (_, _, _, _) => HandlerResult.Ok).start())
+    assert(corrupt.getMessage.contains(shared.checkpointDir))
+    java.nio.file.Files.delete(file)
+    val missing = intercept[IllegalStateException](
+      new GraftConsumer(spark, shared, (_, _, _, _) => HandlerResult.Ok).start())
+    assert(missing.getMessage.contains(shared.checkpointDir))
+  }
+
+  test("pending drain redelivers deferred ids across many segments in id order") {
+    val root = TestSpark.tmpDir("log")
+    val w = new LogWriter(root, "s")
+    // one six-entry segment, then one segment per entry
+    w.produceAll((1 to 6).map(i => Map("n" -> i.toString)))
+    (7 to 12).foreach(i => w.produce(Map("n" -> i.toString)))
+    w.produceTombstone()
+    val shared = cfg(root, "s", Some("g1"))
+    val deferOdd: (String, Option[String], String, Map[String, String]) => HandlerResult =
+      (_, _, _, values) =>
+        if (values("n").toInt % 2 == 1) HandlerResult.Defer else HandlerResult.Ok
+    val c1 = new GraftConsumer(spark, shared, deferOdd)
+    c1.start().processAllAvailable()
+    c1.stop()
+    val seen = mutable.ArrayBuffer.empty[String]
+    val c2 = new GraftConsumer(spark, shared,
+      (_, _, _, values) => { seen += values("n"); HandlerResult.Ok })
+    c2.drainPending()
+    c2.stop()
+    assert(seen.toList == List("1", "3", "5", "7", "9", "11"))
+    assert(new AckLedger(shared.ledgerDir.get).deferred.isEmpty)
   }
 }

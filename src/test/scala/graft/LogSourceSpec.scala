@@ -1363,4 +1363,39 @@ class LogSourceSpec extends AnyFunSuite {
     q.stop()
     assert(got == Map("click" -> 3, "purchase" -> 2))
   }
+
+  test("reportLatestOffset returns the live head latestOffset read, and lists before any") {
+    import graft.sources.{GraftLogMicroBatchStream, GraftLogOffset}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import scala.jdk.CollectionConverters._
+    val root = TestSpark.tmpDir("graftlog")
+    var now = 1000L
+    val w = new LogWriter(root, "s", () => now)
+    (1 to 3).foreach { _ => now += 10; w.produce(Map("n" -> now)) }
+    def mbs(extra: (String, String)*) = new GraftLogMicroBatchStream(root, "s",
+      new CaseInsensitiveStringMap((Map("path" -> root, "stream" -> "s",
+        "startingOffsets" -> "earliest") ++ extra).asJava))
+    def reported(m: GraftLogMicroBatchStream) =
+      m.reportLatestOffset().asInstanceOf[GraftLogOffset].id("s")
+    def latest(m: GraftLogMicroBatchStream) =
+      m.latestOffset(m.initialOffset(), m.getDefaultReadLimit)
+        .asInstanceOf[GraftLogOffset].id("s")
+    // no latestOffset yet: the head comes from a listing
+    val fresh = mbs()
+    assert(reported(fresh) == LogStore.maxId(root, "s"))
+    assert(latest(fresh) == LogStore.maxId(root, "s"))
+    assert(reported(fresh) == LogStore.maxId(root, "s"))
+    // a quota cuts the batch, but the report is still the live head
+    val capped = mbs("maxEntriesPerTrigger" -> "1")
+    assert(latest(capped) == LogId(1010, 0))
+    assert(reported(capped) == LogStore.maxId(root, "s"))
+    // AvailableNow freezes the batch end; the report follows the live head
+    val drain = mbs()
+    drain.prepareForTriggerAvailableNow()
+    val frozen = LogStore.maxId(root, "s")
+    now += 10; w.produce(Map("n" -> now))
+    assert(latest(drain) == frozen)
+    assert(reported(drain) == LogStore.maxId(root, "s"))
+    assert(reported(drain) > frozen)
+  }
 }
