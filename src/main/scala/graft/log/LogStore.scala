@@ -350,22 +350,6 @@ object LogStore {
       .map(e => e.id -> e).toMap
   }
 
-  /** First `limit` entries after `start`, reading segments in id order and
-    * stopping as soon as the quota is met — the admission-control path must
-    * not scan the whole backlog just to pick a cut-off id.
-    */
-  def readAfterLimited(root: String, stream: String, start: LogId,
-      limit: Int): Seq[LogEntry] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[LogEntry]
-    val segs = segments(root, stream).filter(_.last > start)
-    val it = segs.iterator
-    while (out.size < limit && it.hasNext) {
-      val seg = it.next()
-      out ++= readSegment(seg.path).filter(_.id > start)
-    }
-    out.toSeq.distinctBy(_.id).sortBy(_.id).take(limit)
-  }
-
   /** Ids (only) of the first `limit` entries after `start` — what the
     * admission-control cutoff actually needs. Fast path: `encodeLine` always
     * writes the id first, so the id is a fixed-prefix substring and no JSON
@@ -432,11 +416,7 @@ object LogStore {
     if (segs.isEmpty || (segs.size == 1 && segs.head.path.endsWith(".parquet"))) 0
     else {
       val entries = segs.flatMap(s => readSegment(s.path)).distinctBy(_.id).sortBy(_.id)
-      val dir = streamDir(root, stream)
-      val name = s"${entries.head.id}__${entries.last.id}.parquet"
-      val tmp = dir.resolve(s".$name.tmp")
-      ParquetSegments.write(tmp, entries)
-      Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+      val name = writeParquetSegment(root, stream, entries)
       segs.filter(s => Paths.get(s.path).getFileName.toString != name)
         .foreach(s => Files.deleteIfExists(Paths.get(s.path)))
       segs.size
@@ -460,11 +440,7 @@ object LogStore {
     eligible.foreach { s =>
       val entries = readSegment(s.path)
       if (entries.nonEmpty) {
-        val dir = streamDir(root, stream)
-        val name = s"${entries.head.id}__${entries.last.id}.parquet"
-        val tmp = dir.resolve(s".$name.tmp")
-        ParquetSegments.write(tmp, entries)
-        Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+        val name = writeParquetSegment(root, stream, entries)
         if (Paths.get(s.path).getFileName.toString != name)
           Files.deleteIfExists(Paths.get(s.path))
       }
@@ -621,13 +597,9 @@ object LogStore {
     */
   private def writeRetainedLike(root: String, stream: String,
       srcPath: String, keep: Seq[LogEntry]): Unit = {
-    val dir = streamDir(root, stream)
-    if (srcPath.endsWith(".parquet")) {
-      val name = s"${keep.head.id}__${keep.last.id}.parquet"
-      val tmp = dir.resolve(s".$name.tmp")
-      ParquetSegments.write(tmp, keep)
-      Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-    } else if (srcPath.endsWith(".vjsonl")) {
+    if (srcPath.endsWith(".parquet")) writeParquetSegment(root, stream, keep)
+    else if (srcPath.endsWith(".vjsonl")) {
+      val dir = streamDir(root, stream)
       val name = valuesSegmentName(keep.head.id, keep.last.id)
       val tmp = dir.resolve(s".$name.tmp")
       val lines = keep.map(e => encodeValuesLine(e.values)).mkString("", "\n", "\n")
@@ -688,6 +660,22 @@ object LogStore {
     */
   def publishSegment(p: PreparedSegment): Unit =
     Files.move(p.tmp, p.target, StandardCopyOption.ATOMIC_MOVE)
+
+  /** The parquet twin of [[prepareSegment]] + [[publishSegment]]: write
+    * `entries` (id-ordered, non-empty) to a hidden tmp file, then move it
+    * atomically into its range-named `.parquet` segment. Callers delete the
+    * source segments only after this returns (readers dedup the overlap by
+    * id). Returns the segment's file name.
+    */
+  private def writeParquetSegment(root: String, stream: String,
+      entries: Seq[LogEntry]): String = {
+    val dir = streamDir(root, stream)
+    val name = s"${entries.head.id}__${entries.last.id}.parquet"
+    val tmp = dir.resolve(s".$name.tmp")
+    ParquetSegments.write(tmp, entries)
+    Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
+    name
+  }
 
   /** Atomically write one segment holding `entries` (must be id-ordered). */
   def writeSegment(root: String, stream: String, entries: Seq[LogEntry],

@@ -660,31 +660,20 @@ final class GraftLogWriteBuilder(root: String, stream: String, schema: StructTyp
     shardCount: Int = 1, shardKey: Option[String] = None) extends WriteBuilder
     with org.apache.spark.sql.internal.connector.SupportsStreamingUpdateAsAppend {
   override def build(): Write = tsColumn match {
-    case None if shardCount > 1 =>
-      // sharded logical stream: N independent sequencers, one per shard
-      val key = shardKey.getOrElse(throw new IllegalArgumentException(
-        "sharded graftlog writes require option 'shardKey' (the routing column)"))
-      require(schema.fieldNames.contains(key),
-        s"shardKey '$key' not in write schema ${schema.fieldNames.mkString(",")}")
-      GraftLogSource.shardNames(stream, shardCount)
-        .foreach(LogStore.ensureStream(root, _))
-      new Write {
-        override def toBatch: BatchWrite =
-          new GraftLogShardedBatchWrite(root, stream, schema, segmentEntries,
-            queryId, stagingTtlMs, shardCount, key)
-        override def toStreaming: StreamingWrite =
-          new GraftLogShardedStreamingWrite(root, stream, schema, queryId,
-            segmentEntries, stagingTtlMs, shardCount, key)
-      }
     case None =>
-      // driver-side DDL + name validation BEFORE tasks stage files
-      LogStore.ensureStream(root, stream)
-      new Write {
-        override def toBatch: BatchWrite =
-          new GraftLogBatchWrite(root, stream, schema, segmentEntries, queryId, stagingTtlMs)
-        override def toStreaming: StreamingWrite =
-          new GraftLogStreamingWrite(root, stream, schema, queryId, segmentEntries, stagingTtlMs)
+      // a sharded logical stream is N independent sequencers, one per shard;
+      // an unsharded write is the one-target case and never looks up a key
+      val (targets, key) = if (shardCount <= 1) (Seq(stream), None) else {
+        val k = shardKey.getOrElse(throw new IllegalArgumentException(
+          "sharded graftlog writes require option 'shardKey' (the routing column)"))
+        require(schema.fieldNames.contains(k),
+          s"shardKey '$k' not in write schema ${schema.fieldNames.mkString(",")}")
+        (GraftLogSource.shardNames(stream, shardCount), Some(k))
       }
+      // driver-side DDL + name validation BEFORE tasks stage files
+      targets.foreach(LogStore.ensureStream(root, _))
+      new GraftLogStagedWrite(root, targets, schema, queryId, segmentEntries,
+        stagingTtlMs, key)
     case Some(tsCol) =>
       require(shardCount == 1,
         "tsColumn bulk writes do not shard (ids are data-derived; write each " +
@@ -804,7 +793,7 @@ final class GraftLogBulkDataWriter(root: String, stream: String,
 
   override def commit(): WriterCommitMessage = {
     flush()
-    GraftLogCommitMessage(0, Nil) // segments already visible; count-only ack
+    GraftLogStagedCommit(0, Map.empty) // segments already visible; nothing staged
   }
 
   override def abort(): Unit = {
@@ -816,24 +805,14 @@ final class GraftLogBulkDataWriter(root: String, stream: String,
   override def close(): Unit = ()
 }
 
-/** One task's staged values-only segment files (path, entryCount), in row
-  * order. Only file METADATA crosses to the driver — the payload bytes are
-  * already on the shared filesystem, encoded by the executor.
+/** One task's staged values-only segment files: per target index, the
+  * staged files (path, entryCount) in row order. Only file METADATA crosses
+  * to the driver — the payload bytes are already on the shared filesystem,
+  * encoded by the executor. The tsColumn bulk tasks publish their own
+  * segments and ack with no files.
   */
 final case class GraftLogStagedCommit(partitionId: Int,
-    files: Seq[(String, Long)]) extends WriterCommitMessage
-
-/** Staged-file manifest of a sharded-sink task: per shard index, the staged
-  * `.vjsonl` files (path, entry count) in write order.
-  */
-final case class GraftLogShardedCommit(partitionId: Int,
-    shards: Map[Int, Seq[(String, Long)]]) extends WriterCommitMessage
-
-/** Count-only ack for writes whose tasks publish segments themselves
-  * (the tsColumn bulk path).
-  */
-final case class GraftLogCommitMessage(partitionId: Int,
-    rows: Seq[Map[String, String]]) extends WriterCommitMessage
+    files: Map[Int, Seq[(String, Long)]]) extends WriterCommitMessage
 
 object GraftLogWritePath {
   /** Convert an incoming row to the flat string map, applying the
@@ -873,13 +852,6 @@ object GraftLogWritePath {
     }
   }
 
-  /** Append-sink commit: executors staged fully-encoded values-only segment
-    * files; under the per-stream lock the driver reserves a dense id range
-    * and renames them into place in (partitionId, chunk) order — O(#files)
-    * driver work, no payload row ever materializes driver-side. Per-commit
-    * tiered auto-compaction keeps a long-running sink's file count and the
-    * per-append maxId directory listing bounded.
-    */
   /** Default orphan-sweep TTL (24 h); override per write with the
     * `stagingTtlMs` option (a backfill whose tasks may stage more than a
     * day before the job commits needs a larger TTL), `<= 0` disables the
@@ -894,18 +866,38 @@ object GraftLogWritePath {
     if (queryId == null || queryId.isEmpty) ""
     else queryId.filter(c => c.isLetterOrDigit || c == '-' || c == '_') + "__"
 
-  def commitAll(root: String, stream: String, messages: Array[WriterCommitMessage],
+  /** Append-sink commit: executors staged fully-encoded values-only segment
+    * files; for each target stream, under that stream's lock, the driver
+    * reserves a dense id range and renames its files into place in
+    * (partitionId, chunk) order — O(#files) driver work, no payload row ever
+    * materializes driver-side. Targets commit concurrently: each has its own
+    * writer lock and id sequencer, so the shards of a sharded stream never
+    * serialize on one commit point. Per-commit tiered auto-compaction keeps
+    * a long-running sink's file count and the per-append maxId directory
+    * listing bounded.
+    */
+  def commitAll(root: String, targets: Seq[String], messages: Array[WriterCommitMessage],
       queryId: String = "", stagingTtlMs: Long = DefaultStagingTtlMs): Unit = {
-    val staged = messages.iterator
+    val cms = messages.iterator
       .collect { case m: GraftLogStagedCommit => m }
       .toSeq.sortBy(_.partitionId)
-      .flatMap(_.files)
-      .map { case (p, c) => (java.nio.file.Paths.get(p), c) }
-    // the LogWriter constructor materializes an empty stream when no task
-    // staged anything, so an all-empty write still creates the stream
-    new LogWriter(root, stream, autoCompactSegments = 64)
-      .publishStagedValues(staged)
-    sweepStaleStaging(root, stream, queryId, stagingTtlMs)
+    import scala.concurrent.duration.DurationInt
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    implicit val ec: ExecutionContext = LogWriter.writeEc
+    def publish(k: Int): Unit = {
+      val staged = cms.flatMap(_.files.getOrElse(k, Nil))
+        .map { case (p, c) => (java.nio.file.Paths.get(p), c) }
+      // the LogWriter constructor materializes an empty stream when no task
+      // staged anything, so an all-empty write still creates the stream
+      new LogWriter(root, targets(k), autoCompactSegments = 64)
+        .publishStagedValues(staged)
+      sweepStaleStaging(root, targets(k), queryId, stagingTtlMs)
+    }
+    // the calling thread publishes the first target while the pool takes the
+    // rest: a one-target commit pays no thread handoff
+    val rest = targets.indices.tail.map(k => Future(publish(k)))
+    publish(0)
+    Await.result(Future.sequence(rest), 10.minutes)
   }
 
   /** Opportunistic GC of orphaned staged files: a hard-killed executor never
@@ -935,175 +927,45 @@ object GraftLogWritePath {
     }
   }
 
-  /** Sharded-sink commit: one [[commitAll]]-shaped publish PER SHARD, run
-    * concurrently — each shard has its own writer lock and id sequencer, so
-    * the N commits never serialize on one stream. Commit cost per shard is
-    * O(#files of that shard); the logical stream's write ceiling scales
-    * with the shard count.
-    */
-  def commitAllSharded(root: String, stream: String, shardCount: Int,
-      messages: Array[WriterCommitMessage],
-      queryId: String = "", stagingTtlMs: Long = DefaultStagingTtlMs): Unit = {
-    val cms = messages.iterator
-      .collect { case m: GraftLogShardedCommit => m }
-      .toSeq.sortBy(_.partitionId)
-    import scala.concurrent.duration.DurationInt
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    implicit val ec: ExecutionContext = graft.log.LogWriter.writeEc
-    val perShard = (0 until shardCount).map { k =>
-      Future {
-        val shardStream = GraftLogSource.shardName(stream, k)
-        val staged = cms.flatMap(_.shards.getOrElse(k, Nil))
-          .map { case (p, c) => (java.nio.file.Paths.get(p), c) }
-        new LogWriter(root, shardStream, autoCompactSegments = 64)
-          .publishStagedValues(staged)
-        sweepStaleStaging(root, shardStream, queryId, stagingTtlMs)
-      }
-    }
-    Await.result(Future.sequence(perShard), 10.minutes)
-  }
-
   /** Best-effort cleanup of staged files on job abort / duplicate epoch. */
   def dropStaged(messages: Array[WriterCommitMessage]): Unit =
-    messages.iterator.flatMap {
-      case m: GraftLogStagedCommit => m.files.iterator.map(_._1)
-      case m: GraftLogShardedCommit => m.shards.valuesIterator.flatten.map(_._1)
-      case _ => Iterator.empty
-    }.foreach { p =>
-      try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(p))
-      catch { case _: java.io.IOException => () }
-    }
+    messages.iterator
+      .collect { case m: GraftLogStagedCommit => m }
+      .flatMap(_.files.valuesIterator.flatten.map(_._1))
+      .foreach { p =>
+        try java.nio.file.Files.deleteIfExists(java.nio.file.Paths.get(p))
+        catch { case _: java.io.IOException => () }
+      }
 }
 
 /** Executor-side append writer: encodes each row's payload into staged
-  * values-only (`.vjsonl`) files under `<streamDir>/.staging/` — the full
-  * segment bytes are produced HERE, on the executor; the driver's commit only
-  * reserves the epoch's id range and renames the staged files into place
-  * ([[graft.log.LogWriter.publishStagedValues]]). Chunked every
-  * `maxSegmentEntries` rows so one huge task still yields
+  * values-only (`.vjsonl`) files under `<target streamDir>/.staging/` — the
+  * full segment bytes are produced HERE, on the executor; the driver's commit
+  * only reserves each target's id range and renames the staged files into
+  * place ([[graft.log.LogWriter.publishStagedValues]]). With one target
+  * every row goes there; a sharded stream routes each row by the
+  * deterministic hash of its `shardKey` value. Chunked every
+  * `maxSegmentEntries` rows per target so one huge task still yields
   * reader-parallelizable segments. Staged names are UUIDs: retried or
   * speculative attempts stage side by side and only the attempt whose commit
   * message Spark accepts gets published; abort deletes this attempt's files.
   */
-final class GraftLogDataWriter(root: String, stream: String, schema: StructType,
-    partitionId: Int, maxSegmentEntries: Int,
-    queryId: String = "") extends DataWriter[InternalRow] {
-  import java.nio.file.{Files, Path, Paths}
-  private val stagingDir: Path = {
-    val d = LogStore.streamDir(root, stream).resolve(".staging")
-    Files.createDirectories(d)
-    d
-  }
-  private val files = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
-  private var out: java.io.Writer = null
-  private var current: Path = null
-  private var count = 0L
-
-  private def roll(): Unit = if (out != null) {
-    out.close(); out = null
-    files += ((current.toString, count))
-  }
-
-  override def write(record: InternalRow): Unit = {
-    if (out == null) {
-      current = stagingDir.resolve(
-        s"${GraftLogWritePath.stagingPrefix(queryId)}${java.util.UUID.randomUUID()}.vjsonl")
-      out = Files.newBufferedWriter(current, java.nio.charset.StandardCharsets.UTF_8)
-      count = 0L
-    }
-    out.write(LogStore.encodeValuesLine(GraftLogWritePath.toPayload(schema, record)))
-    out.write('\n')
-    count += 1
-    if (count >= maxSegmentEntries) roll()
-  }
-
-  override def commit(): WriterCommitMessage = {
-    roll()
-    GraftLogStagedCommit(partitionId, files.toSeq)
-  }
-
-  override def abort(): Unit = {
-    if (out != null) { out.close(); out = null }
-    (files.iterator.map(_._1) ++ Option(current).map(_.toString))
-      .foreach(p => try Files.deleteIfExists(Paths.get(p))
-        catch { case _: java.io.IOException => () })
-  }
-
-  override def close(): Unit = ()
-}
-
-/** Serializable factory shipped to executors (must not capture the write). */
-final case class GraftLogWriterFactory(root: String, stream: String,
-    schema: StructType, maxSegmentEntries: Int, queryId: String = "")
-    extends DataWriterFactory with StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftLogDataWriter(root, stream, schema, partitionId, maxSegmentEntries, queryId)
-  override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new GraftLogDataWriter(root, stream, schema, partitionId, maxSegmentEntries, queryId)
-}
-
-final class GraftLogBatchWrite(root: String, stream: String, schema: StructType,
-    maxSegmentEntries: Int = 10000, queryId: String = "",
-    stagingTtlMs: Long = GraftLogWritePath.DefaultStagingTtlMs) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftLogWriterFactory(root, stream, schema, maxSegmentEntries, queryId)
-  override def commit(messages: Array[WriterCommitMessage]): Unit =
-    GraftLogWritePath.commitAll(root, stream, messages, queryId, stagingTtlMs)
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    GraftLogWritePath.dropStaged(messages)
-}
-
-final class GraftLogStreamingWrite(root: String, stream: String, schema: StructType,
-    queryId: String, maxSegmentEntries: Int = 10000,
-    stagingTtlMs: Long = GraftLogWritePath.DefaultStagingTtlMs) extends StreamingWrite {
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    GraftLogWriterFactory(root, stream, schema, maxSegmentEntries, queryId)
-
-  /** Idempotent per epoch *within a query*: Structured Streaming may
-    * re-deliver a committed epoch after a driver failure; a marker file makes
-    * the duplicate commit a no-op instead of a double-append (the batch-write
-    * path stays at-least-once, like the reference's produce). Markers are
-    * keyed by `queryId/epochId`, not epochId alone — epoch ids restart at 0
-    * for every new query/checkpoint, so a global key would silently drop a
-    * later query's first commits.
-    */
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val dir = LogStore.streamDir(root, stream)
-    val epochs = dir.resolve("_epochs").resolve(queryId)
-    java.nio.file.Files.createDirectories(epochs)
-    val marker = epochs.resolve(epochId.toString)
-    if (!java.nio.file.Files.exists(marker)) {
-      GraftLogWritePath.commitAll(root, stream, messages, queryId, stagingTtlMs)
-      java.nio.file.Files.createFile(marker)
-    } else GraftLogWritePath.dropStaged(messages) // duplicate epoch: drop, don't leak
-
-  }
-
-  override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
-    GraftLogWritePath.dropStaged(messages)
-}
-
-/** Executor-side writer for a SHARDED logical stream: each row is routed by
-  * the deterministic key hash to one of `shardCount` physical shards and
-  * staged into that shard's `.staging` dir — the same values-only segment
-  * bytes as the unsharded path, times N independent commit points.
-  */
-final class GraftLogShardedDataWriter(root: String, stream: String,
+final class GraftLogStagedDataWriter(root: String, targets: Seq[String],
     schema: StructType, partitionId: Int, maxSegmentEntries: Int,
-    queryId: String, shardCount: Int, keyName: String)
+    queryId: String, shardKey: Option[String])
     extends DataWriter[InternalRow] {
   import java.nio.file.{Files, Path, Paths}
-  private val stagingDirs: Array[Path] = Array.tabulate(shardCount) { k =>
-    val d = LogStore.streamDir(root, GraftLogSource.shardName(stream, k))
-      .resolve(".staging")
+  private val n = targets.size
+  private val stagingDirs: Array[Path] = targets.map { t =>
+    val d = LogStore.streamDir(root, t).resolve(".staging")
     Files.createDirectories(d)
     d
-  }
+  }.toArray
   private val files =
-    Array.fill(shardCount)(scala.collection.mutable.ArrayBuffer.empty[(String, Long)])
-  private val out = new Array[java.io.Writer](shardCount)
-  private val current = new Array[Path](shardCount)
-  private val counts = new Array[Long](shardCount)
+    Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[(String, Long)])
+  private val out = new Array[java.io.Writer](n)
+  private val current = new Array[Path](n)
+  private val counts = new Array[Long](n)
 
   private def roll(k: Int): Unit = if (out(k) != null) {
     out(k).close(); out(k) = null
@@ -1113,7 +975,7 @@ final class GraftLogShardedDataWriter(root: String, stream: String,
 
   override def write(record: InternalRow): Unit = {
     val payload = GraftLogWritePath.toPayload(schema, record)
-    val k = GraftLogSource.shardOf(payload.getOrElse(keyName, ""), shardCount)
+    val k = shardKey.fold(0)(key => GraftLogSource.shardOf(payload.getOrElse(key, ""), n))
     if (out(k) == null) {
       current(k) = stagingDirs(k).resolve(
         s"${GraftLogWritePath.stagingPrefix(queryId)}${java.util.UUID.randomUUID()}.vjsonl")
@@ -1127,14 +989,13 @@ final class GraftLogShardedDataWriter(root: String, stream: String,
   }
 
   override def commit(): WriterCommitMessage = {
-    (0 until shardCount).foreach(roll)
-    GraftLogShardedCommit(partitionId,
-      (0 until shardCount).iterator
-        .map(k => k -> files(k).toSeq).filter(_._2.nonEmpty).toMap)
+    (0 until n).foreach(roll)
+    GraftLogStagedCommit(partitionId,
+      (0 until n).iterator.map(k => k -> files(k).toSeq).filter(_._2.nonEmpty).toMap)
   }
 
   override def abort(): Unit = {
-    (0 until shardCount).foreach { k =>
+    (0 until n).foreach { k =>
       if (out(k) != null) { out(k).close(); out(k) = null }
     }
     (files.iterator.flatMap(_.iterator.map(_._1)) ++
@@ -1146,53 +1007,61 @@ final class GraftLogShardedDataWriter(root: String, stream: String,
   override def close(): Unit = ()
 }
 
-final case class GraftLogShardedWriterFactory(root: String, stream: String,
+/** Serializable factory shipped to executors (must not capture the write). */
+final case class GraftLogStagedWriterFactory(root: String, targets: Seq[String],
     schema: StructType, maxSegmentEntries: Int, queryId: String,
-    shardCount: Int, keyName: String)
+    shardKey: Option[String])
     extends DataWriterFactory with StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new GraftLogShardedDataWriter(root, stream, schema, partitionId,
-      maxSegmentEntries, queryId, shardCount, keyName)
+    new GraftLogStagedDataWriter(root, targets, schema, partitionId,
+      maxSegmentEntries, queryId, shardKey)
   override def createWriter(partitionId: Int, taskId: Long, epochId: Long): DataWriter[InternalRow] =
-    new GraftLogShardedDataWriter(root, stream, schema, partitionId,
-      maxSegmentEntries, queryId, shardCount, keyName)
+    createWriter(partitionId, taskId)
 }
 
-final class GraftLogShardedBatchWrite(root: String, stream: String,
-    schema: StructType, maxSegmentEntries: Int, queryId: String,
-    stagingTtlMs: Long, shardCount: Int, keyName: String) extends BatchWrite {
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    GraftLogShardedWriterFactory(root, stream, schema, maxSegmentEntries,
-      queryId, shardCount, keyName)
+/** The staged append, batch and streaming: one plain stream is the
+  * one-target case of a sharded stream's `<stream>.s<k>` targets. A batch
+  * commit appends at-least-once, like the reference's produce.
+  */
+final class GraftLogStagedWrite(root: String, targets: Seq[String],
+    schema: StructType, queryId: String, maxSegmentEntries: Int = 10000,
+    stagingTtlMs: Long = GraftLogWritePath.DefaultStagingTtlMs,
+    shardKey: Option[String] = None)
+    extends Write with BatchWrite with StreamingWrite {
+  private def factory =
+    GraftLogStagedWriterFactory(root, targets, schema, maxSegmentEntries, queryId, shardKey)
+
+  override def toBatch: BatchWrite = this
+  override def toStreaming: StreamingWrite = this
+  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory = factory
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
+    factory
+  // both interfaces default this; Scala needs the tie broken explicitly
+  override def useCommitCoordinator(): Boolean = true
+
   override def commit(messages: Array[WriterCommitMessage]): Unit =
-    GraftLogWritePath.commitAllSharded(root, stream, shardCount, messages,
-      queryId, stagingTtlMs)
+    GraftLogWritePath.commitAll(root, targets, messages, queryId, stagingTtlMs)
   override def abort(messages: Array[WriterCommitMessage]): Unit =
     GraftLogWritePath.dropStaged(messages)
-}
 
-/** Sharded streaming append; epoch-idempotence markers live under shard 0
-  * (one marker guards the WHOLE epoch — commitAllSharded either ran or
-  * did not; a crash mid-commit replays the epoch, at-least-once like every
-  * produce path).
-  */
-final class GraftLogShardedStreamingWrite(root: String, stream: String,
-    schema: StructType, queryId: String, maxSegmentEntries: Int,
-    stagingTtlMs: Long, shardCount: Int, keyName: String) extends StreamingWrite {
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo): StreamingDataWriterFactory =
-    GraftLogShardedWriterFactory(root, stream, schema, maxSegmentEntries,
-      queryId, shardCount, keyName)
-
+  /** Idempotent per epoch *within a query*: Structured Streaming may
+    * re-deliver a committed epoch after a driver failure; a marker file makes
+    * the duplicate commit a no-op instead of a double-append. Markers are
+    * keyed by `queryId/epochId`, not epochId alone — epoch ids restart at 0
+    * for every new query/checkpoint, so a global key would silently drop a
+    * later query's first commits. One marker under the first target guards
+    * the WHOLE epoch (`<stream>/_epochs/…`, or `<stream>.s0/_epochs/…` when
+    * sharded): the commit either ran or did not, and a crash mid-commit
+    * replays the epoch, at-least-once like every produce path.
+    */
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
-    val dir = LogStore.streamDir(root, GraftLogSource.shardName(stream, 0))
-    val epochs = dir.resolve("_epochs").resolve(queryId)
+    val epochs = LogStore.streamDir(root, targets.head).resolve("_epochs").resolve(queryId)
     java.nio.file.Files.createDirectories(epochs)
     val marker = epochs.resolve(epochId.toString)
     if (!java.nio.file.Files.exists(marker)) {
-      GraftLogWritePath.commitAllSharded(root, stream, shardCount, messages,
-        queryId, stagingTtlMs)
+      GraftLogWritePath.commitAll(root, targets, messages, queryId, stagingTtlMs)
       java.nio.file.Files.createFile(marker)
-    } else GraftLogWritePath.dropStaged(messages)
+    } else GraftLogWritePath.dropStaged(messages) // duplicate epoch: drop, don't leak
   }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =

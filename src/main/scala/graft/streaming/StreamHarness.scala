@@ -3,15 +3,17 @@ package graft.streaming
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The one build-and-drain harness behind every engine-streaming oracle
-  * query (q78/q91/q94/q105/q107/q115/q120/q125/q128/q131/q138/q139): pins the state-store
-  * sizing confs for the duration of `start()` (safe to restore right after —
-  * the stream clones the session conf synchronously inside start), runs the
-  * plan into a fresh uniquely-named memory sink under Trigger.AvailableNow
-  * with a temp checkpoint, waits for the drain, and registers the sink view
-  * with [[graft.CacheScope]] so the runner's per-query release drops the
-  * drained rows from driver memory (per-row sinks would otherwise pin the
-  * whole stream for the session's lifetime).
+/** The one build-and-drain harness for engine-streaming queries. Its
+  * contract: state-store sizing confs are pinned only for the duration of
+  * `start()` (safe to restore right after — the stream clones the session
+  * conf synchronously inside start); the plan drains into a fresh
+  * uniquely-named memory sink under Trigger.AvailableNow with a temp
+  * checkpoint; the sink view is registered with [[graft.CacheScope]] before
+  * the wait, so the runner's per-query release drops the drained rows from
+  * driver memory even after a failed drain (per-row sinks would otherwise pin
+  * the whole stream for the session's lifetime); and, unless the caller opts
+  * out, a drain that dropped rows at the watermark fails instead of
+  * returning a short answer.
   */
 object StreamHarness {
 
@@ -44,8 +46,8 @@ object StreamHarness {
     * small state wants far fewer than the session's shuffle default.
     * `rocksdb` selects the RocksDB provider (required by transformWithState
     * for column families).
-    */
-  /** With `failOnLateDrop` (the default), a drained query that silently
+    *
+    * With `failOnLateDrop` (the default), a drained query that silently
     * dropped rows at the watermark ABORTS instead of returning a plausible
     * wrong answer: every engine-streaming oracle query's fixture is produced
     * so nothing is ever late, so a nonzero drop count means the fixture's

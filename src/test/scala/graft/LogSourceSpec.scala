@@ -588,8 +588,8 @@ class LogSourceSpec extends AnyFunSuite {
       java.nio.file.Files.write(f,
         (LogStore.encodeValuesLine(Map("k" -> "v")) + "\n")
           .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      GraftLogWritePath.commitAll(root, "s",
-        Array(GraftLogStagedCommit(0, Seq((f.toString, 1L)))), queryId = "q1")
+      GraftLogWritePath.commitAll(root, Seq("s"),
+        Array(GraftLogStagedCommit(0, Map(0 -> Seq((f.toString, 1L))))), queryId = "q1")
     }
     commitOne()
     assert(java.nio.file.Files.exists(ownStale),
@@ -602,8 +602,8 @@ class LogSourceSpec extends AnyFunSuite {
     java.nio.file.Files.write(f2,
       (LogStore.encodeValuesLine(Map("k" -> "v")) + "\n")
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    GraftLogWritePath.commitAll(root, "s",
-      Array(GraftLogStagedCommit(0, Seq((f2.toString, 1L)))),
+    GraftLogWritePath.commitAll(root, Seq("s"),
+      Array(GraftLogStagedCommit(0, Map(0 -> Seq((f2.toString, 1L))))),
       queryId = "q1", stagingTtlMs = -1L)
     assert(java.nio.file.Files.exists(foreignStale2), "disabled sweep still deleted")
   }
@@ -1238,35 +1238,48 @@ class LogSourceSpec extends AnyFunSuite {
   }
 
   test("streaming sink commit is idempotent per epoch, but only within a query") {
-    import graft.sources.{GraftLogStagedCommit, GraftLogStreamingWrite}
+    import graft.sources.{GraftLogSource, GraftLogStagedCommit, GraftLogStagedWrite}
     import org.apache.spark.sql.connector.write.WriterCommitMessage
-    val root = TestSpark.tmpDir("graftlog")
-    LogStore.ensureStream(root, "out")
-    // a re-delivered epoch re-runs its tasks, so every delivery stages fresh files
-    def staged(): Array[WriterCommitMessage] = {
-      val dir = LogStore.streamDir(root, "out").resolve(".staging")
-      java.nio.file.Files.createDirectories(dir)
-      val f = dir.resolve(s"${java.util.UUID.randomUUID()}.vjsonl")
-      java.nio.file.Files.write(f,
-        (LogStore.encodeValuesLine(Map("k" -> "v")) + "\n")
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      Array(GraftLogStagedCommit(0, Seq((f.toString, 1L))))
+    // a plain stream, then a 2-shard one: one marker under the first target
+    // guards the whole epoch
+    val cases = Seq(Seq("out") -> "out", GraftLogSource.shardNames("out", 2) -> "out.s0")
+    for ((targets, markerStream) <- cases) {
+      val root = TestSpark.tmpDir("graftlog")
+      targets.foreach(LogStore.ensureStream(root, _))
+      def stagingDir(t: String) = LogStore.streamDir(root, t).resolve(".staging")
+      // a re-delivered epoch re-runs its tasks, so every delivery stages
+      // fresh files, one per target
+      def staged(): Array[WriterCommitMessage] = {
+        val files = targets.indices.map { k =>
+          java.nio.file.Files.createDirectories(stagingDir(targets(k)))
+          val f = stagingDir(targets(k)).resolve(s"${java.util.UUID.randomUUID()}.vjsonl")
+          java.nio.file.Files.write(f,
+            (LogStore.encodeValuesLine(Map("k" -> "v")) + "\n")
+              .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          k -> Seq((f.toString, 1L))
+        }.toMap
+        Array(GraftLogStagedCommit(0, files))
+      }
+      def counts(): Seq[Int] = targets.map(t =>
+        LogStore.readRange(root, t, LogId.Zero, LogStore.maxId(root, t)).size)
+      val write = new GraftLogStagedWrite(root, targets, null, "query-A")
+      write.commit(7L, staged())
+      // marker paths are unchanged: <stream>/_epochs/<queryId>/<epoch>, and
+      // <stream>.s0/_epochs/<queryId>/<epoch> when sharded
+      assert(java.nio.file.Files.isRegularFile(LogStore.streamDir(root, markerStream)
+        .resolve("_epochs").resolve("query-A").resolve("7")))
+      write.commit(7L, staged()) // re-delivered epoch after driver recovery
+      assert(counts() == targets.map(_ => 1))
+      // the duplicate epoch's staged files must be dropped, not leaked
+      targets.foreach { t =>
+        val leftover = java.nio.file.Files.list(stagingDir(t)).count()
+        assert(leftover == 0, s"duplicate-epoch staging leaked $leftover files in $t")
+      }
+      // a DIFFERENT query re-using the same epoch number must NOT be dropped:
+      // epoch ids restart at 0 per query, so markers are keyed by query identity
+      new GraftLogStagedWrite(root, targets, null, "query-B").commit(7L, staged())
+      assert(counts() == targets.map(_ => 2))
     }
-    val write = new GraftLogStreamingWrite(root, "out", null, "query-A")
-    write.commit(7L, staged())
-    write.commit(7L, staged()) // re-delivered epoch after driver recovery
-    val entries = LogStore.readRange(root, "out", LogId.Zero, LogStore.maxId(root, "out"))
-    assert(entries.size == 1)
-    // the duplicate epoch's staged file must be dropped, not leaked
-    val leftover = java.nio.file.Files.list(
-      LogStore.streamDir(root, "out").resolve(".staging")).count()
-    assert(leftover == 0, s"duplicate-epoch staging leaked $leftover files")
-    // a DIFFERENT query re-using the same epoch number must NOT be dropped:
-    // epoch ids restart at 0 per query, so markers are keyed by query identity
-    val writeB = new GraftLogStreamingWrite(root, "out", null, "query-B")
-    writeB.commit(7L, staged())
-    val after = LogStore.readRange(root, "out", LogId.Zero, LogStore.maxId(root, "out"))
-    assert(after.size == 2)
   }
 
   test("a second streaming query with a fresh checkpoint still appends (epoch 0 reuse)") {

@@ -5,9 +5,11 @@ import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Keeps the session config and the function registry defined once: every
-  * entry point builds through `GraftSession`, and only `GraftExpressions`
-  * (the list) and `QueryDef` (the one call per run) touch registration.
+/** Keeps the session config, the function registry and the graftlog sink's
+  * staged append defined once: every entry point builds through
+  * `GraftSession`, only `GraftExpressions` (the list) and `QueryDef` (the one
+  * call per run) touch registration, and the sink has one data writer per
+  * write mode.
   */
 class SourceLayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -37,5 +39,12 @@ class SourceLayoutSpec extends AnyFunSuite {
       """GraftExpressions\.register|ensureRegistered\(|createOrReplaceTempFunction""",
       Set("Expressions.scala", "QueryDef.scala"))
     assert(hits.isEmpty, hits.mkString("\n"))
+  }
+
+  test("the graftlog sink has exactly two data writers: staged append and tsColumn bulk") {
+    val src = root.resolve("graft/sources/GraftLogSource.scala")
+    val writers = Files.readAllLines(src).asScala
+      .filter(l => """(extends|with)\s+DataWriter\[InternalRow\]""".r.findFirstIn(l).isDefined)
+    assert(writers.size == 2, writers.mkString("\n"))
   }
 }
