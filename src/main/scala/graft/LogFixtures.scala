@@ -17,7 +17,7 @@ object LogFixtures {
     */
   def producedLog(sfDir: String, key: String)(produce: String => Unit): String =
     cache.computeIfAbsent((sfDir, key), { _ =>
-      val root = java.nio.file.Files.createTempDirectory(s"graft-$key").toString
+      val root = TempDirs.scratch(s"graft-$key")
       produce(root)
       root
     })

@@ -1,6 +1,7 @@
 package graft.consumer
 
 import graft.log.{LogId, LogStore}
+import graft.streaming.StreamHarness
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -467,7 +468,7 @@ final class GraftConsumer(
       .option("minEntriesPerTrigger", m.toString)
       .option("maxTriggerDelayMs",
         (if (cfg.timeoutMs == 0L) Long.MaxValue else cfg.timeoutMs).toString))
-    val q = withMin.load()
+    val writer = withMin.load()
       .writeStream
       .option("checkpointLocation", cfg.checkpointDir)
       .trigger(
@@ -532,7 +533,7 @@ final class GraftConsumer(
         }
         ()
       }
-      .start()
+    val q = StreamHarness.start(spark)(writer)
     query = Some(q)
     q
   }

@@ -84,8 +84,15 @@ object LogStore {
     * positions, and reusing one would teleport consumers backwards.
     */
   def maxId(root: String, stream: String): LogId = {
-    val segs = segments(root, stream)
-    val segMax = if (segs.isEmpty) LogId.Zero else segs.map(_.last).max
+    // a fold over the bare names: this runs on every produce (under the
+    // stream lock) and every trigger, and needs no File, Segment or sort
+    var segMax = LogId.Zero
+    Option(streamDir(root, stream).toFile.list()).foreach(_.foreach {
+      case SegName(_, b, _, _) =>
+        val last = LogId.parse(b)
+        if (last > segMax) segMax = last
+      case _ => ()
+    })
     val marker = highwaterMarker(root, stream)
     if (marker > segMax) marker else segMax
   }

@@ -7,6 +7,7 @@ import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupReadSupport, GroupWriteSupport}
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetReader}
+import org.apache.parquet.io.LocalOutputFile
 import org.apache.parquet.schema.{MessageType, MessageTypeParser}
 
 /** Columnar (parquet) segment codec for COLD log data. Hot segments stay
@@ -42,7 +43,10 @@ object ParquetSegments {
     val conf = new Configuration(false)
     GroupWriteSupport.setSchema(Schema, conf)
     val factory = new SimpleGroupFactory(Schema)
-    val writer = ExampleParquetWriter.builder(new HPath(path.toUri))
+    // parquet's own local file, not Hadoop's LocalFileSystem: no `.crc`
+    // sidecar (which would follow the hidden tmp name and be orphaned by the
+    // rename that publishes the segment) and no chmod process per file
+    val writer = ExampleParquetWriter.builder(new LocalOutputFile(path))
       .withConf(conf)
       .withType(Schema)
       .withCompressionCodec(CompressionCodecName.SNAPPY)

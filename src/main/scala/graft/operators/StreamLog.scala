@@ -454,20 +454,22 @@ object StreamLog {
         .option("startingOffsets", "earliest")
       // gA: full drain (its committed offset IS the high water)
       val ckptA = graft.TempDirs.scratch("graft-q159-gA")
-      val qA = src.load().writeStream.format("noop")
-        .option("checkpointLocation", ckptA)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val qA = graft.streaming.StreamHarness.start(s) {
+        src.load().writeStream.format("noop")
+          .option("checkpointLocation", ckptA)
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      }
       try { qA.awaitTermination(120000) } finally qA.stop()
       // gB: exactly ONE admission-controlled batch of total/2 entries —
       // a long processing-time trigger fires the first batch immediately
       // and the second in an hour; stop as soon as batch 0 commits
       val ckptB = graft.TempDirs.scratch("graft-q159-gB")
-      val qB = src.option("maxEntriesPerTrigger", (total / 2).toString)
-        .load().writeStream.format("noop")
-        .option("checkpointLocation", ckptB)
-        .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 hour"))
-        .start()
+      val qB = graft.streaming.StreamHarness.start(s) {
+        src.option("maxEntriesPerTrigger", (total / 2).toString)
+          .load().writeStream.format("noop")
+          .option("checkpointLocation", ckptB)
+          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 hour"))
+      }
       try {
         val commit0 = java.nio.file.Paths.get(ckptB, "commits", "0")
         val deadline = System.currentTimeMillis() + 120000
@@ -955,9 +957,7 @@ object StreamLog {
           .mode("append").save()
       append(ev.withColumn("keep", !isDropped && !isLateKept))
       val sinkName = s"q144_sink_${System.nanoTime()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4")
-      val q = try {
+      val q = graft.streaming.StreamHarness.start(s, statePartitions = Some(4)) {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
@@ -970,8 +970,7 @@ object StreamLog {
           .writeStream.outputMode("append")
           .format("memory").queryName(sinkName)
           .option("checkpointLocation", graft.TempDirs.scratch("graft-q144-ckpt"))
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       graft.CacheScope.sinkView(s, sinkName)
       q.processAllAvailable() // on-time phase drains; wm -> m - 1 h; evict
       append(ev.withColumn("keep", isDropped || isLateKept))
@@ -1025,9 +1024,7 @@ object StreamLog {
       val root = userEventLog(s, dir)
       val ckpt = graft.TempDirs.scratch("graft-q145-ckpt")
       val sinkName = s"q145_sink_${System.nanoTime()}"
-      val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-      s.conf.set("spark.sql.shuffle.partitions", "4") // tiny state keyspace
-      val q = try {
+      val q = graft.streaming.StreamHarness.start(s, statePartitions = Some(4)) { // tiny state keyspace
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
@@ -1039,8 +1036,7 @@ object StreamLog {
           .format("memory").queryName(sinkName)
           .option("checkpointLocation", ckpt)
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+      }
       graft.CacheScope.sinkView(s, sinkName)
       q.awaitTermination()
       // sanity: the checkpoint really holds the aggregation's operator
@@ -1380,7 +1376,7 @@ object StreamLog {
       // session default (= core count) meant 32 commits a batch for state
       // that fits in one — ~2 s of pure commit overhead at sf0.1 (guide §2:
       // size from the data; the changelog CONTENT is partition-invariant)
-      val q = graft.streaming.StreamHarness.withStatePartitions(s, 4) {
+      val q = graft.streaming.StreamHarness.start(s, statePartitions = Some(4)) {
         s.readStream.format("graftlog")
           .option("path", rootA).option("stream", "events")
           .option("startingOffsets", "earliest")
@@ -1394,7 +1390,6 @@ object StreamLog {
             graft.TempDirs.scratch("graft-q352-ckpt"))
           .outputMode("update")
           .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
       }
       q.awaitTermination()
       // compaction folds the changelog to current state per key
@@ -1553,19 +1548,20 @@ object StreamLog {
       // count — drain each lane in ~4 commits instead of 25 at sf0.1
       val nIn = v0.count()
       def lane(stream: String, keep: String): Unit = {
-        val q = s.readStream.format("graftlog")
-          .option("path", rootA).option("stream", "events")
-          .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", math.max(4000L, nIn / 4).toString)
-          .load()
-          .filter(expr(keep))
-          .select($"values")
-          .writeStream.format("graftlog")
-          .option("path", rootB).option("stream", stream)
-          .option("checkpointLocation",
-            graft.TempDirs.scratch(s"graft-q355-ckpt-$stream"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
+        val q = graft.streaming.StreamHarness.start(s) {
+          s.readStream.format("graftlog")
+            .option("path", rootA).option("stream", "events")
+            .option("startingOffsets", "earliest")
+            .option("maxEntriesPerTrigger", math.max(4000L, nIn / 4).toString)
+            .load()
+            .filter(expr(keep))
+            .select($"values")
+            .writeStream.format("graftlog")
+            .option("path", rootB).option("stream", stream)
+            .option("checkpointLocation",
+              graft.TempDirs.scratch(s"graft-q355-ckpt-$stream"))
+            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        }
         q.awaitTermination()
       }
       lane("clean", s"NOT ($badPred)")
@@ -1720,17 +1716,18 @@ object StreamLog {
       }
       // the pipe: source A -> handler filter -> engine streaming sink B
       val rootB = graft.TempDirs.scratch("graft-q341-replica")
-      val pipe = s.readStream.format("graftlog")
-        .option("path", rootA).option("stream", "events")
-        .option("startingOffsets", "earliest")
-        .option("maxEntriesPerTrigger", severalBatchCap(s, dir)) // several commits
-        .load()
-        .filter($"values".getItem("event_type") =!= "error")
-        .select($"values")
-        .writeStream.format("graftlog")
-        .option("path", rootB).option("stream", "replica")
-        .option("checkpointLocation", graft.TempDirs.scratch("graft-q341-ckpt"))
-        .start()
+      val pipe = graft.streaming.StreamHarness.start(s) {
+        s.readStream.format("graftlog")
+          .option("path", rootA).option("stream", "events")
+          .option("startingOffsets", "earliest")
+          .option("maxEntriesPerTrigger", severalBatchCap(s, dir)) // several commits
+          .load()
+          .filter($"values".getItem("event_type") =!= "error")
+          .select($"values")
+          .writeStream.format("graftlog")
+          .option("path", rootB).option("stream", "replica")
+          .option("checkpointLocation", graft.TempDirs.scratch("graft-q341-ckpt"))
+      }
       pipe.processAllAvailable()
       pipe.stop()
       // certificate over the replica, read back through the typed source
@@ -1781,18 +1778,19 @@ object StreamLog {
       val ckpt = graft.TempDirs.scratch("graft-q342-ckpt")
       def pipe(trigger: org.apache.spark.sql.streaming.Trigger,
           cap: String): Unit = {
-        val q = s.readStream.format("graftlog")
-          .option("path", rootA).option("stream", "events")
-          .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", cap)
-          .load()
-          .filter($"values".getItem("event_type") =!= "error")
-          .select($"values")
-          .writeStream.format("graftlog")
-          .option("path", rootB).option("stream", "replica")
-          .option("checkpointLocation", ckpt)
-          .trigger(trigger)
-          .start()
+        val q = graft.streaming.StreamHarness.start(s) {
+          s.readStream.format("graftlog")
+            .option("path", rootA).option("stream", "events")
+            .option("startingOffsets", "earliest")
+            .option("maxEntriesPerTrigger", cap)
+            .load()
+            .filter($"values".getItem("event_type") =!= "error")
+            .select($"values")
+            .writeStream.format("graftlog")
+            .option("path", rootB).option("stream", "replica")
+            .option("checkpointLocation", ckpt)
+            .trigger(trigger)
+        }
         q.awaitTermination()
       }
       // phase 1: one committed batch of ~a third of the stream, then stop
@@ -1848,24 +1846,25 @@ object StreamLog {
           "ms", r, "events", orderCols = Seq("event_id"))
       }
       val rootB = graft.TempDirs.scratch("graft-q343-replica")
-      val pipe = s.readStream.format("graftlog")
-        .option("path", rootA).option("stream", "events")
-        .option("startingOffsets", "earliest")
-        .option("maxEntriesPerTrigger", severalBatchCap(s, dir))
-        .load()
-        .filter($"values".getItem("event_type") =!= "error")
-        // the sharded sink routes on a top-level column of the write
-        // schema, so the payload is re-projected to typed columns here
-        .select($"values".getItem("event_id").as("event_id"),
-          $"values".getItem("user_id").as("user_id"),
-          $"values".getItem("event_type").as("event_type"),
-          $"values".getItem("vc").as("vc"))
-        .writeStream.format("graftlog")
-        .option("path", rootB).option("stream", "replica")
-        .option("shards", "4").option("shardKey", "user_id")
-        .option("checkpointLocation", graft.TempDirs.scratch("graft-q343-ckpt"))
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
+      val pipe = graft.streaming.StreamHarness.start(s) {
+        s.readStream.format("graftlog")
+          .option("path", rootA).option("stream", "events")
+          .option("startingOffsets", "earliest")
+          .option("maxEntriesPerTrigger", severalBatchCap(s, dir))
+          .load()
+          .filter($"values".getItem("event_type") =!= "error")
+          // the sharded sink routes on a top-level column of the write
+          // schema, so the payload is re-projected to typed columns here
+          .select($"values".getItem("event_id").as("event_id"),
+            $"values".getItem("user_id").as("user_id"),
+            $"values".getItem("event_type").as("event_type"),
+            $"values".getItem("vc").as("vc"))
+          .writeStream.format("graftlog")
+          .option("path", rootB).option("stream", "replica")
+          .option("shards", "4").option("shardKey", "user_id")
+          .option("checkpointLocation", graft.TempDirs.scratch("graft-q343-ckpt"))
+          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      }
       pipe.awaitTermination()
       // read all four shard streams back through the multi-stream reader
       val shardNames = (0 until 4).map(i => s"replica.s$i")

@@ -1,43 +1,65 @@
 package graft.streaming
 
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** The one build-and-drain harness for engine-streaming queries. Its
-  * contract: state-store sizing confs are pinned only for the duration of
-  * `start()` (safe to restore right after — the stream clones the session
-  * conf synchronously inside start); the plan drains into a fresh
-  * uniquely-named memory sink under Trigger.AvailableNow with a temp
-  * checkpoint; the sink view is registered with [[graft.CacheScope]] before
-  * the wait, so the runner's per-query release drops the drained rows from
-  * driver memory even after a failed drain (per-row sinks would otherwise pin
-  * the whole stream for the session's lifetime); and, unless the caller opts
-  * out, a drain that dropped rows at the watermark fails instead of
-  * returning a short answer.
+/** Where engine streaming queries start and drain. [[start]] is the one
+  * place a `DataStreamWriter` is started: it installs the java.nio
+  * checkpoint file manager and pins state-store sizing only for the
+  * duration of `start()` (safe to restore right after — the stream clones
+  * the session conf synchronously inside start). [[runToMemory]] drains a
+  * plan into a fresh uniquely-named memory sink under Trigger.AvailableNow
+  * with a temp checkpoint; the sink view is registered with
+  * [[graft.CacheScope]] before the wait, so the runner's per-query release
+  * drops the drained rows from driver memory even after a failed drain
+  * (per-row sinks would otherwise pin the whole stream for the session's
+  * lifetime); and, unless the caller opts out, a drain that dropped rows at
+  * the watermark fails instead of returning a short answer.
   */
 object StreamHarness {
 
   private val ShuffleKey = "spark.sql.shuffle.partitions"
+  private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
   private val StoreKey = "spark.sql.streaming.stateStore.providerClass"
   private val RocksDb =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** Pin the shuffle-partition count (= the state-store partition count
-    * frozen into a NEW checkpoint) for the duration of `start`. Safe to
-    * restore right after: the stream clones the session conf synchronously
-    * inside start(). Stateful streaming queries that start their own sink
-    * (rather than through [[runToMemory]]) use this so their state store is
-    * sized to the KEY CARDINALITY instead of the session default — every
-    * micro-batch pays one state commit per partition, so a handful-of-keys
-    * aggregation on a 32-partition store pays 32 commits a batch for state
-    * that fits in one (measured on q352: 5 epochs x 32 commits was ~2 s of
-    * pure commit overhead; optimization guide §2 — size from the data, not
-    * from the core count).
+  /** Start `writer`'s query: the one place an engine streaming query is
+    * started. While `writer.start()` runs, the session carries:
+    *  - [[LocalCheckpointFileManager]] as the checkpoint file manager, unless
+    *    the session already names one (a user's own manager is never
+    *    replaced). The query's offset log, commit log and state-store files
+    *    are then written with java.nio, not through Hadoop's local
+    *    `FileContext`, which spawns `chmod`/`ls` processes for every write
+    *    where libhadoop is missing (tens of ms per file, every micro-batch);
+    *  - with `statePartitions`, that shuffle-partition count, which a NEW
+    *    checkpoint freezes as its state-store partition count. Stateful
+    *    queries size it to the KEY CARDINALITY: each micro-batch pays one
+    *    state commit per partition, so a handful-of-keys aggregation on a
+    *    32-partition store pays 32 commits a batch for state that fits in
+    *    one (q352: 5 epochs x 32 commits was ~2 s of commit overhead).
+    * Both are restored right after: the stream clones the session conf
+    * synchronously inside `start()`. A start racing another on the same
+    * session may see or miss the other's manager setting; both managers
+    * write the same bytes, so that only changes the write cost.
     */
-  def withStatePartitions[T](s: SparkSession, statePartitions: Int)(start: => T): T = {
-    val prev = s.conf.get(ShuffleKey)
-    s.conf.set(ShuffleKey, statePartitions.toString)
-    try start finally s.conf.set(ShuffleKey, prev)
+  def start(s: SparkSession, statePartitions: Option[Int] = None)
+      (writer: => DataStreamWriter[_]): StreamingQuery = {
+    val manager =
+      if (s.conf.getOption(ManagerKey).isDefined) None
+      else Some(ManagerKey -> classOf[LocalCheckpointFileManager].getName)
+    withConf(s, manager.toSeq ++ statePartitions.map(n => ShuffleKey -> n.toString))(writer.start())
+  }
+
+  /** Run `body` with `pins` set on the session conf, then restore each key. */
+  private def withConf[T](s: SparkSession, pins: Seq[(String, String)])(body: => T): T = {
+    val prev = pins.map { case (k, _) => k -> s.conf.getOption(k) }
+    pins.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
   }
 
   /** Drain `build`'s streaming plan to a memory sink and return it as a
@@ -60,21 +82,12 @@ object StreamHarness {
       failOnLateDrop: Boolean = true)
       (build: => DataFrame): DataFrame = {
     val sinkName = s"${prefix}_sink_${System.nanoTime()}"
-    val prevStore = s.conf.getOption(StoreKey)
-    if (rocksdb) s.conf.set(StoreKey, RocksDb)
-    val q = try {
-      withStatePartitions(s, statePartitions) {
+    val q = withConf(s, if (rocksdb) Seq(StoreKey -> RocksDb) else Nil) {
+      start(s, Some(statePartitions)) {
         build.writeStream.outputMode(mode)
           .format("memory").queryName(sinkName)
-          .option("checkpointLocation",
-            java.nio.file.Files.createTempDirectory(s"graft-$prefix-ckpt").toString)
+          .option("checkpointLocation", graft.TempDirs.scratch(s"graft-$prefix-ckpt"))
           .trigger(Trigger.AvailableNow())
-          .start()
-      }
-    } finally {
-      prevStore match {
-        case Some(v) => s.conf.set(StoreKey, v)
-        case None => s.conf.unset(StoreKey)
       }
     }
     // register before waiting: a query that fails mid-drain must still get

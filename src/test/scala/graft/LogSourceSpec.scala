@@ -431,6 +431,22 @@ class LogSourceSpec extends AnyFunSuite {
     assert(id > LogId(200L, 0L), s"id $id reuses the trimmed range")
   }
 
+  test("maxId reads segment names only: tmp, .crc and lock files never count; .highwater does") {
+    val root = TestSpark.tmpDir("graftlog")
+    val w = new LogWriter(root, "s")
+    w.produceAllAt(Seq((100L, Map[String, Any]("i" -> 1)), (200L, Map[String, Any]("i" -> 2))))
+    val dir = LogStore.streamDir(root, "s")
+    Seq(".900-0__900-5.jsonl.tmp", "..900-0__900-5.parquet.tmp.crc", ".900-0__900-5.jsonl.crc",
+      ".writer.lock", "900-0__900-5.jsonl.bak")
+      .foreach(n => java.nio.file.Files.write(dir.resolve(n), Array[Byte](1)))
+    assert(LogStore.maxId(root, "s") == LogId(200L, 0L))
+    java.nio.file.Files.writeString(dir.resolve(".highwater"), "150-0")
+    assert(LogStore.maxId(root, "s") == LogId(200L, 0L), "a lower marker never wins")
+    java.nio.file.Files.writeString(dir.resolve(".highwater"), "300-2")
+    assert(LogStore.maxId(root, "s") == LogId(300L, 2L), "a higher marker does")
+    assert(LogStore.maxId(root, "missing") == LogId.Zero)
+  }
+
   test("trim preserves the straddler's storage format (gz, parquet, vjsonl)") {
     // gz straddler stays gz (a silent JSONL rewrite would undo compression)
     val rootG = TestSpark.tmpDir("graftlog")
@@ -1149,6 +1165,22 @@ class LogSourceSpec extends AnyFunSuite {
     assert(after == before)
     // compacting again must be a no-op, not an endless self-rewrite
     assert(LogStore.compactToParquet(root, "s", LogStore.maxId(root, "s")) == 0)
+  }
+
+  test("parquet compaction and freezing leave no .crc file; entries unchanged") {
+    val root = TestSpark.tmpDir("graftlog")
+    var now = 1000L
+    val w = new LogWriter(root, "s", () => now)
+    (1 to 8).foreach { i => now += 10; w.produce(Map("i" -> i)) }
+    val before = LogStore.readRange(root, "s", LogId.Zero, LogStore.maxId(root, "s"))
+    assert(LogStore.compactToParquet(root, "s", before(3).id) == 4)
+    assert(LogStore.freezeColdSegments(root, "s", minBytes = 1, keepHot = 1) == 3)
+    import scala.jdk.CollectionConverters._
+    val dir = LogStore.streamDir(root, "s")
+    val names = java.nio.file.Files.list(dir).iterator().asScala.map(_.getFileName.toString).toSeq
+    assert(!names.exists(_.endsWith(".crc")), names.mkString(", "))
+    assert(LogStore.segments(root, "s").count(_.path.endsWith(".parquet")) == 4)
+    assert(LogStore.readRange(root, "s", LogId.Zero, LogStore.maxId(root, "s")) == before)
   }
 
   test("multi-stream offset recovery: flat checkpoints rejected, new streams filled") {

@@ -1,15 +1,18 @@
 package graft
 
+import org.apache.xbean.asm9.{ClassReader, ClassVisitor, Label, MethodVisitor, Opcodes}
 import org.scalatest.funsuite.AnyFunSuite
 
 import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** Keeps the session config, the function registry and the graftlog sink's
-  * staged append defined once: every entry point builds through
-  * `GraftSession`, only `GraftExpressions` (the list) and `QueryDef` (the one
-  * call per run) touch registration, and the sink has one data writer per
-  * write mode.
+/** Keeps the session config, the function registry, the graftlog sink's
+  * staged append, streaming query start and scratch directories defined
+  * once: every entry point builds through `GraftSession`, only
+  * `GraftExpressions` (the list) and `QueryDef` (the one call per run) touch
+  * registration, the sink has one data writer per write mode, every
+  * streaming query starts through `StreamHarness.start`, and every temp
+  * directory comes from `TempDirs`.
   */
 class SourceLayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -46,5 +49,44 @@ class SourceLayoutSpec extends AnyFunSuite {
     val writers = Files.readAllLines(src).asScala
       .filter(l => """(extends|with)\s+DataWriter\[InternalRow\]""".r.findFirstIn(l).isDefined)
     assert(writers.size == 2, writers.mkString("\n"))
+  }
+
+  /** Call sites of any of `names` on a class whose internal name ends with
+    * `ownerSuffix`, in the compiled main classes, as `<package dir>/<source
+    * file>:<line>`. Read from bytecode, so a call is found however the
+    * source spells or splits it.
+    */
+  private def compiledCalls(ownerSuffix: String, names: Set[String]): Seq[String] = {
+    val classes = Paths.get(GraftSession.getClass.getProtectionDomain.getCodeSource.getLocation.toURI)
+    Files.walk(classes).iterator().asScala.filter(_.toString.endsWith(".class")).toSeq.flatMap { f =>
+      val hits = Seq.newBuilder[String]
+      new ClassReader(Files.readAllBytes(f)).accept(new ClassVisitor(Opcodes.ASM9) {
+        private var where = ""
+        override def visit(version: Int, access: Int, name: String, sig: String,
+            superName: String, interfaces: Array[String]): Unit =
+          where = name.substring(0, name.lastIndexOf('/') + 1)
+        override def visitSource(source: String, debug: String): Unit = where += source
+        override def visitMethod(access: Int, name: String, desc: String, sig: String,
+            exceptions: Array[String]): MethodVisitor = new MethodVisitor(Opcodes.ASM9) {
+          private var line = 0
+          override def visitLineNumber(l: Int, start: Label): Unit = line = l
+          override def visitMethodInsn(op: Int, owner: String, m: String, d: String, itf: Boolean): Unit =
+            if (owner.endsWith(ownerSuffix) && names(m)) hits += s"$where:$line"
+        }
+      }, ClassReader.SKIP_FRAMES)
+      hits.result()
+    }.distinct.sorted
+  }
+
+  test("every streaming query starts through StreamHarness.start") {
+    val calls = compiledCalls("/DataStreamWriter", Set("start", "toTable"))
+    assert(calls.nonEmpty, "the guard sees no start at all: is it reading the right classes?")
+    val hits = calls.filterNot(_.startsWith("graft/streaming/StreamHarness.scala:"))
+    assert(hits.isEmpty, "DataStreamWriter started outside StreamHarness.start:\n" + hits.mkString("\n"))
+  }
+
+  test("createTempDirectory appears only in TempDirs") {
+    val hits = offenders("""createTempDirectory""", Set("TempDirs.scala"))
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 }
