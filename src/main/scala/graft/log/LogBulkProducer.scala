@@ -3,8 +3,6 @@ package graft.log
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-import java.nio.file.{Files, StandardCopyOption}
-
 /** Distributed explicit-timestamp bulk produce — the scale path for
   * bootstrapping a stream log from a table (event-time replay fixtures,
   * backfills, log migrations).
@@ -21,8 +19,9 @@ import java.nio.file.{Files, StandardCopyOption}
   *      on the millisecond — ids are (ms, seq), exactly what
   *      [[LogWriter.produceAllAt]] would assign for the same ordering);
   *   2. range-partition by (ms, seq) so executors own disjoint id ranges;
-  *   3. each task encodes and publishes its own segment files directly
-  *      (tmp + atomic rename, same crash contract as the single writer).
+  *   3. each task encodes and publishes its own JSONL segment files
+  *      directly through [[SegmentFormat]] (tmp + atomic rename, the same
+  *      crash contract as the single writer).
   *
   * No row ever passes through the driver. Requires a FRESH stream (empty or
   * absent): concurrent single-writer appends and bulk produce cannot both
@@ -89,31 +88,5 @@ object LogBulkProducer {
         .mode("append").save()
       n
     } finally coerced.unpersist()
-  }
-
-  /** Executor-side segment publish: unique tmp (task attempts must not
-    * clobber each other's staging) then atomic rename; returns the published
-    * path. Ids are data-derived, so a retried/speculative attempt rewrites
-    * identical content — replacing an existing segment of the same name is
-    * safe, unlike the live-writer path where a name collision means
-    * duplicate id assignment. Shared with the sink's `tsColumn` bulk write
-    * (GraftLogBulkDataWriter).
-    */
-  private[graft] def publishTaskSegment(root: String, stream: String,
-      chunk: Seq[LogEntry]): java.nio.file.Path = {
-    val dir = LogStore.streamDir(root, stream)
-    // LogStore owns the name format — SegName must keep parsing these files
-    val name = LogStore.segmentName(chunk.head.id, chunk.last.id, gzip = false)
-    val target = dir.resolve(name)
-    val tmp = dir.resolve(s".$name.${java.util.UUID.randomUUID()}.tmp")
-    val bytes = chunk.iterator.map(LogStore.encodeLine)
-      .mkString("", "\n", "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    Files.write(tmp, bytes)
-    try Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-      Files.move(tmp, target, StandardCopyOption.REPLACE_EXISTING)
-    }
-    target
   }
 }

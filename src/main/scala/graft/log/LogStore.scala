@@ -3,26 +3,31 @@ package graft.log
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.ObjectNode
 
-import java.io.File
+import graft.log.SegmentFormat.{Jsonl, JsonlGz, Parquet}
+
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
-/** On-disk layout of a stream log: `<root>/<stream>/` holds immutable JSONL
-  * segment files named `<firstId>__<lastId>.jsonl`, each a batch of entries in
-  * id order. Segments are written atomically (tmp + rename), so readers never
-  * observe partial files; the name carries the id range for file-level
+/** On-disk layout of a stream log: `<root>/<stream>/` holds immutable
+  * segment files named `<firstId>__<lastId>.<ext>`, each a batch of entries
+  * in id order. Segments are written atomically (tmp + rename), so readers
+  * never observe partial files; the name carries the id range for file-level
   * pruning, the same way the id doubles as position in the reference
   * (/root/reference/lib/redix/stream/consumer.ex:301-313).
   *
   * JSONL keeps the produce path append-cheap (mirroring XADD); `compact`
-  * merges cold segments and can gzip them (readers handle both formats), and
-  * a columnar rewrite would slot in the same way — readers prune by range,
-  * so storage-format changes are invisible to consumers.
+  * merges cold segments and can gzip them, and the cold tier rewrites to
+  * parquet. [[SegmentFormat]] owns the formats: readers prune by range, so
+  * storage-format changes are invisible to consumers.
   */
 object LogStore {
 
-  final case class Segment(path: String, first: LogId, last: LogId)
+  final case class Segment(path: String, first: LogId, last: LogId, format: SegmentFormat) {
+    def read(): Seq[LogEntry] = format.read(this)
+    def ids(): Seq[LogId] = format.ids(this)
+    def count(): Long = format.count(this)
+  }
 
   /** Writer-attached compaction policy for the log's storage tiers:
     * when the segment count reaches `triggerSegments`, run one size-tiered
@@ -44,8 +49,6 @@ object LogStore {
     require(keepHotSegments >= 0, "keepHotSegments must be >= 0")
   }
 
-  private val SegName = "^(\\d+-\\d+)__(\\d+-\\d+)\\.(jsonl(\\.gz)?|parquet|vjsonl)$".r
-
   def streamDir(root: String, stream: String): Path = Paths.get(root, stream)
 
   // directory-safe and JSON-interpolation-safe (offset wire format embeds
@@ -66,15 +69,17 @@ object LogStore {
   def exists(root: String, stream: String): Boolean =
     Files.isDirectory(streamDir(root, stream))
 
+  /** The stream's segment file names, split, from one bare `list()` of its
+    * directory: no File, Segment or sort. The listing, [[maxId]] and the
+    * writer's auto-compaction count (every produce and every trigger) share
+    * it.
+    */
+  private[log] def segmentNames(root: String, stream: String): Iterator[SegmentFormat.Named] =
+    Option(streamDir(root, stream).toFile.list()).iterator.flatten.flatMap(SegmentFormat.parseName)
+
   def segments(root: String, stream: String): Seq[Segment] = {
-    val dir = streamDir(root, stream).toFile
-    val files = Option(dir.listFiles()).getOrElse(Array.empty[File])
-    files.iterator.flatMap { f =>
-      f.getName match {
-        case SegName(a, b, _, _) => Some(Segment(f.getAbsolutePath, LogId.parse(a), LogId.parse(b)))
-        case _ => None
-      }
-    }.toSeq.sortBy(_.first)
+    val dir = streamDir(root, stream).toAbsolutePath
+    segmentNames(root, stream).map(n => n.at(dir.resolve(n.name).toString)).toSeq.sortBy(_.first)
   }
 
   /** Highest assigned id, or Zero for an empty/missing stream. Consults the
@@ -84,15 +89,10 @@ object LogStore {
     * positions, and reusing one would teleport consumers backwards.
     */
   def maxId(root: String, stream: String): LogId = {
-    // a fold over the bare names: this runs on every produce (under the
-    // stream lock) and every trigger, and needs no File, Segment or sort
-    var segMax = LogId.Zero
-    Option(streamDir(root, stream).toFile.list()).foreach(_.foreach {
-      case SegName(_, b, _, _) =>
-        val last = LogId.parse(b)
-        if (last > segMax) segMax = last
-      case _ => ()
-    })
+    val segMax = segmentNames(root, stream).foldLeft(LogId.Zero) { (m, n) =>
+      val last = LogId.parse(n.last)
+      if (last > m) last else m
+    }
     val marker = highwaterMarker(root, stream)
     if (marker > segMax) marker else segMax
   }
@@ -124,14 +124,9 @@ object LogStore {
   private def recordHighwater(root: String, stream: String): Unit = {
     val hw = maxId(root, stream)
     if (hw > LogId.Zero) {
-      val p = highwaterPath(root, stream)
       val tmp = streamDir(root, stream).resolve(".highwater.tmp")
       Files.writeString(tmp, hw.toString, StandardCharsets.UTF_8)
-      try Files.move(tmp, p, StandardCopyOption.ATOMIC_MOVE,
-        StandardCopyOption.REPLACE_EXISTING)
-      catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-        Files.move(tmp, p, StandardCopyOption.REPLACE_EXISTING)
-      }
+      SegmentFormat.publish(tmp, highwaterPath(root, stream), replace = true)
     }
   }
 
@@ -160,15 +155,18 @@ object LogStore {
     }
   }
 
+  /** Every [[encodeLine]] starts with this, the id's own text next. */
+  private[log] val IdPrefix = "{\"id\":\""
+
   /** Hand-rolled JSON encode (standard escaping, Jackson-decodable): the
     * produce path is a driver-side funnel by design (single id sequencer), so
     * per-line ObjectNode allocation would dominate large appends. The "id"
-    * field is always first — `idsAfterLimited` relies on that for its
+    * field is always first — the JSONL id-only scan relies on that for its
     * parse-free fast path.
     */
   def encodeLine(e: LogEntry): String = {
     val sb = new java.lang.StringBuilder(64 + 16 * e.values.size)
-    sb.append("{\"id\":\"").append(e.id.toString).append("\",\"values\":")
+    sb.append(IdPrefix).append(e.id.toString).append("\",\"values\":")
     appendValuesObject(sb, e.values)
     sb.append('}')
     sb.toString
@@ -227,7 +225,6 @@ object LogStore {
     * deviation; [[decodeLine]] then falls back to Jackson.
     */
   private[graft] def decodeLineFast(line: String): LogEntry = {
-    val IdPrefix = "{\"id\":\""
     require(line.startsWith(IdPrefix), "unexpected prefix")
     var i = IdPrefix.length
     val idEnd = line.indexOf('"', i)
@@ -287,48 +284,8 @@ object LogStore {
     LogEntry(id, values.result())
   }
 
-  private def segmentLines(path: String): Seq[String] = {
-    val lines =
-      if (path.endsWith(".gz")) {
-        val in = new java.io.BufferedReader(new java.io.InputStreamReader(
-          new java.util.zip.GZIPInputStream(Files.newInputStream(Paths.get(path))),
-          StandardCharsets.UTF_8))
-        try Iterator.continually(in.readLine()).takeWhile(_ != null).toList
-        finally in.close()
-      } else Files.readAllLines(Paths.get(path), StandardCharsets.UTF_8).asScala.toSeq
-    lines.filter(_.nonEmpty)
-  }
-
-  def readSegment(path: String): Seq[LogEntry] =
-    if (path.endsWith(".parquet")) ParquetSegments.read(path)
-    else if (path.endsWith(".vjsonl")) readValuesSegment(path)
-    else segmentLines(path).map(decodeLine)
-
-  /** Id range declared by a segment's file name. */
-  private def nameRange(path: String): (LogId, LogId) =
-    Paths.get(path).getFileName.toString match {
-      case SegName(a, b, _, _) => (LogId.parse(a), LogId.parse(b))
-      case other => throw new IllegalArgumentException(s"bad segment name: $other")
-    }
-
-  /** Decode a values-only segment: ids are derived as
-    * `(first.millis, first.seq + lineNumber)` from the filename range, which
-    * the publisher guarantees spans exactly one millisecond and exactly the
-    * file's line count (both re-validated here — a mismatch means a corrupt
-    * publish and must fail loudly, not mis-assign ids).
-    */
-  private def readValuesSegment(path: String): Seq[LogEntry] = {
-    val (first, last) = nameRange(path)
-    require(first.millis == last.millis,
-      s"vjsonl segment spans several milliseconds: $path")
-    val lines = segmentLines(path)
-    require(lines.size.toLong == last.seq - first.seq + 1,
-      s"vjsonl segment $path declares ${last.seq - first.seq + 1} entries " +
-        s"but holds ${lines.size} lines")
-    lines.iterator.zipWithIndex.map { case (l, i) =>
-      LogEntry(LogId(first.millis, first.seq + i), decodeValuesLine(l))
-    }.toSeq
-  }
+  /** Every entry of the segment at `path` (see [[SegmentFormat.read]]). */
+  def readSegment(path: String): Seq[LogEntry] = SegmentFormat.at(path).read()
 
   /** Entries with start < id <= end across all segments, in id order.
     * Deduped by id so a reader racing a compaction (old + merged segments
@@ -337,7 +294,7 @@ object LogStore {
   def readRange(root: String, stream: String, start: LogId, end: LogId): Seq[LogEntry] =
     segments(root, stream)
       .filter(s => s.last > start && s.first <= end)
-      .flatMap(s => readSegment(s.path))
+      .flatMap(_.read())
       .filter(e => e.id > start && e.id <= end)
       .distinctBy(_.id)
       .sortBy(_.id)
@@ -353,40 +310,25 @@ object LogStore {
         val i = wanted.search(s.first).insertionPoint
         i < wanted.size && wanted(i) <= s.last
       }
-      .iterator.flatMap(s => readSegment(s.path).filter(e => ids.contains(e.id)))
+      .iterator.flatMap(_.read().filter(e => ids.contains(e.id)))
       .map(e => e.id -> e).toMap
   }
 
   /** Ids (only) of the first `limit` entries after `start` — what the
-    * admission-control cutoff actually needs. Fast path: `encodeLine` always
-    * writes the id first, so the id is a fixed-prefix substring and no JSON
-    * parse is required; any line not matching falls back to full decode.
+    * admission-control cutoff actually needs, through each format's id-only
+    * scan ([[SegmentFormat]]).
     */
   def idsAfterLimited(root: String, stream: String, start: LogId,
       limit: Int): Seq[LogId] = {
-    val IdPrefix = "{\"id\":\""
-    def lineId(line: String): LogId =
-      if (line.startsWith(IdPrefix)) {
-        val end = line.indexOf('"', IdPrefix.length)
-        LogId.parse(line.substring(IdPrefix.length, end))
-      } else decodeLine(line).id
-    def segIds(path: String): Seq[LogId] =
-      if (path.endsWith(".parquet")) ParquetSegments.read(path).map(_.id)
-      else if (path.endsWith(".vjsonl")) {
-        // ids are fully determined by the name — zero file IO
-        val (first, last) = nameRange(path)
-        (first.seq to last.seq).map(LogId(first.millis, _))
-      }
-      else segmentLines(path).map(lineId)
     val out = scala.collection.mutable.ArrayBuffer.empty[LogId]
-    val segs = segments(root, stream).filter(_.last > start)
-    val it = segs.iterator
-    while (out.size < limit && it.hasNext) {
-      val seg = it.next()
-      out ++= segIds(seg.path).filter(_ > start)
-    }
+    val it = segments(root, stream).iterator.filter(_.last > start)
+    while (out.size < limit && it.hasNext) out ++= it.next().ids().filter(_ > start)
     out.toSeq.distinct.sorted.take(limit)
   }
+
+  /** The entries of `segs`, each once, in id order. */
+  private def merged(segs: Seq[Segment]): Seq[LogEntry] =
+    segs.flatMap(_.read()).distinctBy(_.id).sortBy(_.id)
 
   /** Merge all segments whose id range is entirely <= `upTo` into one
     * segment. Readers are never wrong during compaction: the new segment is
@@ -399,14 +341,7 @@ object LogStore {
   def compact(root: String, stream: String, upTo: LogId, gzip: Boolean = false): Int = {
     val segs = segments(root, stream).filter(_.last <= upTo)
     if (segs.size < 2) 0
-    else {
-      val entries = segs.flatMap(s => readSegment(s.path)).distinctBy(_.id).sortBy(_.id)
-      writeSegment(root, stream, entries, gzip, overwrite = true)
-      segs.filter(s => Paths.get(s.path).getFileName.toString !=
-        segmentName(entries.head.id, entries.last.id, gzip))
-        .foreach(s => Files.deleteIfExists(Paths.get(s.path)))
-      segs.size
-    }
+    else SegmentFormat.rewrite(segs, merged(segs), if (gzip) JsonlGz else Jsonl)
   }
 
   /** Rewrite every segment whose id range is entirely <= `upTo` into ONE
@@ -420,14 +355,8 @@ object LogStore {
     val segs = segments(root, stream).filter(_.last <= upTo)
     // a lone already-parquet segment is the fixed point: rewriting it would
     // make the natural while(compactToParquet(...) > 0) loop spin forever
-    if (segs.isEmpty || (segs.size == 1 && segs.head.path.endsWith(".parquet"))) 0
-    else {
-      val entries = segs.flatMap(s => readSegment(s.path)).distinctBy(_.id).sortBy(_.id)
-      val name = writeParquetSegment(root, stream, entries)
-      segs.filter(s => Paths.get(s.path).getFileName.toString != name)
-        .foreach(s => Files.deleteIfExists(Paths.get(s.path)))
-      segs.size
-    }
+    if (segs.isEmpty || (segs.size == 1 && segs.head.format == Parquet)) 0
+    else SegmentFormat.rewrite(segs, merged(segs), Parquet)
   }
 
   /** Rewrite each cold full-size JSONL/gzip segment to parquet IN PLACE
@@ -441,18 +370,10 @@ object LogStore {
   def freezeColdSegments(root: String, stream: String,
       minBytes: Long = 4L << 20, keepHot: Int = 2): Int = {
     val eligible = segments(root, stream).dropRight(keepHot)
-      .filter(s => !s.path.endsWith(".parquet") &&
+      .filter(s => s.format != Parquet &&
         (try Files.size(Paths.get(s.path)) >= minBytes
          catch { case _: java.io.IOException => false }))
-    eligible.foreach { s =>
-      val entries = readSegment(s.path)
-      if (entries.nonEmpty) {
-        val name = writeParquetSegment(root, stream, entries)
-        if (Paths.get(s.path).getFileName.toString != name)
-          Files.deleteIfExists(Paths.get(s.path))
-      }
-    }
-    eligible.size
+    eligible.map(s => SegmentFormat.rewrite(Seq(s), s.read(), Parquet)).sum
   }
 
   /** Size-tiered incremental compaction: merge the first run of >= `minMerge`
@@ -472,7 +393,7 @@ object LogStore {
     // a run never includes one — merging them back into JSONL would undo
     // the freeze (their compressed size is typically well below target)
     val sizes = segs.map(s => s -> (
-      if (s.path.endsWith(".parquet")) Long.MaxValue
+      if (s.format == Parquet) Long.MaxValue
       else try Files.size(Paths.get(s.path)) catch {
         case _: java.io.IOException => Long.MaxValue
       }))
@@ -497,15 +418,7 @@ object LogStore {
       } else i += 1
     }
     if (runStart < 0) 0
-    else {
-      val toMerge = run.map(_._1)
-      val entries = toMerge.flatMap(s => readSegment(s.path)).distinctBy(_.id).sortBy(_.id)
-      writeSegment(root, stream, entries, gzip = false, overwrite = true)
-      val mergedName = segmentName(entries.head.id, entries.last.id, gzip = false)
-      toMerge.filter(s => Paths.get(s.path).getFileName.toString != mergedName)
-        .foreach(s => Files.deleteIfExists(Paths.get(s.path)))
-      toMerge.size
-    }
+    else SegmentFormat.rewrite(run.map(_._1), merged(run.map(_._1)), Jsonl)
   }
 
   /** Kafka-style KEY compaction: among entries with id <= `upTo`, retain
@@ -531,24 +444,14 @@ object LogStore {
       val affected = segments(root, stream).filter(_.first <= upTo)
       if (affected.isEmpty) 0L
       else {
-        val all = affected.flatMap(s => readSegment(s.path)).sortBy(_.id)
-        val (below, above) = all.partition(_.id <= upTo)
+        val (below, above) = merged(affected).partition(_.id <= upTo)
         val latestIds = below.groupBy(_.values.getOrElse(keyField, ""))
           .map { case (_, es) => es.maxBy(_.id).id }.toSet
         val keep = below.filter(e => latestIds.contains(e.id) &&
           !e.values.get("__deleted").contains("1"))
-        val retained = (keep ++ above).sortBy(_.id)
+        val retained = keep ++ above
         val droppedN = below.size - keep.size
-        if (droppedN > 0) {
-          if (retained.nonEmpty)
-            writeSegment(root, stream, retained, gzip = false,
-              overwrite = true)
-          val newName = if (retained.isEmpty) ""
-            else segmentName(retained.head.id, retained.last.id, gzip = false)
-          affected
-            .filter(s => Paths.get(s.path).getFileName.toString != newName)
-            .foreach(s => Files.deleteIfExists(Paths.get(s.path)))
-        }
+        if (droppedN > 0) SegmentFormat.rewrite(affected, retained, Jsonl)
         droppedN.toLong
       }
     }
@@ -580,112 +483,25 @@ object LogStore {
     var dropped = 0L
     segments(root, stream).foreach { s =>
       if (s.last <= upTo) {
-        dropped += countEntries(s)
+        dropped += s.count()
         Files.deleteIfExists(Paths.get(s.path))
       } else if (s.first <= upTo) {
-        val entries = readSegment(s.path)
+        val entries = s.read()
         val keep = entries.filter(_.id > upTo)
         dropped += entries.size - keep.size
-        if (keep.size < entries.size) {
-          writeRetainedLike(root, stream, s.path, keep)
-          Files.deleteIfExists(Paths.get(s.path))
-        }
+        // in the source's own format: a frozen parquet or gzip'd straddler
+        // must not come back as plain JSONL, and a `.vjsonl` suffix stays
+        // dense within its one millisecond
+        if (keep.size < entries.size) SegmentFormat.rewrite(Seq(s), keep, s.format)
       }
     }
     dropped
   }
 
-  /** Rewrite a straddling segment's retained suffix IN THE SAME storage
-    * format as the source segment: a frozen parquet cold-tier or gzip'd
-    * segment must not silently come back as plain JSONL (that would undo
-    * [[freezeColdSegments]] until the next freeze pass). `.vjsonl` retains
-    * its values-only form — the kept suffix is contiguous within the
-    * segment's single millisecond, so the name-derived id contract holds.
+  /** Atomically append one JSONL segment holding `entries` (must be
+    * id-ordered); an existing segment of the same name fails loudly.
     */
-  private def writeRetainedLike(root: String, stream: String,
-      srcPath: String, keep: Seq[LogEntry]): Unit = {
-    if (srcPath.endsWith(".parquet")) writeParquetSegment(root, stream, keep)
-    else if (srcPath.endsWith(".vjsonl")) {
-      val dir = streamDir(root, stream)
-      val name = valuesSegmentName(keep.head.id, keep.last.id)
-      val tmp = dir.resolve(s".$name.tmp")
-      val lines = keep.map(e => encodeValuesLine(e.values)).mkString("", "\n", "\n")
-      Files.write(tmp, lines.getBytes(StandardCharsets.UTF_8))
-      Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-    } else {
-      writeSegment(root, stream, keep, gzip = srcPath.endsWith(".gz"),
-        overwrite = true)
-    }
-  }
-
-  /** Entry count of a segment without a full decode where the format allows:
-    * values-only segments derive it from the file name alone (zero IO), and
-    * parquet segments read it from the footer metadata.
-    */
-  private def countEntries(s: Segment): Long =
-    if (s.path.endsWith(".vjsonl")) s.last.seq - s.first.seq + 1
-    else if (s.path.endsWith(".parquet")) ParquetSegments.rowCount(s.path)
-    else readSegment(s.path).size.toLong
-
-  private[log] def segmentName(first: LogId, last: LogId, gzip: Boolean): String =
-    s"${first}__$last.jsonl" + (if (gzip) ".gz" else "")
-
-  private[graft] def valuesSegmentName(first: LogId, last: LogId): String =
-    s"${first}__$last.vjsonl"
-
-  /** A segment fully written to a hidden tmp file, not yet visible. */
-  final case class PreparedSegment(tmp: Path, target: Path)
-
-  /** Encode `entries` (must be id-ordered) into a hidden tmp file. Unless
-    * `overwrite` (compaction re-runs), an existing segment of the same name
-    * fails loudly — a silent ATOMIC_MOVE replace would mean two writers
-    * assigned the same id range, which the per-stream writer lock forbids.
-    */
-  def prepareSegment(root: String, stream: String, entries: Seq[LogEntry],
-      gzip: Boolean = false, overwrite: Boolean = false): PreparedSegment = {
-    require(entries.nonEmpty, "empty segment")
-    val dir = streamDir(root, stream)
-    Files.createDirectories(dir)
-    val name = segmentName(entries.head.id, entries.last.id, gzip)
-    if (!overwrite && Files.exists(dir.resolve(name)))
-      throw new IllegalStateException(
-        s"segment $name already exists for stream '$stream' — duplicate id " +
-          "assignment (two writers?); refusing to replace it")
-    val tmp = dir.resolve(s".$name.tmp")
-    val lines = entries.map(encodeLine).mkString("", "\n", "\n")
-    val bytes = lines.getBytes(StandardCharsets.UTF_8)
-    if (gzip) {
-      val out = new java.util.zip.GZIPOutputStream(Files.newOutputStream(tmp))
-      try out.write(bytes) finally out.close()
-    } else Files.write(tmp, bytes)
-    PreparedSegment(tmp, dir.resolve(name))
-  }
-
-  /** Make a prepared segment visible (one atomic rename). When publishing
-    * several segments of one append, callers MUST publish in ascending id
-    * order — readers infer "everything before what I saw is present".
-    */
-  def publishSegment(p: PreparedSegment): Unit =
-    Files.move(p.tmp, p.target, StandardCopyOption.ATOMIC_MOVE)
-
-  /** The parquet twin of [[prepareSegment]] + [[publishSegment]]: write
-    * `entries` (id-ordered, non-empty) to a hidden tmp file, then move it
-    * atomically into its range-named `.parquet` segment. Callers delete the
-    * source segments only after this returns (readers dedup the overlap by
-    * id). Returns the segment's file name.
-    */
-  private def writeParquetSegment(root: String, stream: String,
-      entries: Seq[LogEntry]): String = {
-    val dir = streamDir(root, stream)
-    val name = s"${entries.head.id}__${entries.last.id}.parquet"
-    val tmp = dir.resolve(s".$name.tmp")
-    ParquetSegments.write(tmp, entries)
-    Files.move(tmp, dir.resolve(name), StandardCopyOption.ATOMIC_MOVE)
-    name
-  }
-
-  /** Atomically write one segment holding `entries` (must be id-ordered). */
   def writeSegment(root: String, stream: String, entries: Seq[LogEntry],
-      gzip: Boolean = false, overwrite: Boolean = false): Unit =
-    publishSegment(prepareSegment(root, stream, entries, gzip, overwrite))
+      gzip: Boolean = false): Unit =
+    (if (gzip) JsonlGz else Jsonl).write(streamDir(root, stream), entries, replace = false)
 }

@@ -86,7 +86,7 @@ final class LogWriter(root: String, stream: String,
     // count only the live JSONL tier against the trigger: frozen parquet
     // segments never merge away, so including them would leave the trigger
     // permanently exceeded and run no-op compaction passes on every append
-    val live = LogStore.segments(root, stream).count(!_.path.endsWith(".parquet"))
+    val live = LogStore.segmentNames(root, stream).count(_.format != SegmentFormat.Parquet)
     if (live >= p.triggerSegments) {
       LogStore.compactTiered(root, stream, p.targetBytes, p.minMerge)
       if (p.freezeColdToParquet)
@@ -163,11 +163,11 @@ final class LogWriter(root: String, stream: String,
       import scala.concurrent.duration.DurationInt
       import scala.concurrent.{Await, ExecutionContext, Future}
       implicit val ec: ExecutionContext = LogWriter.writeEc
-      val prepared = Await.result(
-        Future.traverse(chunks)(chunk =>
-          Future(LogStore.prepareSegment(root, stream, chunk))),
+      val dir = LogStore.streamDir(root, stream)
+      val staged = Await.result(
+        Future.traverse(chunks)(chunk => Future(SegmentFormat.Jsonl.stage(dir, chunk))),
         10.minutes)
-      prepared.foreach(LogStore.publishSegment) // ascending id order
+      staged.foreach(_.publish(replace = false)) // ascending id order
     }
     maybeAutoCompact()
     entries.map(_.id)
@@ -197,18 +197,9 @@ final class LogWriter(root: String, stream: String,
       val dir = LogStore.streamDir(root, stream)
       var off = 0L
       files.foreach { case (p, c) =>
-        val target = dir.resolve(LogStore.valuesSegmentName(
-          LogId(start.millis, start.seq + off),
-          LogId(start.millis, start.seq + off + c - 1)))
-        if (java.nio.file.Files.exists(target))
-          throw new IllegalStateException(
-            s"segment ${target.getFileName} already exists for stream " +
-              s"'$stream' — duplicate id assignment (two writers?)")
-        try java.nio.file.Files.move(p, target,
-          java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-        catch { case _: java.nio.file.AtomicMoveNotSupportedException =>
-          java.nio.file.Files.move(p, target)
-        }
+        val first = LogId(start.millis, start.seq + off)
+        SegmentFormat.publish(p, dir.resolve(SegmentFormat.Values.name(
+          first, LogId(first.millis, first.seq + c - 1))), replace = false)
         off += c
       }
       maybeAutoCompact()

@@ -17,9 +17,9 @@ import org.apache.parquet.schema.{MessageType, MessageTypeParser}
   * stream), ids carry min/max column statistics, and the bytes shrink
   * several-fold versus gzip'd JSONL without losing random access.
   *
-  * Readers are format-blind: `LogStore.readSegment` dispatches on the file
-  * extension, and segment names keep the same `<first>__<last>` id-range
-  * contract, so range pruning, compaction-safe dedup and offset bookkeeping
+  * Readers are format-blind: [[SegmentFormat]] decides a segment's format
+  * from its name (`SegmentFormat.Parquet` wraps this codec), and segment
+  * names keep the same `<first>__<last>` id-range contract, so range pruning, compaction-safe dedup and offset bookkeeping
   * are untouched (SURVEY.md §1.1: the id doubles as position).
   */
 object ParquetSegments {

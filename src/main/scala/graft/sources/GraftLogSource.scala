@@ -1,6 +1,6 @@
 package graft.sources
 
-import graft.log.{LogEntry, LogId, LogStore, LogWriter}
+import graft.log.{LogEntry, LogId, LogStore, LogWriter, SegmentFormat}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.ArrayBasedMapData
@@ -588,7 +588,7 @@ final class GraftLogReaderFactory(dropTombstones: Boolean,
     val raw =
       try p.paths.iterator.flatMap(LogStore.readSegment).toSeq
       catch {
-        case _: java.io.IOException | _: java.io.UncheckedIOException =>
+        case _: java.nio.file.NoSuchFileException | _: java.io.FileNotFoundException =>
           val first = LogId.parse(p.segFirst)
           LogStore.readRange(p.root, p.stream,
             LogId(first.millis, first.seq - 1), LogId.parse(p.segLast))
@@ -748,9 +748,9 @@ final case class GraftLogBulkWriterFactory(root: String, stream: String,
   * per millisecond (starting at 1 for ms 0 — id "0-0" is LogId.Zero, the
   * position-before-everything, and must never be assigned); segments flush
   * every `SegmentEntries` rows so a huge task never buffers its whole
-  * partition. Published names are tracked for abort cleanup; REPLACEized
-  * publishes keep retried attempts idempotent (ids and content are
-  * data-derived, see the class doc above).
+  * partition. Published names are tracked for abort cleanup; publishes
+  * replace an existing segment, which keeps retried attempts idempotent
+  * (ids and content are data-derived, see the class doc above).
   */
 final class GraftLogBulkDataWriter(root: String, stream: String,
     schema: StructType, tsCol: String, segmentEntries: Int = 10000)
@@ -786,8 +786,10 @@ final class GraftLogBulkDataWriter(root: String, stream: String,
     if (buf.size >= segmentEntries) flush()
   }
 
+  // a unique tmp name per attempt: a speculative twin writes the same segment
   private def flush(): Unit = if (buf.nonEmpty) {
-    published += graft.log.LogBulkProducer.publishTaskSegment(root, stream, buf.toSeq)
+    published += SegmentFormat.Jsonl.write(LogStore.streamDir(root, stream), buf.toSeq,
+      replace = true, unique = true)
     buf.clear()
   }
 

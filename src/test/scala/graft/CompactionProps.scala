@@ -5,9 +5,11 @@ import org.scalacheck.Prop.propBoolean
 import org.scalacheck.{Gen, Prop, Properties}
 
 /** ScalaCheck law for the whole compaction family: ANY interleaving of
-  * produce batches with compact / compactTiered / freezeColdSegments /
-  * compactToParquet (random parameters) preserves exactly the produced
-  * entries, in id order, with non-overlapping sorted segment ranges. The
+  * produce batches with compact (plain or gzip) / compactTiered /
+  * freezeColdSegments / compactToParquet / trim (random parameters)
+  * preserves exactly the produced entries, in id order, with
+  * non-overlapping sorted segment ranges, and every format's id-only scan
+  * agrees with its full read. The
   * example tests in LogSourceSpec pin individual behaviors; this pins the
   * invariant every reader depends on — compaction may reorganize bytes,
   * never data.
@@ -17,7 +19,7 @@ object CompactionProps extends Properties("LogCompaction") {
   private sealed trait Op
   private case class Produce(n: Int) extends Op
   private case class StagedPublish(n: Int) extends Op
-  private case object CompactAll extends Op
+  private case class CompactAll(gzip: Boolean) extends Op
   private case class Tiered(target: Long, minMerge: Int) extends Op
   private case class Freeze(minBytes: Long, keepHot: Int) extends Op
   private case object ToParquet extends Op
@@ -27,7 +29,8 @@ object CompactionProps extends Properties("LogCompaction") {
     4 -> Gen.chooseNum(1, 40).map(Produce),
     2 -> Gen.chooseNum(1, 25).map(StagedPublish),
     1 -> Gen.choose(0.1, 0.6).map(Trim),
-    1 -> Gen.const(CompactAll),
+    1 -> Gen.const(CompactAll(gzip = false)),
+    1 -> Gen.const(CompactAll(gzip = true)),
     2 -> (for {
       t <- Gen.chooseNum(64L, 4096L)
       m <- Gen.chooseNum(2, 5)
@@ -82,7 +85,7 @@ object CompactionProps extends Properties("LogCompaction") {
             assert(dropped == k, s"trim dropped $dropped, asked for $k")
             trimmedBelow = math.max(trimmedBelow, entries(k - 1).values("i").toInt)
           }
-        case CompactAll => LogStore.compact(root, "s", LogStore.maxId(root, "s"))
+        case CompactAll(gz) => LogStore.compact(root, "s", LogStore.maxId(root, "s"), gz)
         case Tiered(t, m) => LogStore.compactTiered(root, "s", t, m)
         case Freeze(b, k) => LogStore.freezeColdSegments(root, "s", b, k)
         case ToParquet => LogStore.compactToParquet(root, "s", LogStore.maxId(root, "s"))
@@ -95,10 +98,12 @@ object CompactionProps extends Properties("LogCompaction") {
         case _ => true
       }
       val values = entries.map(_.values("i").toInt)
+      val scannedIds = LogStore.idsAfterLimited(root, "s", LogId.Zero, Int.MaxValue)
       val expected = (trimmedBelow + 1) to produced
       (entries.size == expected.size) :| s"${entries.size} entries != ${expected.size} retained" &&
         (values == expected.toList) :| "entry order/content diverged" &&
         sortedByFirst :| "segments not sorted by first id" &&
-        nonOverlapping :| "segment ranges overlap"
+        nonOverlapping :| "segment ranges overlap" &&
+        (scannedIds == entries.map(_.id)) :| "id-only scan diverged from the full read"
     }
 }

@@ -492,6 +492,47 @@ class LogSourceSpec extends AnyFunSuite {
       .map(_.values("i").toInt) == (4 to 6))
   }
 
+  test("a corrupt segment of any format fails naming stream and path; a vanished one falls back") {
+    import graft.log.{LogEntry, SegmentFormat}
+    import graft.sources.{GraftLogPartitioning, GraftLogReaderFactory}
+    import java.nio.file.{Files, Path}
+    val entries = (1 to 6).map(i => LogEntry(LogId(1000L, i.toLong), Map("i" -> i.toString)))
+    val garbage = (p: Path) => Files.writeString(p, "{not json\n" * 6)
+    val cases: Seq[(SegmentFormat, Path => Any)] = Seq(
+      SegmentFormat.Jsonl -> garbage,
+      // a truncated gzip stream ends in EOFException, an IOException that
+      // must not pass for a vanished file
+      SegmentFormat.JsonlGz -> ((p: Path) => Files.write(p, Files.readAllBytes(p).take(20))),
+      SegmentFormat.Values -> garbage,
+      SegmentFormat.Parquet -> garbage)
+    def messages(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(String.valueOf).mkString("\n")
+    cases.foreach { case (fmt, corrupt) =>
+      val root = TestSpark.tmpDir("graftlog")
+      val dir = LogStore.streamDir(root, "s")
+      val path = fmt.write(dir, entries, replace = false)
+      assert(LogStore.readSegment(path.toString) == entries, s"$fmt round trip")
+      corrupt(path)
+      val direct = intercept[IllegalStateException](LogStore.readSegment(path.toString))
+      assert(direct.getMessage.contains(path.toString) && direct.getMessage.contains("'s'"),
+        s"$fmt: ${direct.getMessage}")
+      val scan = intercept[Exception](spark.read.format("graftlog")
+        .option("path", root).option("stream", "s").load().collect())
+      assert(messages(scan).contains("IllegalStateException") &&
+        messages(scan).contains(path.toString), s"$fmt: ${messages(scan)}")
+
+      // planned, then rewritten into two other segments before the read:
+      // the reader re-lists and reads the same entries from the new files
+      fmt.write(dir, entries, replace = true)
+      val planned = GraftLogPartitioning.plan(root, "s", LogId.Zero, LogId(1000L, 6L), 1)
+      SegmentFormat.Jsonl.write(dir, entries.take(3), replace = false)
+      SegmentFormat.Jsonl.write(dir, entries.drop(3), replace = false)
+      Files.delete(path)
+      val reader = new GraftLogReaderFactory(dropTombstones = true).createReader(planned.head)
+      assert(Iterator.continually(reader.next()).takeWhile(identity).size == 6, s"$fmt fallback")
+    }
+  }
+
   test("corrupt .highwater marker fails loudly instead of disabling the guard") {
     val root = TestSpark.tmpDir("graftlog")
     val w = new LogWriter(root, "s")

@@ -7,12 +7,13 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 /** Keeps the session config, the function registry, the graftlog sink's
-  * staged append, streaming query start and scratch directories defined
-  * once: every entry point builds through `GraftSession`, only
-  * `GraftExpressions` (the list) and `QueryDef` (the one call per run) touch
-  * registration, the sink has one data writer per write mode, every
-  * streaming query starts through `StreamHarness.start`, and every temp
-  * directory comes from `TempDirs`.
+  * staged append, the log's segment formats, streaming query start and
+  * scratch directories defined once: every entry point builds through
+  * `GraftSession`, only `GraftExpressions` (the list) and `QueryDef` (the
+  * one call per run) touch registration, the sink has one data writer per
+  * write mode, only `SegmentFormat` tells formats apart by name or renames
+  * a file into a stream, every streaming query starts through
+  * `StreamHarness.start`, and every temp directory comes from `TempDirs`.
   */
 class SourceLayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -49,6 +50,24 @@ class SourceLayoutSpec extends AnyFunSuite {
     val writers = Files.readAllLines(src).asScala
       .filter(l => """(extends|with)\s+DataWriter\[InternalRow\]""".r.findFirstIn(l).isDefined)
     assert(writers.size == 2, writers.mkString("\n"))
+  }
+
+  test("only SegmentFormat decides a segment format or publishes a file in graft/{log,sources}") {
+    val files = Seq("graft/log", "graft/sources").flatMap { d =>
+      val s = Files.list(root.resolve(d))
+      try s.iterator().asScala.filter(_.toString.endsWith(".scala")).toList finally s.close()
+    }
+    assert(files.exists(_.getFileName.toString == "SegmentFormat.scala"))
+    def hits(pattern: String) = files.flatMap { p =>
+      Files.readAllLines(p).asScala.zipWithIndex.collect {
+        case (line, i) if pattern.r.findFirstIn(line).isDefined => (p.getFileName.toString, s"$p:${i + 1}: ${line.trim}")
+      }
+    }
+    val ext = hits("""endsWith\("[^"]*\.(parquet|vjsonl|gz|jsonl)"\)""")
+      .filterNot(_._1 == "SegmentFormat.scala")
+    assert(ext.isEmpty, ext.map(_._2).mkString("\n"))
+    val moves = hits("""Files\.move""")
+    assert(moves.map(_._1) == Seq("SegmentFormat.scala"), moves.map(_._2).mkString("\n"))
   }
 
   /** Call sites of any of `names` on a class whose internal name ends with
