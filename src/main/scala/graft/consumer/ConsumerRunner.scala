@@ -460,8 +460,12 @@ final class GraftConsumer(
       .option("path", cfg.logRoot)
       .option("stream", cfg.stream)
       .option("startingOffsets", cfg.resolvedStartingOffsets)
+    // parallel dispatch runs handler code in its tasks, so it fans out over
+    // the cores however few bytes a batch reads
+    val fanned = if (cfg.ordered) src
+      else src.option("minPartitions", spark.sparkContext.defaultParallelism.toString)
     val withMax = cfg.maxEntriesPerTrigger
-      .fold(src)(m => src.option("maxEntriesPerTrigger", m.toString))
+      .fold(fanned)(m => fanned.option("maxEntriesPerTrigger", m.toString))
     // blocking-poll fidelity: wait for minEntriesPerTrigger up to the
     // consumer timeout; the reference's timeout=0 means block forever
     val withMin = cfg.minEntriesPerTrigger.fold(withMax)(m => withMax

@@ -70,32 +70,59 @@ object LogStore {
     Files.isDirectory(streamDir(root, stream))
 
   /** The stream's segment file names, split, from one bare `list()` of its
-    * directory: no File, Segment or sort. The listing, [[maxId]] and the
-    * writer's auto-compaction count (every produce and every trigger) share
-    * it.
+    * directory: no File, Segment or sort. Every [[Listing]] and the writer's
+    * auto-compaction count (every produce and every trigger) share it.
     */
   private[log] def segmentNames(root: String, stream: String): Iterator[SegmentFormat.Named] =
     Option(streamDir(root, stream).toFile.list()).iterator.flatten.flatMap(SegmentFormat.parseName)
 
-  def segments(root: String, stream: String): Seq[Segment] = {
-    val dir = streamDir(root, stream).toAbsolutePath
-    segmentNames(root, stream).map(n => n.at(dir.resolve(n.name).toString)).toSeq.sortBy(_.first)
+  /** One listing of a stream directory. The head parses only each name's
+    * last id; the segments are parsed and sorted from the same names on
+    * first use. A trigger lists once: `latestOffset` reads the head, and
+    * planning and the admission-control id scan reuse the segments.
+    */
+  final class Listing private[LogStore] (root: String, stream: String,
+      names: Vector[SegmentFormat.Named]) {
+    /** Highest assigned id, or Zero for an empty/missing stream. Consults
+      * the `.highwater` marker [[trim]] leaves behind, so a FULLY trimmed
+      * stream still remembers every id it ever assigned — Redis streams keep
+      * `last-generated-id` across XTRIM for the same reason: ids double as
+      * positions, and reusing one would teleport consumers backwards.
+      */
+    lazy val head: LogId = {
+      val segMax = names.foldLeft(LogId.Zero) { (m, n) =>
+        val last = LogId.parse(n.last)
+        if (last > m) last else m
+      }
+      val marker = highwaterMarker(root, stream)
+      if (marker > segMax) marker else segMax
+    }
+
+    /** The listed segments, in id order. */
+    lazy val segments: Seq[Segment] = {
+      val dir = streamDir(root, stream).toAbsolutePath
+      names.map(n => n.at(dir.resolve(n.name).toString)).sortBy(_.first)
+    }
+
+    /** Ids (only) of the first `limit` entries after `start` — what the
+      * admission-control cutoff actually needs, through each format's
+      * id-only scan ([[SegmentFormat]]).
+      */
+    def idsAfter(start: LogId, limit: Int): Seq[LogId] = {
+      val out = scala.collection.mutable.ArrayBuffer.empty[LogId]
+      val it = segments.iterator.filter(_.last > start)
+      while (out.size < limit && it.hasNext) out ++= it.next().ids().filter(_ > start)
+      out.toSeq.distinct.sorted.take(limit)
+    }
   }
 
-  /** Highest assigned id, or Zero for an empty/missing stream. Consults the
-    * `.highwater` marker [[trim]] leaves behind, so a FULLY trimmed stream
-    * still remembers every id it ever assigned — Redis streams keep
-    * `last-generated-id` across XTRIM for the same reason: ids double as
-    * positions, and reusing one would teleport consumers backwards.
-    */
-  def maxId(root: String, stream: String): LogId = {
-    val segMax = segmentNames(root, stream).foldLeft(LogId.Zero) { (m, n) =>
-      val last = LogId.parse(n.last)
-      if (last > m) last else m
-    }
-    val marker = highwaterMarker(root, stream)
-    if (marker > segMax) marker else segMax
-  }
+  def listing(root: String, stream: String): Listing =
+    new Listing(root, stream, segmentNames(root, stream).toVector)
+
+  def segments(root: String, stream: String): Seq[Segment] = listing(root, stream).segments
+
+  /** The stream's head ([[Listing.head]]). */
+  def maxId(root: String, stream: String): LogId = listing(root, stream).head
 
   private def highwaterPath(root: String, stream: String): Path =
     streamDir(root, stream).resolve(".highwater")
@@ -312,18 +339,6 @@ object LogStore {
       }
       .iterator.flatMap(_.read().filter(e => ids.contains(e.id)))
       .map(e => e.id -> e).toMap
-  }
-
-  /** Ids (only) of the first `limit` entries after `start` — what the
-    * admission-control cutoff actually needs, through each format's id-only
-    * scan ([[SegmentFormat]]).
-    */
-  def idsAfterLimited(root: String, stream: String, start: LogId,
-      limit: Int): Seq[LogId] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[LogId]
-    val it = segments(root, stream).iterator.filter(_.last > start)
-    while (out.size < limit && it.hasNext) out ++= it.next().ids().filter(_ > start)
-    out.toSeq.distinct.sorted.take(limit)
   }
 
   /** The entries of `segs`, each once, in id order. */

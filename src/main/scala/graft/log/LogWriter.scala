@@ -35,7 +35,9 @@ final class LogWriter(root: String, stream: String,
     compaction: Option[LogStore.CompactionPolicy] = None) {
 
   LogStore.ensureStream(root, stream)
-  private var last: LogId = LogStore.maxId(root, stream)
+  // the high-water id; every assignment first refreshes it from disk under
+  // the stream lock (withStreamLock), so the constructor need not read it
+  private var last: LogId = LogId.Zero
 
   // `autoCompactSegments` is the shorthand for the default tiered policy;
   // a full CompactionPolicy adds the parquet cold tier

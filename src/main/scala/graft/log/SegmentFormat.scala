@@ -103,9 +103,27 @@ object SegmentFormat {
     override protected def decodeIds(seg: Segment): Seq[LogId] =
       (seg.first.seq to seg.last.seq).map(LogId(seg.first.millis, _))
     override protected def decodeCount(seg: Segment): Long = seg.last.seq - seg.first.seq + 1
-    protected def encode(file: Path, entries: Seq[LogEntry]): Unit =
-      Files.write(file, entries.map(e => LogStore.encodeValuesLine(e.values))
-        .mkString("", "\n", "\n").getBytes(UTF_8))
+    protected def encode(file: Path, entries: Seq[LogEntry]): Unit = {
+      val w = new StagedWriter(file)
+      try entries.foreach(e => w.write(e.values)) finally w.close()
+    }
+
+    /** A values-only file written one payload at a time, before any id
+      * exists: how a sink task stages its rows. [[LogWriter.publishStagedValues]]
+      * later names it into a reserved id range.
+      */
+    final class StagedWriter(val file: Path) {
+      private val out = Files.newBufferedWriter(file, UTF_8)
+      private var n = 0L
+      def write(values: Map[String, String]): Unit = {
+        out.write(LogStore.encodeValuesLine(values))
+        out.write('\n')
+        n += 1
+      }
+      /** Payloads written so far. */
+      def count: Long = n
+      def close(): Unit = out.close()
+    }
   }
 
   /** Columnar cold tier ([[ParquetSegments]] is the codec); the count comes

@@ -278,9 +278,10 @@ final class GraftLogScan(root: String, options: CaseInsensitiveStringMap,
         // end at the last seq of the upper-bound millisecond — segment
         // planning prunes by file-name id range before any file is opened
         val start = tsLowerMillis.map(LogId.startBefore).getOrElse(LogId.Zero)
-        val maxId = LogStore.maxId(root, st)
-        val end = tsUpperMillis.map(m => LogId(m, Long.MaxValue)).filter(_ < maxId).getOrElse(maxId)
-        GraftLogPartitioning.plan(root, st, start, end, minPartitions(options))
+        val listed = LogStore.listing(root, st)
+        val end = tsUpperMillis.map(m => LogId(m, Long.MaxValue)).filter(_ < listed.head)
+          .getOrElse(listed.head)
+        GraftLogPartitioning.plan(root, st, listed, start, end, GraftLogPartitioning.floor(options))
       }
     }
     override def createReaderFactory(): PartitionReaderFactory =
@@ -294,8 +295,6 @@ final class GraftLogScan(root: String, options: CaseInsensitiveStringMap,
     // is the explicit `startingTimestamp` option instead.
     new GraftLogMicroBatchStream(root, GraftLogSource.stream(options), options, required)
 
-  private def minPartitions(o: CaseInsensitiveStringMap): Int =
-    o.getInt("minPartitions", 16)
   private def dropTombstones(o: CaseInsensitiveStringMap): Boolean =
     o.getBoolean("dropTombstones", true)
 }
@@ -383,6 +382,8 @@ final class GraftLogMicroBatchStream(root: String, stream: String,
   override def prepareForTriggerAvailableNow(): Unit =
     availableNowCap = Some(streams.map(st => st -> LogStore.maxId(root, st)).toMap)
 
+  private val minPartitions = GraftLogPartitioning.floor(options)
+
   private def initialIdFor(st: String): LogId = {
     val byTs = Option(options.get("startingTimestamp"))
     val byOff = Option(options.get("startingOffsets"))
@@ -416,16 +417,17 @@ final class GraftLogMicroBatchStream(root: String, stream: String,
     throw new UnsupportedOperationException(
       "latestOffset(Offset, ReadLimit) should be called instead")
 
-  // Per-stream live heads as the latest latestOffset read them, so that
-  // reportLatestOffset in the same trigger need not list every stream again
-  // (the Kafka source keeps latestPartitionOffsets for the same reason).
-  private val liveHeads = new java.util.concurrent.ConcurrentHashMap[String, LogId]()
+  // Per stream, the listing the latest latestOffset made, so that one
+  // trigger lists each stream once: reportLatestOffset reports its head, and
+  // planInputPartitions plans from its segments (the Kafka source keeps
+  // latestPartitionOffsets for the same reason).
+  private val listings = new java.util.concurrent.ConcurrentHashMap[String, LogStore.Listing]()
 
-  private def cappedMax(st: String): LogId = {
-    val liveMax = LogStore.maxId(root, st)
-    liveHeads.put(st, liveMax)
+  private def cappedMax(st: String): (LogId, LogStore.Listing) = {
+    val listed = LogStore.listing(root, st)
+    listings.put(st, listed)
     // under Trigger.AvailableNow, never read past the frozen cap
-    availableNowCap.flatMap(_.get(st)).filter(_ < liveMax).getOrElse(liveMax)
+    (availableNowCap.flatMap(_.get(st)).filter(_ < listed.head).getOrElse(listed.head), listed)
   }
 
   override def latestOffset(start: Offset, limit: ReadLimit): Offset = {
@@ -441,7 +443,7 @@ final class GraftLogMicroBatchStream(root: String, stream: String,
     val maxOpt = parts.collectFirst { case r: ReadMaxRows => r }
     val clampInt = (v: Long) => math.min(math.max(v, 1L), (Int.MaxValue - 1).toLong)
     if (minGate.isEmpty && maxOpt.isEmpty)
-      return GraftLogOffset(streams.map(st => st -> cappedMax(st)).toMap)
+      return GraftLogOffset(streams.map(st => st -> cappedMax(st)._1).toMap)
     // one ids-only pass per stream serves BOTH decisions: the availability
     // count for the min gate and the quota cut for the max bound (a gate
     // that then re-fetched for the quota would double the driver's
@@ -453,9 +455,8 @@ final class GraftLogMicroBatchStream(root: String, stream: String,
     val fetchLimit = clampInt(math.max(
       quota.map(_.toLong + 1L).getOrElse(1L), minNeed.toLong)).toInt
     val cuts: Seq[(String, Seq[LogId], LogId)] = streams.map { st =>
-      val max = cappedMax(st)
-      val ids = LogStore.idsAfterLimited(root, st, startOff.id(st), fetchLimit)
-      (st, ids.filter(_ <= max), max)
+      val (max, listed) = cappedMax(st)
+      (st, listed.idsAfter(startOff.id(st), fetchLimit).filter(_ <= max), max)
     }
     val gated = minGate.exists { mn =>
       val now = System.currentTimeMillis()
@@ -486,14 +487,20 @@ final class GraftLogMicroBatchStream(root: String, stream: String,
     */
   override def reportLatestOffset(): Offset =
     GraftLogOffset(streams.map(st =>
-      st -> Option(liveHeads.get(st)).getOrElse(LogStore.maxId(root, st))).toMap)
+      st -> Option(listings.get(st)).fold(LogStore.maxId(root, st))(_.head)).toMap)
 
+  /** Plans from this trigger's listing when its head covers `end`: segments
+    * publish in id order, so every segment up to a listed head was listed (a
+    * compaction since then is the reader's re-list fallback). A batch it
+    * does not cover, as after a restart or in a WAL replay, lists again.
+    */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val s0 = start.asInstanceOf[GraftLogOffset]
     val s1 = end.asInstanceOf[GraftLogOffset]
     streams.toArray.flatMap { st =>
-      GraftLogPartitioning.plan(root, st, s0.id(st), s1.id(st),
-        options.getInt("minPartitions", 16))
+      val listed = Option(listings.get(st)).filter(_.head >= s1.id(st))
+        .getOrElse(LogStore.listing(root, st))
+      GraftLogPartitioning.plan(root, st, listed, s0.id(st), s1.id(st), minPartitions)
     }
   }
 
@@ -534,21 +541,65 @@ final case class GraftLogInputPartition(root: String, stream: String,
     paths: Seq[String], startExcl: String, endIncl: String,
     segFirst: String, segLast: String) extends InputPartition
 
+/** Sizes a scan's partitions from the bytes they read, by the rule of
+  * Spark's own file scans and with its two settings: each segment costs
+  * its file length plus `spark.sql.files.openCostInBytes`, and segments pack
+  * in id order into runs of at most `spark.sql.files.maxPartitionBytes`. So
+  * a small tail trigger is one task and a large replay splits, whatever the
+  * core count. `minPartitions` (default 1) is a floor on the run count, up
+  * to one run per segment.
+  */
 object GraftLogPartitioning {
-  def plan(root: String, stream: String, start: LogId, end: LogId,
+  def floor(o: CaseInsensitiveStringMap): Int = {
+    val n = o.getInt("minPartitions", 1)
+    require(n >= 1, s"minPartitions must be >= 1, got $n")
+    n
+  }
+
+  /** The segments of `listed` that overlap `(start, end]`, as runs. */
+  def plan(root: String, stream: String, listed: LogStore.Listing, start: LogId, end: LogId,
       minPartitions: Int): Array[InputPartition] = {
-    val segs = LogStore.segments(root, stream)
-      .filter(s => s.last > start && s.first <= end)
-    if (segs.isEmpty) Array.empty
-    else {
-      val groups = math.max(1, math.min(minPartitions, segs.size))
-      val per = math.ceil(segs.size.toDouble / groups).toInt
-      segs.grouped(per).map { g =>
-        GraftLogInputPartition(root, stream, g.map(_.path),
-          start.toString, end.toString,
-          g.head.first.toString, g.last.last.toString): InputPartition
-      }.toArray
+    val segs = listed.segments.filter(s => s.last > start && s.first <= end).toIndexedSeq
+    val conf = org.apache.spark.sql.internal.SQLConf.get
+    // a segment deleted since the listing weighs nothing here; its reader
+    // re-lists (GraftLogReaderFactory)
+    val bytes = segs.map { s =>
+      conf.filesOpenCostInBytes + (try java.nio.file.Files.size(java.nio.file.Paths.get(s.path))
+        catch { case _: java.io.IOException => 0L })
     }
+    runs(bytes, conf.filesMaxPartitionBytes, minPartitions).map { r =>
+      val g = segs.slice(r.start, r.end)
+      GraftLogInputPartition(root, stream, g.map(_.path), start.toString, end.toString,
+        g.head.first.toString, g.last.last.toString): InputPartition
+    }.toArray
+  }
+
+  /** Cuts `bytes` (one weight per segment, in id order) into contiguous
+    * runs: greedily, each run closing before it would pass `maxBytes` (a
+    * segment heavier than that is a run alone). When that gives fewer runs
+    * than `min(floor, segments)`, cuts instead at the byte quantiles into
+    * exactly that many.
+    */
+  private[sources] def runs(bytes: IndexedSeq[Long], maxBytes: Long, floor: Int): Seq[Range] = {
+    val n = bytes.size
+    val want = math.min(floor, n)
+    val greedy = scala.collection.mutable.ArrayBuffer.empty[Int]
+    var acc = 0L
+    bytes.indices.foreach { i =>
+      if (i == 0 || acc + bytes(i) > maxBytes) { greedy += i; acc = 0L }
+      acc += bytes(i)
+    }
+    val starts: Seq[Int] =
+      if (greedy.size >= want) greedy.toSeq
+      else {
+        val before = bytes.scanLeft(0L)(_ + _) // before(i) = bytes of segments 0 until i
+        val total = before(n).toDouble
+        (1 until want).scanLeft(0) { (prev, k) =>
+          val at = before.search(math.ceil(total * k / want).toLong).insertionPoint
+          math.min(math.max(at, prev + 1), n - (want - k))
+        }
+      }
+    (starts :+ n).sliding(2).collect { case Seq(a, b) => a until b }.toSeq
   }
 }
 
@@ -940,11 +991,11 @@ object GraftLogWritePath {
       }
 }
 
-/** Executor-side append writer: encodes each row's payload into staged
-  * values-only (`.vjsonl`) files under `<target streamDir>/.staging/` — the
-  * full segment bytes are produced HERE, on the executor; the driver's commit
-  * only reserves each target's id range and renames the staged files into
-  * place ([[graft.log.LogWriter.publishStagedValues]]). With one target
+/** Executor-side append writer: stages each row's payload in values-only
+  * files ([[graft.log.SegmentFormat.Values.StagedWriter]]) under
+  * `<target streamDir>/.staging/` — the full segment bytes are produced
+  * HERE, on the executor; the driver's commit only reserves each target's
+  * id range and renames the staged files into place ([[graft.log.LogWriter.publishStagedValues]]). With one target
   * every row goes there; a sharded stream routes each row by the
   * deterministic hash of its `shardKey` value. Chunked every
   * `maxSegmentEntries` rows per target so one huge task still yields
@@ -965,29 +1016,22 @@ final class GraftLogStagedDataWriter(root: String, targets: Seq[String],
   }.toArray
   private val files =
     Array.fill(n)(scala.collection.mutable.ArrayBuffer.empty[(String, Long)])
-  private val out = new Array[java.io.Writer](n)
-  private val current = new Array[Path](n)
-  private val counts = new Array[Long](n)
+  private val out = new Array[SegmentFormat.Values.StagedWriter](n)
 
   private def roll(k: Int): Unit = if (out(k) != null) {
-    out(k).close(); out(k) = null
-    files(k) += ((current(k).toString, counts(k)))
-    current(k) = null
+    out(k).close()
+    files(k) += ((out(k).file.toString, out(k).count))
+    out(k) = null
   }
 
   override def write(record: InternalRow): Unit = {
     val payload = GraftLogWritePath.toPayload(schema, record)
     val k = shardKey.fold(0)(key => GraftLogSource.shardOf(payload.getOrElse(key, ""), n))
-    if (out(k) == null) {
-      current(k) = stagingDirs(k).resolve(
-        s"${GraftLogWritePath.stagingPrefix(queryId)}${java.util.UUID.randomUUID()}.vjsonl")
-      out(k) = Files.newBufferedWriter(current(k), java.nio.charset.StandardCharsets.UTF_8)
-      counts(k) = 0L
-    }
-    out(k).write(LogStore.encodeValuesLine(payload))
-    out(k).write('\n')
-    counts(k) += 1
-    if (counts(k) >= maxSegmentEntries) roll(k)
+    if (out(k) == null)
+      out(k) = new SegmentFormat.Values.StagedWriter(stagingDirs(k).resolve(
+        s"${GraftLogWritePath.stagingPrefix(queryId)}${java.util.UUID.randomUUID()}.vjsonl"))
+    out(k).write(payload)
+    if (out(k).count >= maxSegmentEntries) roll(k)
   }
 
   override def commit(): WriterCommitMessage = {
@@ -997,11 +1041,9 @@ final class GraftLogStagedDataWriter(root: String, targets: Seq[String],
   }
 
   override def abort(): Unit = {
-    (0 until n).foreach { k =>
-      if (out(k) != null) { out(k).close(); out(k) = null }
-    }
-    (files.iterator.flatMap(_.iterator.map(_._1)) ++
-      current.iterator.filter(_ != null).map(_.toString))
+    val open = out.iterator.filter(_ != null).map { w => w.close(); w.file.toString }.toList
+    (0 until n).foreach(out(_) = null)
+    (files.iterator.flatMap(_.iterator.map(_._1)) ++ open)
       .foreach(p => try Files.deleteIfExists(Paths.get(p))
         catch { case _: java.io.IOException => () })
   }

@@ -98,7 +98,7 @@ object CompactionProps extends Properties("LogCompaction") {
         case _ => true
       }
       val values = entries.map(_.values("i").toInt)
-      val scannedIds = LogStore.idsAfterLimited(root, "s", LogId.Zero, Int.MaxValue)
+      val scannedIds = LogStore.listing(root, "s").idsAfter(LogId.Zero, Int.MaxValue)
       val expected = (trimmedBelow + 1) to produced
       (entries.size == expected.size) :| s"${entries.size} entries != ${expected.size} retained" &&
         (values == expected.toList) :| "entry order/content diverged" &&

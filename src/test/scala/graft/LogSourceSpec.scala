@@ -316,7 +316,7 @@ class LogSourceSpec extends AnyFunSuite {
     val segs = LogStore.segments(root, "s")
     assert(segs.size == 3, s"expected 3 chunked segments, got ${segs.size}")
     // ids-only fast path derives vjsonl ids from the name with zero file IO
-    val ids = LogStore.idsAfterLimited(root, "s", LogId.Zero, 25)
+    val ids = LogStore.listing(root, "s").idsAfter(LogId.Zero, 25)
     assert(ids.size == 25 && ids == ids.sorted)
     assert(LogStore.readRange(root, "s", LogId.Zero, LogStore.maxId(root, "s"))
       .map(_.values("n")).map(_.toInt) == (0 until 25))
@@ -524,7 +524,8 @@ class LogSourceSpec extends AnyFunSuite {
       // planned, then rewritten into two other segments before the read:
       // the reader re-lists and reads the same entries from the new files
       fmt.write(dir, entries, replace = true)
-      val planned = GraftLogPartitioning.plan(root, "s", LogId.Zero, LogId(1000L, 6L), 1)
+      val planned = GraftLogPartitioning.plan(root, "s", LogStore.listing(root, "s"),
+        LogId.Zero, LogId(1000L, 6L), 1)
       SegmentFormat.Jsonl.write(dir, entries.take(3), replace = false)
       SegmentFormat.Jsonl.write(dir, entries.drop(3), replace = false)
       Files.delete(path)
@@ -1484,4 +1485,170 @@ class LogSourceSpec extends AnyFunSuite {
     assert(reported(drain) == LogStore.maxId(root, "s"))
     assert(reported(drain) > frozen)
   }
+
+  // --- scan planning: partitions sized from the bytes they read ---
+
+  /** `segments` single-entry segments of stream "s", one per millisecond. */
+  private def tinySegments(segments: Int, payload: String = ""): String = {
+    val root = TestSpark.tmpDir("graftlog")
+    var now = 1000L
+    val w = new LogWriter(root, "s", () => now)
+    (1 to segments).foreach { i => now += 1; w.produce(Map("n" -> i, "p" -> payload)) }
+    root
+  }
+
+  /** Every entry id the planned partitions read, partition by partition. */
+  private def readIds(parts: Seq[org.apache.spark.sql.connector.read.InputPartition]): Seq[LogId] = {
+    val f = new graft.sources.GraftLogReaderFactory(dropTombstones = true)
+    parts.flatMap { p =>
+      val r = f.createReader(p)
+      Iterator.continually(r.next()).takeWhile(identity)
+        .map(_ => LogId.parse(r.get().getUTF8String(1).toString)).toList
+    }
+  }
+
+  private def segPaths(parts: Seq[org.apache.spark.sql.connector.read.InputPartition]): Seq[Seq[String]] =
+    parts.map(_.asInstanceOf[graft.sources.GraftLogInputPartition].paths)
+
+  /** Runs `f` with `confs` set in a session of its own, active on this thread. */
+  private def withFileConfs[T](confs: (String, String)*)(f: org.apache.spark.sql.SparkSession => T): T = {
+    import org.apache.spark.sql.SparkSession
+    val s = spark.newSession()
+    confs.foreach { case (k, v) => s.conf.set(k, v) }
+    val before = SparkSession.getActiveSession
+    SparkSession.setActiveSession(s)
+    try f(s)
+    finally before.fold(SparkSession.clearActiveSession())(SparkSession.setActiveSession)
+  }
+
+  test("25 tiny segments plan one partition, batch and streaming") {
+    import graft.sources.{GraftLogMicroBatchStream, GraftLogPartitioning, GraftLogScanBuilder}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import scala.jdk.CollectionConverters._
+    val root = tinySegments(25)
+    val head = LogStore.maxId(root, "s")
+    assert(LogStore.segments(root, "s").size == 25)
+    assert(GraftLogPartitioning.plan(root, "s", LogStore.listing(root, "s"), LogId.Zero, head, 1)
+      .length == 1)
+    val opts = new CaseInsensitiveStringMap(Map("path" -> root, "stream" -> "s",
+      "startingOffsets" -> "earliest").asJava)
+    val batch = new GraftLogScanBuilder(root, opts).build().toBatch.planInputPartitions()
+    assert(batch.length == 1)
+    assert(readIds(batch.toSeq) == LogStore.readRange(root, "s", LogId.Zero, head).map(_.id))
+    val m = new GraftLogMicroBatchStream(root, "s", opts)
+    val start = m.initialOffset()
+    val parts = m.planInputPartitions(start, m.latestOffset(start, m.getDefaultReadLimit))
+    assert(parts.length == 1 && readIds(parts.toSeq).size == 25)
+    assert(spark.read.format("graftlog").option("path", root).option("stream", "s")
+      .load().rdd.getNumPartitions == 1)
+  }
+
+  test("segments past one split plan contiguous id runs covering every segment in order") {
+    import graft.sources.GraftLogPartitioning
+    val root = tinySegments(30, payload = "x" * 400)
+    val segs = LogStore.segments(root, "s")
+    val size = (p: String) => java.nio.file.Files.size(java.nio.file.Paths.get(p))
+    val split = 3 * size(segs.head.path) + 3 // three segments of about equal size
+    withFileConfs("spark.sql.files.maxPartitionBytes" -> split.toString,
+        "spark.sql.files.openCostInBytes" -> "1") { s =>
+      val parts = GraftLogPartitioning.plan(root, "s", LogStore.listing(root, "s"), LogId.Zero,
+        LogStore.maxId(root, "s"), 1)
+      val runs = segPaths(parts.toSeq)
+      assert(runs.size > 1, s"planned ${runs.size} runs")
+      assert(runs.flatten == segs.map(_.path), "runs must cover every segment once, in id order")
+      runs.foreach(r => assert(r.size == 1 || r.map(p => size(p) + 1).sum <= split,
+        s"run of ${r.size} segments exceeds $split bytes"))
+      assert(readIds(parts.toSeq) == segs.map(_.first))
+      val df = s.read.format("graftlog").option("path", root).option("stream", "s").load()
+      assert(df.rdd.getNumPartitions == runs.size)
+      assert(df.select("seq").count() == 30)
+    }
+  }
+
+  test("an explicit minPartitions floor is honoured, up to one run per segment") {
+    import graft.sources.GraftLogPartitioning
+    val root = tinySegments(25)
+    val segs = LogStore.segments(root, "s").map(_.path)
+    val head = LogStore.maxId(root, "s")
+    Seq(1 -> 1, 4 -> 4, 7 -> 7, 25 -> 25, 100 -> 25).foreach { case (floor, want) =>
+      val runs = segPaths(GraftLogPartitioning.plan(root, "s", LogStore.listing(root, "s"),
+        LogId.Zero, head, floor).toSeq)
+      assert(runs.size == want, s"floor $floor planned ${runs.size}")
+      assert(runs.flatten == segs && runs.forall(_.nonEmpty), s"floor $floor")
+    }
+    intercept[IllegalArgumentException](spark.read.format("graftlog").option("path", root)
+      .option("stream", "s").option("minPartitions", "0").load().collect())
+  }
+
+  test("a segment deleted between listing and planning does not fail the plan") {
+    import graft.sources.GraftLogPartitioning
+    val root = tinySegments(12)
+    val head = LogStore.maxId(root, "s")
+    val listed = LogStore.listing(root, "s")
+    assert(listed.segments.size == 12)
+    // merge the first six into one file, deleting them, after the listing
+    assert(LogStore.compact(root, "s", LogId(1006L, 0L)) == 6)
+    val parts = GraftLogPartitioning.plan(root, "s", listed, LogId.Zero, head, 4)
+    assert(parts.length == 4)
+    assert(readIds(parts.toSeq) == (1001L to 1012L).map(LogId(_, 0L)))
+  }
+
+  test("a compaction between latestOffset and planInputPartitions delivers every entry once") {
+    import graft.sources.GraftLogMicroBatchStream
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import scala.jdk.CollectionConverters._
+    val root = tinySegments(12)
+    val m = new GraftLogMicroBatchStream(root, "s", new CaseInsensitiveStringMap(Map(
+      "path" -> root, "stream" -> "s", "startingOffsets" -> "earliest",
+      "minPartitions" -> "3").asJava))
+    val start = m.initialOffset()
+    val end = m.latestOffset(start, m.getDefaultReadLimit)
+    assert(LogStore.compact(root, "s", LogId(1009L, 0L)) == 9)
+    val parts = m.planInputPartitions(start, end)
+    assert(parts.length == 3)
+    assert(readIds(parts.toSeq) == (1001L to 1012L).map(LogId(_, 0L)))
+  }
+
+  test("a graftlog pipe over many tiny segments keeps id order") {
+    val root = tinySegments(60)
+    val q = spark.readStream.format("graftlog").option("path", root).option("stream", "s")
+      .option("startingOffsets", "earliest").load().select("values")
+      .writeStream.format("graftlog").option("path", root).option("stream", "out")
+      .option("checkpointLocation", TestSpark.tmpDir("ckpt")).start()
+    try {
+      q.processAllAvailable()
+      var now = 2000L
+      val w = new LogWriter(root, "s", () => now)
+      (61 to 120).foreach { i => now += 1; w.produce(Map("n" -> i)) }
+      q.processAllAvailable()
+    } finally q.stop()
+    val out = LogStore.readRange(root, "out", LogId.Zero, LogStore.maxId(root, "out"))
+    assert(out.map(_.values("n").toInt) == (1 to 120))
+  }
+
+  test("a parallel-mode consumer still dispatches over more than one partition") {
+    import graft.consumer.{ConsumerConfig, GraftConsumer}
+    import scala.jdk.CollectionConverters._
+    val root = tinySegments(40)
+    LogSourceSpec.dispatchPartitions.clear()
+    val c = new GraftConsumer(spark, ConsumerConfig(root, "s", TestSpark.tmpDir("ckpt"),
+      groupName = Some("g"), startPos = "earliest", ordered = false), LogSourceSpec.partitionHandler)
+    val q = c.start()
+    try q.processAllAvailable() finally c.stop()
+    val seen = LogSourceSpec.dispatchPartitions.asScala.toMap
+    assert(seen.values.sum == 40)
+    assert(seen.size > 1, s"dispatched over partitions ${seen.keys.mkString(",")}")
+  }
+}
+
+object LogSourceSpec {
+  import graft.consumer.HandlerResult
+  // handler tasks run in-JVM under local[*]; a static map counts their
+  // dispatches per partition (the handler must be serializable)
+  val dispatchPartitions = new java.util.concurrent.ConcurrentHashMap[Int, Int]()
+  val partitionHandler: (String, Option[String], String, Map[String, String]) => HandlerResult =
+    (_, _, _, _) => {
+      dispatchPartitions.merge(org.apache.spark.TaskContext.getPartitionId(), 1, _ + _)
+      HandlerResult.Ok
+    }
 }

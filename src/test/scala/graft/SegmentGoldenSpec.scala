@@ -1,20 +1,19 @@
 package graft
 
-import graft.log.{LogEntry, LogId, LogStore, LogWriter}
+import graft.log.{LogEntry, LogId, LogStore, LogWriter, SegmentFormat}
 import graft.sources.GraftLogBulkDataWriter
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.{LongType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalatest.funsuite.AnyFunSuite
 
-import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path}
 import scala.jdk.CollectionConverters._
 
 /** Golden on-disk bytes: one fixed entry list written through every segment
-  * writer (live append, chunked append, gzip, values-only staged publish,
-  * bulk task publish, and the trim/compaction rewrites) must produce exactly
-  * these file names and SHA-256s. Existing logs and the checkpoints that
+  * writer (live append, chunked append, gzip, the sink task's values-only
+  * staged file and its publish, bulk task publish, and the trim/compaction
+  * rewrites) must produce exactly these file names and SHA-256s. Existing logs and the checkpoints that
   * point into them depend on the names and the bytes not drifting. Parquet
   * embeds its writer's version, so it is pinned by names and decoded
   * entries only.
@@ -50,10 +49,10 @@ class SegmentGoldenSpec extends AnyFunSuite {
   private def stage(root: String, stream: String, chunk: Seq[Map[String, String]]): (Path, Long) = {
     val staging = LogStore.streamDir(root, stream).resolve(".staging")
     Files.createDirectories(staging)
-    val f = staging.resolve(s"${java.util.UUID.randomUUID()}.vjsonl")
-    Files.write(f, chunk.map(LogStore.encodeValuesLine).mkString("", "\n", "\n")
-      .getBytes(StandardCharsets.UTF_8))
-    (f, chunk.size.toLong)
+    val w = new SegmentFormat.Values.StagedWriter(
+      staging.resolve(s"${java.util.UUID.randomUUID()}.vjsonl"))
+    try chunk.foreach(w.write) finally w.close()
+    (w.file, w.count)
   }
 
   // computed from the writers as they were before the segment-format module

@@ -12,8 +12,9 @@ import scala.jdk.CollectionConverters._
   * `GraftSession`, only `GraftExpressions` (the list) and `QueryDef` (the
   * one call per run) touch registration, the sink has one data writer per
   * write mode, only `SegmentFormat` tells formats apart by name or renames
-  * a file into a stream, every streaming query starts through
-  * `StreamHarness.start`, and every temp directory comes from `TempDirs`.
+  * a file into a stream, nothing outside `graft/log` encodes a values-only
+  * line, every streaming query starts through `StreamHarness.start`, and
+  * every temp directory comes from `TempDirs`.
   */
 class SourceLayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -68,6 +69,12 @@ class SourceLayoutSpec extends AnyFunSuite {
     assert(ext.isEmpty, ext.map(_._2).mkString("\n"))
     val moves = hits("""Files\.move""")
     assert(moves.map(_._1) == Seq("SegmentFormat.scala"), moves.map(_._2).mkString("\n"))
+  }
+
+  test("only graft/log encodes a values-only line") {
+    val hits = offenders("""encodeValuesLine""", Set.empty)
+      .filterNot(_.startsWith(root.resolve("graft/log").toString + "/"))
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   /** Call sites of any of `names` on a class whose internal name ends with
