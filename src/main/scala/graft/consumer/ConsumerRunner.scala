@@ -9,6 +9,8 @@ import java.nio.ByteBuffer
 import java.nio.channels.FileChannel
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardOpenOption}
+import java.util.concurrent.TimeUnit
+import java.util.concurrent.locks.ReentrantLock
 import scala.jdk.CollectionConverters._
 
 /** Handler verdicts — the reference's contract verbatim
@@ -327,6 +329,14 @@ final class GraftConsumer(
     cfg.deadLetterStream.map(d => new graft.log.LogWriter(cfg.logRoot, d))
   @volatile private var query: Option[StreamingQuery] = None
 
+  // Held while a batch dispatches to the handler. stop() takes it (fair, so
+  // it is next when the batch releases it) and stops the query while holding
+  // it: a handler call is never cut short, and a batch that starts meanwhile
+  // blocks here before dispatching anything and is interrupted by the stop.
+  private val dispatching = new ReentrantLock(true)
+  // the last batch whose dispatch completed in this run (-1: none yet)
+  @volatile private var lastDispatched = -1L
+
   /** Manual ack for `Defer`red messages (≙ `Consumer.ack/2`,
     * /root/reference/lib/redix/stream/consumer.ex:114-124). For a
     * multi-stream consumer use the two-arg form; the one-arg form assumes
@@ -456,6 +466,7 @@ final class GraftConsumer(
         .exists { case (st, id) => floors.get(st).exists(id <= _) }
     })
     drainPending()
+    lastDispatched = -1L
     val src = spark.readStream.format("graftlog")
       .option("path", cfg.logRoot)
       .option("stream", cfg.stream)
@@ -472,70 +483,75 @@ final class GraftConsumer(
       .option("minEntriesPerTrigger", m.toString)
       .option("maxTriggerDelayMs",
         (if (cfg.timeoutMs == 0L) Long.MaxValue else cfg.timeoutMs).toString))
-    val writer = withMin.load()
+    val live = withMin.load()
       .writeStream
       .option("checkpointLocation", cfg.checkpointDir)
-      .trigger(
-        // AvailableNow ≙ drain the backlog then stop — the reference's
-        // BLOCK-until-empty consumption with a bounded lifetime
-        if (cfg.drainAndStop) Trigger.AvailableNow() else Trigger.ProcessingTime(200))
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (cfg.ordered) {
-          // Ordered, driver-side dispatch: the reference is explicitly
-          // sequential ("callbacks ... block all processing", README.md:124);
-          // analytics workloads should use the DataFrame API instead of a
-          // per-message handler, so this path is not a data plane. The rows
-          // end up on the driver anyway, so the batch is collected once and
-          // sorted here by (ts, seq), stream name breaking ties between
-          // streams: one Spark job, where a DataFrame orderBy costs three
-          // (a sampling job that scans the batch again, a shuffle and the
-          // result).
-          val rows = batch
-            .selectExpr("stream", "id", "seq", "unix_micros(ts) AS ts_us", "values")
-            .collect()
-            .sortBy(r => (r.getLong(3), r.getLong(2), r.getString(0)))
-          rows.foreach { r =>
-            dispatch(r.getString(0), r.getString(1), r.getAs[Map[String, String]](4))
-          }
-        } else {
-          // Parallel mode ≙ N consumers in one group (2A#15): partitions are
-          // disjoint id ranges processed concurrently, each task acking into
-          // its own ledger file (needs a shared FS on a real cluster).
-          // Order is per-partition, as documented in SURVEY.md §1.4.
-          val group = cfg.groupName
-          val ledgerDir = cfg.ledgerDir.map(_.toString)
-          val raise = cfg.raiseErrors
-          val multi = cfg.multiStream
-          val h = handler
-          batch.selectExpr("stream", "id", "seq", "ts", "values")
-            .sortWithinPartitions("ts", "seq")
-            .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
-              val pid = org.apache.spark.TaskContext.getPartitionId()
-              // executor-side ledgers stamp delivery times with the EXECUTOR
-              // wall clock (like Redis stamps server time) — an injected
-              // driver clock is deliberately not shipped here: it exists for
-              // deterministic driver-side tests, and a test-clock closure
-              // over mutable spec state would not serialize meaningfully
-              val ledger = ledgerDir.map(d =>
-                new AckLedger(Paths.get(d), s"p$pid"))
-              val acked = ledger.map(_.acked).getOrElse(Set.empty[String])
-              try it.foreach { r =>
-                val streamName = r.getAs[String]("stream")
-                val id = r.getAs[String]("id")
-                val key = if (multi) s"$streamName\t$id" else id
-                if (!acked.contains(key)) {
-                  h(streamName, group, id, r.getAs[Map[String, String]]("values")) match {
-                    case HandlerResult.Ok => ledger.foreach(_.ack(key))
-                    case HandlerResult.Defer => ledger.foreach(_.defer(key))
-                    case HandlerResult.Err(cause) =>
-                      // same unacked-but-pending contract as the ordered path
-                      if (raise) throw cause else ledger.foreach(_.defer(key))
-                  }
-                }
-              } finally ledger.foreach(_.close())
+    // A live consumer runs on Spark's default trigger ≙ XREADGROUP BLOCK: the
+    // next batch starts as soon as the previous one ends, and an idle source
+    // is polled every spark.sql.streaming.pollingDelay. AvailableNow ≙ drain
+    // the backlog then stop — the reference's BLOCK-until-empty consumption
+    // with a bounded lifetime.
+    val writer = (if (cfg.drainAndStop) live.trigger(Trigger.AvailableNow()) else live)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        dispatching.lockInterruptibly()
+        try {
+          if (cfg.ordered) {
+            // Ordered, driver-side dispatch: the reference is explicitly
+            // sequential ("callbacks ... block all processing", README.md:124);
+            // analytics workloads should use the DataFrame API instead of a
+            // per-message handler, so this path is not a data plane. The rows
+            // end up on the driver anyway, so the batch is collected once and
+            // sorted here by (ts, seq), stream name breaking ties between
+            // streams: one Spark job, where a DataFrame orderBy costs three
+            // (a sampling job that scans the batch again, a shuffle and the
+            // result).
+            val rows = batch
+              .selectExpr("stream", "id", "seq", "unix_micros(ts) AS ts_us", "values")
+              .collect()
+              .sortBy(r => (r.getLong(3), r.getLong(2), r.getString(0)))
+            rows.foreach { r =>
+              dispatch(r.getString(0), r.getString(1), r.getAs[Map[String, String]](4))
             }
-        }
-        ()
+          } else {
+            // Parallel mode ≙ N consumers in one group (2A#15): partitions are
+            // disjoint id ranges processed concurrently, each task acking into
+            // its own ledger file (needs a shared FS on a real cluster).
+            // Order is per-partition, as documented in SURVEY.md §1.4.
+            val group = cfg.groupName
+            val ledgerDir = cfg.ledgerDir.map(_.toString)
+            val raise = cfg.raiseErrors
+            val multi = cfg.multiStream
+            val h = handler
+            batch.selectExpr("stream", "id", "seq", "ts", "values")
+              .sortWithinPartitions("ts", "seq")
+              .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
+                val pid = org.apache.spark.TaskContext.getPartitionId()
+                // executor-side ledgers stamp delivery times with the EXECUTOR
+                // wall clock (like Redis stamps server time) — an injected
+                // driver clock is deliberately not shipped here: it exists for
+                // deterministic driver-side tests, and a test-clock closure
+                // over mutable spec state would not serialize meaningfully
+                val ledger = ledgerDir.map(d =>
+                  new AckLedger(Paths.get(d), s"p$pid"))
+                val acked = ledger.map(_.acked).getOrElse(Set.empty[String])
+                try it.foreach { r =>
+                  val streamName = r.getAs[String]("stream")
+                  val id = r.getAs[String]("id")
+                  val key = if (multi) s"$streamName\t$id" else id
+                  if (!acked.contains(key)) {
+                    h(streamName, group, id, r.getAs[Map[String, String]]("values")) match {
+                      case HandlerResult.Ok => ledger.foreach(_.ack(key))
+                      case HandlerResult.Defer => ledger.foreach(_.defer(key))
+                      case HandlerResult.Err(cause) =>
+                        // same unacked-but-pending contract as the ordered path
+                        if (raise) throw cause else ledger.foreach(_.defer(key))
+                    }
+                  }
+                } finally ledger.foreach(_.close())
+              }
+          }
+          lastDispatched = batchId
+        } finally dispatching.unlock()
       }
     val q = StreamHarness.start(spark)(writer)
     query = Some(q)
@@ -580,17 +596,23 @@ final class GraftConsumer(
 
   /** Graceful stop ≙ the supervisor's `sup_timeout` shutdown window
     * (/root/reference/lib/redix/stream/consumer_sup.ex:33, default 5000 ms):
-    * give the in-flight micro-batch up to `supTimeoutMs` to finish — so its
-    * handlers run to completion and ack — then stop the query. A batch still
-    * running at the deadline is interrupted; its unacked work replays on the
-    * next start (at-least-once, same as the reference's kill-after-timeout).
+    * give the in-flight dispatch up to `supTimeoutMs` to finish — so its
+    * handlers run to completion and ack — and its batch to commit, then stop
+    * the query before another batch dispatches. A dispatch still running at
+    * the deadline is interrupted; its unacked work replays on the next start
+    * (at-least-once, same as the reference's kill-after-timeout).
     */
   def stop(): Unit = {
     query.foreach { q =>
       val deadline = System.nanoTime() + cfg.supTimeoutMs * 1000000L
-      while (q.isActive && q.status.isTriggerActive && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      q.stop()
+      val locked = dispatching.tryLock(cfg.supTimeoutMs, TimeUnit.MILLISECONDS)
+      try {
+        val commit = Paths.get(cfg.checkpointDir, "commits", lastDispatched.toString)
+        while (q.isActive && lastDispatched >= 0 && !Files.exists(commit) &&
+            System.nanoTime() < deadline)
+          Thread.sleep(1)
+        q.stop()
+      } finally if (locked) dispatching.unlock()
     }
     ledger.foreach(_.close())
   }

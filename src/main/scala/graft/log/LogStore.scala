@@ -7,6 +7,7 @@ import graft.log.SegmentFormat.{Jsonl, JsonlGz, Parquet}
 
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths}
+import java.nio.file.attribute.FileTime
 import scala.jdk.CollectionConverters._
 
 /** On-disk layout of a stream log: `<root>/<stream>/` holds immutable
@@ -76,13 +77,57 @@ object LogStore {
   private[log] def segmentNames(root: String, stream: String): Iterator[SegmentFormat.Named] =
     Option(streamDir(root, stream).toFile.list()).iterator.flatten.flatMap(SegmentFormat.parseName)
 
+  /** The stream directory's last-modified time and the wall-clock time of
+    * the stat that read it, taken just before a listing's `list()`.
+    */
+  private final case class DirStamp(modified: FileTime, at: Long) {
+    /** A later stat that returns the same time proves the directory
+      * unchanged only if a change after `at` could not carry that same
+      * time: the time must be older than `at` by more than the timestamp
+      * granularity. A time with no sub-second part may come from a 1-s or
+      * 2-s timestamp filesystem; any other from the kernel's coarse clock.
+      */
+    def settled: Boolean = {
+      val allowance = if (modified.toInstant.getNano == 0) 2000L else 50L
+      at - modified.toMillis > allowance
+    }
+  }
+
+  /** A listing stands for its directory for at most this long, so a step of
+    * the wall clock delays a listing and never loses an entry.
+    */
+  private val ReuseMaxAgeMs = 1000L
+
+  private def dirStamp(root: String, stream: String): Option[DirStamp] = {
+    val at = System.currentTimeMillis()
+    try Some(DirStamp(Files.getLastModifiedTime(streamDir(root, stream)), at))
+    catch { case _: java.nio.file.NoSuchFileException => None }
+  }
+
   /** One listing of a stream directory. The head parses only each name's
     * last id; the segments are parsed and sorted from the same names on
     * first use. A trigger lists once: `latestOffset` reads the head, and
     * planning and the admission-control id scan reuse the segments.
     */
   final class Listing private[LogStore] (root: String, stream: String,
-      names: Vector[SegmentFormat.Named]) {
+      names: Vector[SegmentFormat.Named], stamp: Option[DirStamp]) {
+
+    /** This listing while the stream directory is unchanged, else a new
+      * one: an idle poll costs one `stat`, not a `list()` of every segment.
+      * Every change to a stream (a segment publish, compaction, trim or
+      * deletion, the `.highwater` marker) is a rename or an unlink in its
+      * directory, which sets the directory's last-modified time. A missing
+      * directory is never reused.
+      */
+    def refresh(): Listing = stamp match {
+      case Some(s) if s.settled =>
+        val now = dirStamp(root, stream)
+        val age = now.fold(-1L)(_.at - s.at)
+        if (age >= 0 && age < ReuseMaxAgeMs && now.exists(_.modified == s.modified)) this
+        else listing(root, stream)
+      case _ => listing(root, stream)
+    }
+
     /** Highest assigned id, or Zero for an empty/missing stream. Consults
       * the `.highwater` marker [[trim]] leaves behind, so a FULLY trimmed
       * stream still remembers every id it ever assigned — Redis streams keep
@@ -106,18 +151,27 @@ object LogStore {
 
     /** Ids (only) of the first `limit` entries after `start` — what the
       * admission-control cutoff actually needs, through each format's
-      * id-only scan ([[SegmentFormat]]).
+      * id-only scan ([[SegmentFormat]]). The last answer is kept: segment
+      * files never change in place, so it holds while this listing is
+      * reused, and a min-rows gate polling an idle stream reads no file.
       */
-    def idsAfter(start: LogId, limit: Int): Seq[LogId] = {
-      val out = scala.collection.mutable.ArrayBuffer.empty[LogId]
-      val it = segments.iterator.filter(_.last > start)
-      while (out.size < limit && it.hasNext) out ++= it.next().ids().filter(_ > start)
-      out.toSeq.distinct.sorted.take(limit)
+    def idsAfter(start: LogId, limit: Int): Seq[LogId] = lastIdsAfter match {
+      case Some((`start`, `limit`, ids)) => ids
+      case _ =>
+        val out = scala.collection.mutable.ArrayBuffer.empty[LogId]
+        val it = segments.iterator.filter(_.last > start)
+        while (out.size < limit && it.hasNext) out ++= it.next().ids().filter(_ > start)
+        val ids = out.toSeq.distinct.sorted.take(limit)
+        lastIdsAfter = Some((start, limit, ids))
+        ids
     }
+    @volatile private var lastIdsAfter: Option[(LogId, Int, Seq[LogId])] = None
   }
 
-  def listing(root: String, stream: String): Listing =
-    new Listing(root, stream, segmentNames(root, stream).toVector)
+  def listing(root: String, stream: String): Listing = {
+    val stamp = dirStamp(root, stream)
+    new Listing(root, stream, segmentNames(root, stream).toVector, stamp)
+  }
 
   def segments(root: String, stream: String): Seq[Segment] = listing(root, stream).segments
 

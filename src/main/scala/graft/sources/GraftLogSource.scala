@@ -380,7 +380,11 @@ final class GraftLogMicroBatchStream(root: String, stream: String,
   // consumption with a bounded lifetime, in bounded bites).
   @volatile private var availableNowCap: Option[Map[String, LogId]] = None
   override def prepareForTriggerAvailableNow(): Unit =
-    availableNowCap = Some(streams.map(st => st -> LogStore.maxId(root, st)).toMap)
+    availableNowCap = Some(streams.map { st =>
+      val listed = LogStore.listing(root, st)
+      listings.put(st, listed)
+      st -> listed.head
+    }.toMap)
 
   private val minPartitions = GraftLogPartitioning.floor(options)
 
@@ -420,11 +424,14 @@ final class GraftLogMicroBatchStream(root: String, stream: String,
   // Per stream, the listing the latest latestOffset made, so that one
   // trigger lists each stream once: reportLatestOffset reports its head, and
   // planInputPartitions plans from its segments (the Kafka source keeps
-  // latestPartitionOffsets for the same reason).
+  // latestPartitionOffsets for the same reason). The next latestOffset
+  // refreshes it, which on an unchanged stream is one stat and no listing.
   private val listings = new java.util.concurrent.ConcurrentHashMap[String, LogStore.Listing]()
 
+  private[graft] def listingOf(st: String): Option[LogStore.Listing] = Option(listings.get(st))
+
   private def cappedMax(st: String): (LogId, LogStore.Listing) = {
-    val listed = LogStore.listing(root, st)
+    val listed = listingOf(st).fold(LogStore.listing(root, st))(_.refresh())
     listings.put(st, listed)
     // under Trigger.AvailableNow, never read past the frozen cap
     (availableNowCap.flatMap(_.get(st)).filter(_ < listed.head).getOrElse(listed.head), listed)
@@ -487,7 +494,7 @@ final class GraftLogMicroBatchStream(root: String, stream: String,
     */
   override def reportLatestOffset(): Offset =
     GraftLogOffset(streams.map(st =>
-      st -> Option(listings.get(st)).fold(LogStore.maxId(root, st))(_.head)).toMap)
+      st -> listingOf(st).fold(LogStore.maxId(root, st))(_.head)).toMap)
 
   /** Plans from this trigger's listing when its head covers `end`: segments
     * publish in id order, so every segment up to a listed head was listed (a
@@ -498,7 +505,7 @@ final class GraftLogMicroBatchStream(root: String, stream: String,
     val s0 = start.asInstanceOf[GraftLogOffset]
     val s1 = end.asInstanceOf[GraftLogOffset]
     streams.toArray.flatMap { st =>
-      val listed = Option(listings.get(st)).filter(_.head >= s1.id(st))
+      val listed = listingOf(st).filter(_.head >= s1.id(st))
         .getOrElse(LogStore.listing(root, st))
       GraftLogPartitioning.plan(root, st, listed, s0.id(st), s1.id(st), minPartitions)
     }

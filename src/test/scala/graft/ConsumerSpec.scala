@@ -378,6 +378,116 @@ class ConsumerSpec extends AnyFunSuite {
     assert(seen.synchronized(seen.toList) == List("1", "2", "3", "4"))
   }
 
+  test("stop under steady input returns before sup_timeout and cuts no handler short") {
+    // triggers run back to back while a producer keeps appending, so a
+    // trigger is almost always active; stop() waits only for the dispatch
+    val root = TestSpark.tmpDir("log")
+    val w = new LogWriter(root, "s")
+    // the producer outruns the handler, so every poll finds data; the quota
+    // keeps each dispatch short
+    val shared = cfg(root, "s", Some("g1"))
+      .copy(supTimeoutMs = 20000L, maxEntriesPerTrigger = Some(20L))
+    val dispatched = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val started = new java.util.concurrent.atomic.AtomicInteger()
+    val finished = new java.util.concurrent.atomic.AtomicInteger()
+    val handler: (String, Option[String], String, Map[String, String]) => HandlerResult =
+      (_, _, _, values) => {
+        started.incrementAndGet()
+        Thread.sleep(5)
+        dispatched.add(values("n"))
+        finished.incrementAndGet()
+        HandlerResult.Ok
+      }
+    @volatile var producing = true
+    val produced = new java.util.concurrent.atomic.AtomicInteger()
+    val producer = new Thread(() => {
+      while (producing) {
+        w.produce(Map("n" -> produced.incrementAndGet().toString))
+        Thread.sleep(1)
+      }
+    })
+    val c = new GraftConsumer(spark, shared, handler)
+    c.start()
+    producer.start()
+    val deadline = System.currentTimeMillis() + 30000
+    while (dispatched.size < 100 && System.currentTimeMillis() < deadline) Thread.sleep(10)
+    val t0 = System.nanoTime()
+    c.stop()
+    val stopMs = (System.nanoTime() - t0) / 1000000
+    info(s"stop() took $stopMs ms")
+    producing = false
+    producer.join()
+    assert(dispatched.size >= 100, s"only ${dispatched.size} dispatched before the stop")
+    assert(stopMs < 5000, s"stop() took $stopMs ms of its 20000 ms window")
+    assert(started.get == finished.get, "a handler call was cut short by the stop")
+    val c2 = new GraftConsumer(spark, shared, handler)
+    c2.start().processAllAvailable()
+    c2.stop()
+    val all = dispatched.toArray(Array.empty[String]).toSeq
+    assert(all.size == produced.get && all.toSet == (1 to produced.get).map(_.toString).toSet,
+      s"${all.size} dispatches over ${all.toSet.size} distinct of ${produced.get} produced")
+  }
+
+  test("a live consumer runs on the default trigger; drainAndStop on AvailableNow") {
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    import org.apache.spark.sql.streaming.Trigger
+    val root = TestSpark.tmpDir("log")
+    new LogWriter(root, "s").produce(Map("n" -> "1"))
+    def triggerOf(c: GraftConsumer) = {
+      val q = c.start()
+      try q.asInstanceOf[StreamingQueryWrapper].streamingQuery.trigger
+      finally c.stop()
+    }
+    val ok = (_: String, _: Option[String], _: String, _: Map[String, String]) => HandlerResult.Ok
+    // Spark's default trigger: the next batch starts when the previous ends
+    assert(triggerOf(new GraftConsumer(spark, cfg(root, "s", Some("g1")), ok)) ==
+      Trigger.ProcessingTime(0L))
+    assert(triggerOf(new GraftConsumer(spark,
+      cfg(root, "s", Some("g1")).copy(drainAndStop = true), ok)) == Trigger.AvailableNow())
+  }
+
+  test("one entry produced into a consumer idle for 20 polls is dispatched exactly once") {
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.apache.spark.sql.streaming.StreamingQueryListener._
+    val root = TestSpark.tmpDir("log")
+    val w = new LogWriter(root, "s")
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val c = new GraftConsumer(spark, cfg(root, "s", Some("g1")),
+      (_, _, _, values) => { seen.add(values("n")); HandlerResult.Ok })
+    // every trigger that finds no new data posts an idle event: one per poll
+    val idle = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, Int]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: QueryStartedEvent): Unit = ()
+      override def onQueryProgress(e: QueryProgressEvent): Unit = ()
+      override def onQueryTerminated(e: QueryTerminatedEvent): Unit = ()
+      override def onQueryIdle(e: QueryIdleEvent): Unit = idle.merge(e.id, 1, _ + _)
+    }
+    val key = "spark.sql.streaming.noDataProgressEventInterval"
+    val before = spark.conf.getOption(key)
+    spark.conf.set(key, "0")
+    spark.streams.addListener(listener)
+    try {
+      val q = c.start()
+      def awaitIdle(n: Int): Unit = {
+        val deadline = System.currentTimeMillis() + 30000
+        while (idle.getOrDefault(q.id, 0) < n && System.currentTimeMillis() < deadline)
+          Thread.sleep(5)
+        assert(idle.getOrDefault(q.id, 0) >= n, s"only ${idle.getOrDefault(q.id, 0)} idle polls")
+      }
+      awaitIdle(20)
+      assert(seen.isEmpty)
+      w.produce(Map("n" -> "only"))
+      val deadline = System.currentTimeMillis() + 30000
+      while (seen.isEmpty && System.currentTimeMillis() < deadline) Thread.sleep(5)
+      awaitIdle(idle.getOrDefault(q.id, 0) + 20)
+      c.stop()
+      assert(seen.toArray.toSeq == Seq("only"))
+    } finally {
+      spark.streams.removeListener(listener)
+      before.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    }
+  }
+
   test("concurrent producers racing a live consumer: every message exactly once") {
     // end-to-end single-writer-lock evidence: two producer threads append
     // while the consumer tails; ids never collide, nothing is lost, nothing

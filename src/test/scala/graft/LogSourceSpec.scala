@@ -1626,6 +1626,148 @@ class LogSourceSpec extends AnyFunSuite {
     assert(out.map(_.values("n").toInt) == (1 to 120))
   }
 
+  // --- listing reuse: an unchanged stream directory costs one stat ---
+
+  private def setDirTime(root: String, millis: Long): Unit =
+    java.nio.file.Files.setLastModifiedTime(LogStore.streamDir(root, "s"),
+      java.nio.file.attribute.FileTime.fromMillis(millis))
+
+  /** Backdates stream "s"'s directory time by 10 s, so it reads as quiet. */
+  private def quiet(root: String): Unit = setDirTime(root, System.currentTimeMillis() - 10000)
+
+  test("a quiet stream directory's listing is reused; a fresh, stale or missing one is not") {
+    val root = tinySegments(3)
+    quiet(root)
+    val l = LogStore.listing(root, "s")
+    assert(l.refresh() eq l)
+    assert(l.refresh().refresh() eq l)
+    // a time not yet older than the listing by the timestamp allowance: a
+    // change in the same clock tick would not move it
+    setDirTime(root, System.currentTimeMillis() + 10000)
+    val future = LogStore.listing(root, "s")
+    assert(future.refresh() ne future)
+    val now = System.currentTimeMillis()
+    setDirTime(root, now / 1000 * 1000) // whole seconds: a 2 s allowance
+    val wholeSecond = LogStore.listing(root, "s")
+    assert(wholeSecond.refresh() ne wholeSecond)
+    setDirTime(root, if ((now - 500) % 1000 == 0) now - 501 else now - 500) // 50 ms allowance
+    val subSecond = LogStore.listing(root, "s")
+    assert(subSecond.refresh() eq subSecond)
+    // a listing stands for its directory for under a second
+    Thread.sleep(1100)
+    assert(subSecond.refresh() ne subSecond)
+    val missing = LogStore.listing(root, "nope")
+    assert(missing.refresh() ne missing)
+  }
+
+  test("every change to a stream makes a new listing: append, staged publish, compact, trim, delete") {
+    val root = tinySegments(6)
+    def changes(what: String)(op: => Unit): Unit = {
+      quiet(root)
+      val l = LogStore.listing(root, "s")
+      assert(l.refresh() eq l, what)
+      op
+      val next = l.refresh()
+      assert(next ne l, s"$what kept the old listing")
+      assert(next.head == LogStore.maxId(root, "s"), what)
+      assert(next.segments.map(_.path) == LogStore.segments(root, "s").map(_.path), what)
+    }
+    changes("live append")(new LogWriter(root, "s").produce(Map("n" -> 7)))
+    import spark.implicits._
+    changes("staged sink publish")(Seq(8, 9).toDF("n").write.format("graftlog")
+      .option("path", root).option("stream", "s").mode("append").save())
+    changes("compact")(assert(LogStore.compact(root, "s", LogId(1003L, 0L)) == 3))
+    changes("trim marker")(assert(LogStore.trim(root, "s", LogId.Zero) == 0L))
+    assert(java.nio.file.Files.exists(LogStore.streamDir(root, "s").resolve(".highwater")))
+    changes("trim")(assert(LogStore.trim(root, "s", LogId(1004L, 0L)) == 4L))
+    changes("segment delete")(java.nio.file.Files.delete(
+      java.nio.file.Paths.get(LogStore.segments(root, "s").head.path)))
+  }
+
+  private def earliest(root: String, extra: (String, String)*) = {
+    import scala.jdk.CollectionConverters._
+    new graft.sources.GraftLogMicroBatchStream(root, "s",
+      new org.apache.spark.sql.util.CaseInsensitiveStringMap((Map("path" -> root,
+        "stream" -> "s", "startingOffsets" -> "earliest") ++ extra).asJava))
+  }
+
+  private def latestId(m: graft.sources.GraftLogMicroBatchStream): LogId =
+    m.latestOffset(m.initialOffset(), m.getDefaultReadLimit)
+      .asInstanceOf[graft.sources.GraftLogOffset].id("s")
+
+  test("an idle latestOffset on a quiet stream reuses its listing") {
+    val root = tinySegments(20)
+    quiet(root)
+    val m = earliest(root)
+    val head = LogStore.maxId(root, "s")
+    assert(latestId(m) == head)
+    val listed = m.listingOf("s").get
+    (1 to 5).foreach { _ =>
+      assert(latestId(m) == head)
+      assert(m.listingOf("s").get eq listed)
+    }
+    // a min-rows gate that keeps waiting reads the segments once
+    val gated = earliest(root, "minEntriesPerTrigger" -> "1000", "maxTriggerDelayMs" -> "600000")
+    assert(latestId(gated) == LogId.Zero)
+    val ids = gated.listingOf("s").get.idsAfter(LogId.Zero, 1000)
+    assert(ids.size == 20)
+    assert(latestId(gated) == LogId.Zero)
+    assert(gated.listingOf("s").get.idsAfter(LogId.Zero, 1000) eq ids)
+  }
+
+  test("500 rounds of publish then latestOffset each report the just-published id") {
+    val root = TestSpark.tmpDir("graftlog")
+    val w = new LogWriter(root, "s")
+    w.produce(Map("n" -> 0))
+    val m = earliest(root)
+    (1 to 500).foreach { i =>
+      val id = w.produce(Map("n" -> i))
+      assert(latestId(m) == id, s"round $i")
+    }
+  }
+
+  test("a pipe and an AvailableNow drain over a quiet stream deliver every entry once, in order") {
+    import org.apache.spark.sql.streaming.Trigger
+    def out(root: String) =
+      LogStore.readRange(root, "out", LogId.Zero, LogStore.maxId(root, "out")).map(_.values("n").toInt)
+    val root = tinySegments(30)
+    val q = spark.readStream.format("graftlog").option("path", root).option("stream", "s")
+      .option("startingOffsets", "earliest").load().select("values")
+      .writeStream.format("graftlog").option("path", root).option("stream", "out")
+      .option("checkpointLocation", TestSpark.tmpDir("ckpt")).start()
+    try {
+      q.processAllAvailable()
+      var now = 2000L
+      val w = new LogWriter(root, "s", () => now)
+      (1 to 3).foreach { round =>
+        quiet(root)
+        Thread.sleep(100) // idle polls of the quiet directory
+        (1 to 10).foreach { i => now += 1; w.produce(Map("n" -> (20 + 10 * round + i))) }
+        q.processAllAvailable()
+      }
+    } finally q.stop()
+    assert(out(root) == (1 to 60))
+
+    val root2 = tinySegments(40)
+    val ckpt = TestSpark.tmpDir("ckpt")
+    def drain(): Unit = {
+      quiet(root2)
+      val d = spark.readStream.format("graftlog").option("path", root2).option("stream", "s")
+        .option("startingOffsets", "earliest").option("maxEntriesPerTrigger", "7").load()
+        .select("values").writeStream.format("graftlog").option("path", root2)
+        .option("stream", "out").option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      assert(d.awaitTermination(60000) && d.exception.isEmpty)
+    }
+    drain()
+    assert(out(root2) == (1 to 40))
+    var now = 5000L
+    val w2 = new LogWriter(root2, "s", () => now)
+    (41 to 45).foreach { i => now += 1; w2.produce(Map("n" -> i)) }
+    drain()
+    assert(out(root2) == (1 to 45))
+  }
+
   test("a parallel-mode consumer still dispatches over more than one partition") {
     import graft.consumer.{ConsumerConfig, GraftConsumer}
     import scala.jdk.CollectionConverters._
