@@ -14,19 +14,16 @@ object Bench {
     (1 to n).grouped(1000).foreach(g =>
       w.produceAll(g.map(i => Map[String, Any]("i" -> i, "p" -> s"payload_$i"))))
     val t0 = System.nanoTime()
-    val q = graft.streaming.StreamHarness.start(spark) {
+    graft.streaming.StreamHarness.drain(spark) {
       spark.readStream.format("graftlog")
         .option("path", root).option("stream", "bench")
         .option("startingOffsets", "earliest")
         .option("maxEntriesPerTrigger", "25000")
         .load()
         .writeStream.format("memory").queryName("bench_stream")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         .option("checkpointLocation",
           graft.TempDirs.scratch("graft-bench-ckpt"))
     }
-    q.processAllAvailable()
-    q.stop()
     val secs = (System.nanoTime() - t0) / 1e9
     math.round(n / secs)
   }

@@ -210,8 +210,12 @@ final class AckLedger(dir: Path, writerTag: String = "driver",
 
   /** Fold writers' files and drop acked keys for which `unreachable` holds
     * (the caller knows the key format — bare ids or stream-qualified).
+    * Re-reads every writer's files first: the other writers' records since
+    * this instance last read them (a restarted consumer's parallel-mode
+    * tasks) are in no in-memory view, and their files are deleted below.
     */
   def compact(unreachable: String => Boolean): Unit = synchronized {
+    refresh()
     val all = Option(dir.toFile.listFiles()).getOrElse(Array.empty)
     val mine = Set(acksFile.getFileName.toString, pendingFile.getFileName.toString,
       failsFile.getFileName.toString, timesFile.getFileName.toString)
@@ -325,8 +329,7 @@ final class GraftConsumer(
     clock: () => Long = () => System.currentTimeMillis()) {
 
   private val ledger: Option[AckLedger] = cfg.ledgerDir.map(new AckLedger(_, clock = clock))
-  private lazy val deadLetterWriter: Option[graft.log.LogWriter] =
-    cfg.deadLetterStream.map(d => new graft.log.LogWriter(cfg.logRoot, d))
+  private val dispatch = new Dispatch(cfg, handler)
   @volatile private var query: Option[StreamingQuery] = None
 
   // Held while a batch dispatches to the handler. stop() takes it (fair, so
@@ -345,43 +348,6 @@ final class GraftConsumer(
   def ack(id: String): Unit = ack(cfg.streams.head, id)
   def ack(stream: String, id: String): Unit =
     ledger.foreach(_.ack(GraftConsumer.ledgerKey(cfg, stream, id)))
-
-  /** Dispatch one entry; mirrors call_handler + the :ok/:defer/error
-    * branches (/root/reference/lib/redix/stream/consumer.ex:190-216).
-    */
-  private def dispatch(stream: String, id: String, values: Map[String, String]): Unit = {
-    val key = GraftConsumer.ledgerKey(cfg, stream, id)
-    val alreadyAcked = ledger.exists(_.acked.contains(key))
-    if (!alreadyAcked) {
-      handler(stream, cfg.groupName, id, values) match {
-        case HandlerResult.Ok => ledger.foreach(_.ack(key))
-        case HandlerResult.Defer => ledger.foreach(_.defer(key))
-        case HandlerResult.Err(cause) =>
-          // dead-letter routing: count the failed delivery first; once a
-          // message has failed maxDeliveries times it is poison — park it
-          // in the DLQ stream with provenance and ack it, BEFORE any
-          // raise, so a crash-looping consumer breaks the loop on the
-          // delivery after the limit instead of crashing forever.
-          val attempts = ledger.map(_.fail(key)).getOrElse(0)
-          val poison = cfg.deadLetterStream.isDefined &&
-            cfg.maxDeliveries.exists(attempts >= _)
-          if (poison) {
-            deadLetterWriter.foreach(_.produce(values ++ Map(
-              "__dlq_stream" -> stream,
-              "__dlq_id" -> id,
-              "__dlq_attempts" -> attempts.toString,
-              "__dlq_error" -> String.valueOf(cause.getMessage))))
-            ledger.foreach(_.ack(key))
-          } else if (cfg.raiseErrors) throw cause
-          // non-raising error in group mode: leave the id unacked-but-pending
-          // (≙ the reference's errored message staying in the PEL,
-          // /root/reference/lib/redix/stream/consumer.ex:206-216) so
-          // drainPending redelivers it — never silently lost just because
-          // the micro-batch offset commits.
-          else ledger.foreach(_.defer(key))
-      }
-    }
-  }
 
   /** Drain this consumer's pending (deferred-unacked) backlog before going
     * live — the reference's pending→live switchover
@@ -404,7 +370,7 @@ final class GraftConsumer(
       }
       pending.foreach { case (stream, id) =>
         entries(stream).get(id).filterNot(_.isTombstone)
-          .foreach(e => dispatch(stream, e.id.toString, e.values))
+          .foreach(e => dispatch(ledger, stream, e.id.toString, e.values))
       }
     }
 
@@ -510,18 +476,15 @@ final class GraftConsumer(
               .collect()
               .sortBy(r => (r.getLong(3), r.getLong(2), r.getString(0)))
             rows.foreach { r =>
-              dispatch(r.getString(0), r.getString(1), r.getAs[Map[String, String]](4))
+              dispatch(ledger, r.getString(0), r.getString(1), r.getAs[Map[String, String]](4))
             }
           } else {
             // Parallel mode ≙ N consumers in one group (2A#15): partitions are
             // disjoint id ranges processed concurrently, each task acking into
             // its own ledger file (needs a shared FS on a real cluster).
             // Order is per-partition, as documented in SURVEY.md §1.4.
-            val group = cfg.groupName
             val ledgerDir = cfg.ledgerDir.map(_.toString)
-            val raise = cfg.raiseErrors
-            val multi = cfg.multiStream
-            val h = handler
+            val dispatchInTask = dispatch // the task closure must not capture this consumer
             batch.selectExpr("stream", "id", "seq", "ts", "values")
               .sortWithinPartitions("ts", "seq")
               .foreachPartition { (it: Iterator[org.apache.spark.sql.Row]) =>
@@ -533,20 +496,9 @@ final class GraftConsumer(
                 // over mutable spec state would not serialize meaningfully
                 val ledger = ledgerDir.map(d =>
                   new AckLedger(Paths.get(d), s"p$pid"))
-                val acked = ledger.map(_.acked).getOrElse(Set.empty[String])
                 try it.foreach { r =>
-                  val streamName = r.getAs[String]("stream")
-                  val id = r.getAs[String]("id")
-                  val key = if (multi) s"$streamName\t$id" else id
-                  if (!acked.contains(key)) {
-                    h(streamName, group, id, r.getAs[Map[String, String]]("values")) match {
-                      case HandlerResult.Ok => ledger.foreach(_.ack(key))
-                      case HandlerResult.Defer => ledger.foreach(_.defer(key))
-                      case HandlerResult.Err(cause) =>
-                        // same unacked-but-pending contract as the ordered path
-                        if (raise) throw cause else ledger.foreach(_.defer(key))
-                    }
-                  }
+                  dispatchInTask(ledger, r.getAs[String]("stream"), r.getAs[String]("id"),
+                    r.getAs[Map[String, String]]("values"))
                 } finally ledger.foreach(_.close())
               }
           }
@@ -649,6 +601,56 @@ object GraftConsumer {
             "ledger entries to stream-qualified keys first")
       case _ => (cfg.streams.head, LogId.parse(key))
     }
+}
+
+/** Dispatch one entry into `ledger`; mirrors call_handler + the
+  * :ok/:defer/error branches (the reference's lib/redix/stream/consumer.ex,
+  * lines 190-216). The one per-message dispatch of both consumer modes:
+  * ordered mode and the pending drain pass the consumer's own ledger,
+  * parallel mode each task's `p<N>` ledger. Serializable, so parallel-mode tasks
+  * carry it (with the handler); each deserialized copy opens its own
+  * dead-letter writer on first use, and the writer's stream lock orders
+  * their appends.
+  */
+private[consumer] final class Dispatch(cfg: ConsumerConfig,
+    handler: (String, Option[String], String, Map[String, String]) => HandlerResult)
+    extends Serializable {
+  @transient private lazy val deadLetters: Option[graft.log.LogWriter] =
+    cfg.deadLetterStream.map(d => new graft.log.LogWriter(cfg.logRoot, d))
+
+  def apply(ledger: Option[AckLedger], stream: String, id: String,
+      values: Map[String, String]): Unit = {
+    val key = GraftConsumer.ledgerKey(cfg, stream, id)
+    if (!ledger.exists(_.acked.contains(key))) {
+      handler(stream, cfg.groupName, id, values) match {
+        case HandlerResult.Ok => ledger.foreach(_.ack(key))
+        case HandlerResult.Defer => ledger.foreach(_.defer(key))
+        case HandlerResult.Err(cause) =>
+          // dead-letter routing: count the failed delivery first; once a
+          // message has failed maxDeliveries times it is poison — park it
+          // in the DLQ stream with provenance and ack it, BEFORE any
+          // raise, so a crash-looping consumer breaks the loop on the
+          // delivery after the limit instead of crashing forever.
+          val attempts = ledger.map(_.fail(key)).getOrElse(0)
+          val poison = cfg.deadLetterStream.isDefined &&
+            cfg.maxDeliveries.exists(attempts >= _)
+          if (poison) {
+            deadLetters.foreach(_.produce(values ++ Map(
+              "__dlq_stream" -> stream,
+              "__dlq_id" -> id,
+              "__dlq_attempts" -> attempts.toString,
+              "__dlq_error" -> String.valueOf(cause.getMessage))))
+            ledger.foreach(_.ack(key))
+          } else if (cfg.raiseErrors) throw cause
+          // non-raising error in group mode: leave the id unacked-but-pending
+          // (≙ the reference's errored message staying in the PEL,
+          // lib/redix/stream/consumer.ex:206-216) so
+          // drainPending redelivers it — never silently lost just because
+          // the micro-batch offset commits.
+          else ledger.foreach(_.defer(key))
+      }
+    }
+  }
 }
 
 /** Restart policy ≙ the `sup_restart` option

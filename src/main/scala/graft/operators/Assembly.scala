@@ -630,7 +630,7 @@ object Assembly {
               $"event_id", $"event_type", $"user_id"),
           "ms", r, "ev", orderCols = Seq("event_id"))
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q446", 4, rocksdb = true) {
+      graft.streaming.StreamHarness.runToMemory(s, "q446", 4) {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("valueSchema",

@@ -71,6 +71,94 @@ object StreamLog {
         .mode("append").save()
     }
 
+  /** Shared clicks/purchases log pair with one sentinel per stream
+    * (memoized per sfDir) behind the outer stream-stream joins (q138
+    * left-outer, q150 full-outer): user -1, 48 h after the real maximum,
+    * advances both watermarks so the trailing no-data micro-batches flush
+    * every unmatched row out of join state.
+    */
+  private def sentinelJoinLog(s: SparkSession, dir: String): String = {
+    import s.implicits._
+    val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
+    graft.LogFixtures.producedLog(dir, "q138") { r =>
+      val ev = Tables.load(s, dir, "events")
+      val sentinelMs = ev.agg(max(unix_millis($"ts"))).head().getLong(0) +
+        48L * 3600 * 1000
+      def sink(eventType: String, stream: String): Unit = {
+        def append(df: DataFrame): Unit =
+          df.write.format("graftlog")
+            .option("path", r).option("stream", stream)
+            .mode("append").save()
+        append(ev.filter($"event_type" === eventType)
+          .selectExpr("CAST(user_id AS STRING) AS user_id",
+            s"date_format(ts, '$tsFmt') AS ts_s"))
+        // instant-exact sentinel (timestamp_millis, not Timestamp.toString:
+        // the latter renders in local time and would shift on non-UTC JVMs)
+        append(s.range(1).selectExpr("'-1' AS user_id",
+          s"date_format(timestamp_millis($sentinelMs), '$tsFmt') AS ts_s"))
+      }
+      sink("click", "clicks")
+      sink("purchase", "purchases")
+    }
+  }
+
+  /** One watermarked side of the q138/q150 joins over [[sentinelJoinLog]]. */
+  private def sentinelJoinSide(s: SparkSession, dir: String)(
+      stream: String, tsCol: String, userCol: String): DataFrame = {
+    import s.implicits._
+    s.readStream.format("graftlog")
+      .option("path", sentinelJoinLog(s, dir)).option("stream", stream)
+      .option("startingOffsets", "earliest")
+      .option("maxEntriesPerTrigger", "12000") // 2 micro-batches at sf0.1
+      .load()
+      .select(to_timestamp($"values.ts_s").as(tsCol),
+        $"values.user_id".as(userCol))
+      .withWatermark(tsCol, "2 hours") // generous: fixture ts out of order
+  }
+
+  /** Shared keyed changelog (memoized per sfDir) behind the versioned read
+    * (q346) and the time-travel diff (q356): one update per event keyed by
+    * user, then a tombstone wave for every 17th user. Same construction as
+    * q344's log under its own key: these read paths need the UNcompacted
+    * history (q344 compacts its copy in place).
+    */
+  private def profileChangelog(s: SparkSession, dir: String): String = {
+    import s.implicits._
+    graft.LogFixtures.producedLog(dir, "q346") { r =>
+      val v0 = Tables.load(s, dir, "events")
+        .select($"event_id", $"user_id", $"event_type",
+          expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
+      val updates = v0.select(
+        (lit(1700000000000L) + $"event_id").as("ms"),
+        $"user_id", $"event_id", $"event_type", $"vc",
+        lit(null).cast("string").as("__deleted"))
+      val tombstones = v0.select($"user_id").distinct()
+        .filter($"user_id" % 17 === 0)
+        .select((lit(1710000000000L) + $"user_id").as("ms"),
+          $"user_id", lit(null).cast("long").as("event_id"),
+          lit(null).cast("string").as("event_type"),
+          lit(null).cast("long").as("vc"), lit("1").as("__deleted"))
+      graft.log.LogBulkProducer.produceAt(
+        updates.unionAll(tombstones),
+        "ms", r, "profiles", orderCols = Seq("user_id"))
+    }
+  }
+
+  /** Shared source log (memoized per sfDir) of the replication pipes q341
+    * and q342: (event_id, event_type, vc) per event, ids from event_id.
+    */
+  private def pipeSourceLog(s: SparkSession, dir: String): String = {
+    import s.implicits._
+    graft.LogFixtures.producedLog(dir, "q341") { r =>
+      graft.log.LogBulkProducer.produceAt(
+        Tables.load(s, dir, "events")
+          .select((lit(1700000000000L) + $"event_id").as("ms"),
+            $"event_id", $"event_type",
+            expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc")),
+        "ms", r, "events", orderCols = Seq("event_id"))
+    }
+  }
+
   /** 12 h past the stream's first event — the cutoff q131/q132 replay from.
     * Memoized per sfDir: one single-column min-scan per JVM instead of 4+
     * redundant jobs per bench invocation of either query.
@@ -370,7 +458,7 @@ object StreamLog {
           .option("path", r).option("stream", "ev")
           .mode("append").save()
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q115", 4, rocksdb = true) {
+      graft.streaming.StreamHarness.runToMemory(s, "q115", 4) {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
@@ -404,7 +492,7 @@ object StreamLog {
           .option("path", r).option("stream", "ev")
           .mode("append").save()
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q125", 4, rocksdb = true) {
+      graft.streaming.StreamHarness.runToMemory(s, "q125", 4) {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
@@ -454,30 +542,16 @@ object StreamLog {
         .option("startingOffsets", "earliest")
       // gA: full drain (its committed offset IS the high water)
       val ckptA = graft.TempDirs.scratch("graft-q159-gA")
-      val qA = graft.streaming.StreamHarness.start(s) {
+      graft.streaming.StreamHarness.drain(s) {
         src.load().writeStream.format("noop")
           .option("checkpointLocation", ckptA)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       }
-      try { qA.awaitTermination(120000) } finally qA.stop()
-      // gB: exactly ONE admission-controlled batch of total/2 entries —
-      // a long processing-time trigger fires the first batch immediately
-      // and the second in an hour; stop as soon as batch 0 commits
+      // gB: exactly ONE admission-controlled batch of total/2 entries
       val ckptB = graft.TempDirs.scratch("graft-q159-gB")
-      val qB = graft.streaming.StreamHarness.start(s) {
+      graft.streaming.StreamHarness.firstBatch(s, ckptB) {
         src.option("maxEntriesPerTrigger", (total / 2).toString)
           .load().writeStream.format("noop")
-          .option("checkpointLocation", ckptB)
-          .trigger(org.apache.spark.sql.streaming.Trigger.ProcessingTime("1 hour"))
       }
-      try {
-        val commit0 = java.nio.file.Paths.get(ckptB, "commits", "0")
-        val deadline = System.currentTimeMillis() + 120000
-        while (!java.nio.file.Files.exists(commit0) &&
-            System.currentTimeMillis() < deadline) Thread.sleep(50)
-        require(java.nio.file.Files.exists(commit0),
-          "q159: gB's first micro-batch did not commit within 120s")
-      } finally qB.stop()
       StreamInspect.groupLag(s, root, Seq("ev"),
           Seq(("gA", ckptA), ("gB", ckptB)))
         .orderBy($"grp")
@@ -608,7 +682,7 @@ object StreamLog {
           .option("path", r).option("stream", "ev")
           .mode("append").save()
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q128", 4, rocksdb = true) {
+      graft.streaming.StreamHarness.runToMemory(s, "q128", 4) {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
@@ -675,7 +749,7 @@ object StreamLog {
         graft.log.LogBulkProducer.produceAt(docs, "ms", r, "docs",
           orderCols = Seq("doc_id"))
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q120", 4, rocksdb = true) {
+      graft.streaming.StreamHarness.runToMemory(s, "q120", 4) {
         val banded = s.readStream.format("graftlog")
           .option("path", root).option("stream", "docs")
           .option("startingOffsets", "earliest")
@@ -734,36 +808,7 @@ object StreamLog {
         |  AND p.pts >= c.cts AND p.pts < c.cts + INTERVAL 10 MINUTE
         |ORDER BY 1, 2, 3""") { (s, dir) =>
       import s.implicits._
-      val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-      val root = graft.LogFixtures.producedLog(dir, "q138") { r =>
-        val ev = Tables.load(s, dir, "events")
-        val sentinelMs = ev.agg(max(unix_millis($"ts"))).head().getLong(0) +
-          48L * 3600 * 1000
-        def sink(eventType: String, stream: String): Unit = {
-          def append(df: org.apache.spark.sql.DataFrame): Unit =
-            df.write.format("graftlog")
-              .option("path", r).option("stream", stream)
-              .mode("append").save()
-          append(ev.filter($"event_type" === eventType)
-            .selectExpr("CAST(user_id AS STRING) AS user_id",
-              s"date_format(ts, '$tsFmt') AS ts_s"))
-          // instant-exact sentinel (timestamp_millis, not Timestamp.toString:
-          // the latter renders in local time and would shift on non-UTC JVMs)
-          append(s.range(1).selectExpr("'-1' AS user_id",
-            s"date_format(timestamp_millis($sentinelMs), '$tsFmt') AS ts_s"))
-        }
-        sink("click", "clicks")
-        sink("purchase", "purchases")
-      }
-      def src(stream: String, tsCol: String, userCol: String) =
-        s.readStream.format("graftlog")
-          .option("path", root).option("stream", stream)
-          .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", "12000") // 2 micro-batches at sf0.1
-          .load()
-          .select(to_timestamp($"values.ts_s").as(tsCol),
-            $"values.user_id".as(userCol))
-          .withWatermark(tsCol, "2 hours") // generous: fixture ts out of order
+      val src = sentinelJoinSide(s, dir) _
       val fmt = "yyyy-MM-dd HH:mm:ss"
       graft.streaming.StreamHarness.runToMemory(s, "q138", 2) {
         src("clicks", "cts", "cu")
@@ -796,34 +841,7 @@ object StreamLog {
         |  AND p.pts >= c.cts AND p.pts < c.cts + INTERVAL 10 MINUTE
         |ORDER BY 1, 2, 3""") { (s, dir) =>
       import s.implicits._
-      val tsFmt = "yyyy-MM-dd HH:mm:ss.SSSSSS"
-      val root = graft.LogFixtures.producedLog(dir, "q138") { r =>
-        val ev = Tables.load(s, dir, "events")
-        val sentinelMs = ev.agg(max(unix_millis($"ts"))).head().getLong(0) +
-          48L * 3600 * 1000
-        def sink(eventType: String, stream: String): Unit = {
-          def append(df: org.apache.spark.sql.DataFrame): Unit =
-            df.write.format("graftlog")
-              .option("path", r).option("stream", stream)
-              .mode("append").save()
-          append(ev.filter($"event_type" === eventType)
-            .selectExpr("CAST(user_id AS STRING) AS user_id",
-              s"date_format(ts, '$tsFmt') AS ts_s"))
-          append(s.range(1).selectExpr("'-1' AS user_id",
-            s"date_format(timestamp_millis($sentinelMs), '$tsFmt') AS ts_s"))
-        }
-        sink("click", "clicks")
-        sink("purchase", "purchases")
-      }
-      def src(stream: String, tsCol: String, userCol: String) =
-        s.readStream.format("graftlog")
-          .option("path", root).option("stream", stream)
-          .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", "12000") // 2 micro-batches at sf0.1
-          .load()
-          .select(to_timestamp($"values.ts_s").as(tsCol),
-            $"values.user_id".as(userCol))
-          .withWatermark(tsCol, "2 hours") // generous: fixture ts out of order
+      val src = sentinelJoinSide(s, dir) _
       val fmt = "yyyy-MM-dd HH:mm:ss"
       graft.streaming.StreamHarness.runToMemory(s, "q150", 2) {
         src("clicks", "cts", "cu")
@@ -886,7 +904,7 @@ object StreamLog {
           s"date_format(timestamp_millis($flushMs), '$tsFmt') AS ts_s"))
       }
       val fmt = "yyyy-MM-dd HH:mm:ss"
-      graft.streaming.StreamHarness.runToMemory(s, "q139", 4, rocksdb = true) {
+      graft.streaming.StreamHarness.runToMemory(s, "q139", 4) {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
@@ -1023,8 +1041,8 @@ object StreamLog {
       import s.implicits._
       val root = userEventLog(s, dir)
       val ckpt = graft.TempDirs.scratch("graft-q145-ckpt")
-      val sinkName = s"q145_sink_${System.nanoTime()}"
-      val q = graft.streaming.StreamHarness.start(s, statePartitions = Some(4)) { // tiny state keyspace
+      // the answer is read from the state store, so the sink discards rows
+      graft.streaming.StreamHarness.drain(s, statePartitions = Some(4)) { // tiny state keyspace
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
@@ -1033,12 +1051,9 @@ object StreamLog {
           .select($"values.event_type".as("event_type"))
           .groupBy($"event_type").count()
           .writeStream.outputMode("complete")
-          .format("memory").queryName(sinkName)
+          .format("noop")
           .option("checkpointLocation", ckpt)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       }
-      graft.CacheScope.sinkView(s, sinkName)
-      q.awaitTermination()
       // sanity: the checkpoint really holds the aggregation's operator
       val ops = s.read.format("state-metadata").load(ckpt)
         .select($"operatorName").collect().map(_.getString(0)).toSet
@@ -1295,26 +1310,7 @@ object StreamLog {
         |FROM (SELECT user_id, event_id, valid_to, $ph AS h FROM iv)"""
     }) { (s, dir) =>
       import s.implicits._
-      val v0 = Tables.load(s, dir, "events")
-        .select($"event_id", $"user_id", $"event_type",
-          expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
-      // same fixture construction as q344, own key: this read path needs
-      // the UNcompacted history (q344 compacts its copy in place)
-      val root = graft.LogFixtures.producedLog(dir, "q346") { r =>
-        val updates = v0.select(
-          (lit(1700000000000L) + $"event_id").as("ms"),
-          $"user_id", $"event_id", $"event_type", $"vc",
-          lit(null).cast("string").as("__deleted"))
-        val tombstones = v0.select($"user_id").distinct()
-          .filter($"user_id" % 17 === 0)
-          .select((lit(1710000000000L) + $"user_id").as("ms"),
-            $"user_id", lit(null).cast("long").as("event_id"),
-            lit(null).cast("string").as("event_type"),
-            lit(null).cast("long").as("vc"), lit("1").as("__deleted"))
-        graft.log.LogBulkProducer.produceAt(
-          updates.unionAll(tombstones),
-          "ms", r, "profiles", orderCols = Seq("user_id"))
-      }
+      val root = profileChangelog(s, dir)
       val log = s.read.format("graftlog")
         .option("path", root).option("stream", "profiles")
         .option("valueSchema", "user_id BIGINT, event_id BIGINT, " +
@@ -1376,7 +1372,7 @@ object StreamLog {
       // session default (= core count) meant 32 commits a batch for state
       // that fits in one — ~2 s of pure commit overhead at sf0.1 (guide §2:
       // size from the data; the changelog CONTENT is partition-invariant)
-      val q = graft.streaming.StreamHarness.start(s, statePartitions = Some(4)) {
+      graft.streaming.StreamHarness.drain(s, statePartitions = Some(4)) {
         s.readStream.format("graftlog")
           .option("path", rootA).option("stream", "events")
           .option("startingOffsets", "earliest")
@@ -1389,9 +1385,7 @@ object StreamLog {
           .option("checkpointLocation",
             graft.TempDirs.scratch("graft-q352-ckpt"))
           .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       }
-      q.awaitTermination()
       // compaction folds the changelog to current state per key
       graft.log.LogStore.compactKeyed(rootB, "counts", "event_type",
         graft.log.LogStore.maxId(rootB, "counts"))
@@ -1547,8 +1541,8 @@ object StreamLog {
       // read payload values only, so they are identical at any batch
       // count — drain each lane in ~4 commits instead of 25 at sf0.1
       val nIn = v0.count()
-      def lane(stream: String, keep: String): Unit = {
-        val q = graft.streaming.StreamHarness.start(s) {
+      def lane(stream: String, keep: String): Unit =
+        graft.streaming.StreamHarness.drain(s) {
           s.readStream.format("graftlog")
             .option("path", rootA).option("stream", "events")
             .option("startingOffsets", "earliest")
@@ -1560,10 +1554,7 @@ object StreamLog {
             .option("path", rootB).option("stream", stream)
             .option("checkpointLocation",
               graft.TempDirs.scratch(s"graft-q355-ckpt-$stream"))
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
         }
-        q.awaitTermination()
-      }
       lane("clean", s"NOT ($badPred)")
       lane("quarantine", badPred)
       def digest(stream: String): DataFrame =
@@ -1631,25 +1622,7 @@ object StreamLog {
         |    ELSE 0 END) AS BIGINT) AS n_unchanged
         |FROM cls""") { (s, dir) =>
       import s.implicits._
-      val v0 = Tables.load(s, dir, "events")
-        .select($"event_id", $"user_id", $"event_type",
-          expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
-      // same changelog fixture as q346 (shared memoized log)
-      val root = graft.LogFixtures.producedLog(dir, "q346") { r =>
-        val updates = v0.select(
-          (lit(1700000000000L) + $"event_id").as("ms"),
-          $"user_id", $"event_id", $"event_type", $"vc",
-          lit(null).cast("string").as("__deleted"))
-        val tombstones = v0.select($"user_id").distinct()
-          .filter($"user_id" % 17 === 0)
-          .select((lit(1710000000000L) + $"user_id").as("ms"),
-            $"user_id", lit(null).cast("long").as("event_id"),
-            lit(null).cast("string").as("event_type"),
-            lit(null).cast("long").as("vc"), lit("1").as("__deleted"))
-        graft.log.LogBulkProducer.produceAt(
-          updates.unionAll(tombstones),
-          "ms", r, "profiles", orderCols = Seq("user_id"))
-      }
+      val root = profileChangelog(s, dir)
       val log = s.read.format("graftlog")
         .option("path", root).option("stream", "profiles")
         .option("valueSchema", "user_id BIGINT, event_id BIGINT, " +
@@ -1705,18 +1678,10 @@ object StreamLog {
         |  FROM events WHERE event_type <> 'error'))"""
     }) { (s, dir) =>
       import s.implicits._
-      val v0 = Tables.load(s, dir, "events")
-        .select($"event_id", $"event_type",
-          expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
-      val rootA = graft.LogFixtures.producedLog(dir, "q341") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          v0.select((lit(1700000000000L) + $"event_id").as("ms"),
-            $"event_id", $"event_type", $"vc"),
-          "ms", r, "events", orderCols = Seq("event_id"))
-      }
+      val rootA = pipeSourceLog(s, dir)
       // the pipe: source A -> handler filter -> engine streaming sink B
       val rootB = graft.TempDirs.scratch("graft-q341-replica")
-      val pipe = graft.streaming.StreamHarness.start(s) {
+      graft.streaming.StreamHarness.drain(s) {
         s.readStream.format("graftlog")
           .option("path", rootA).option("stream", "events")
           .option("startingOffsets", "earliest")
@@ -1728,8 +1693,6 @@ object StreamLog {
           .option("path", rootB).option("stream", "replica")
           .option("checkpointLocation", graft.TempDirs.scratch("graft-q341-ckpt"))
       }
-      pipe.processAllAvailable()
-      pipe.stop()
       // certificate over the replica, read back through the typed source
       s.read.format("graftlog")
         .option("path", rootB).option("stream", "replica")
@@ -1747,10 +1710,10 @@ object StreamLog {
     q("q342_pipe_resume_replication", {
       val ph = graft.functions.TextHash.duckPolyHash(
         "concat_ws('|', event_id, event_type, vc)")
-      // q341's pipe interrupted and RESUMED: the first query processes
-      // exactly one committed micro-batch (Trigger.Once + a trigger cap
-      // of ~a third of the stream) and stops; a second query on the SAME
-      // checkpoint drains the remainder with AvailableNow. The replica's
+      // q341's pipe interrupted and RESUMED: the first query commits
+      // exactly one micro-batch of ~a third of the stream (a trigger cap
+      // under StreamHarness.firstBatch) and stops; a second query on the
+      // SAME checkpoint drains the remainder. The replica's
       // digest triple still equals the oracle's source digests — the
       // checkpoint-resume exactly-once contract (no re-append of the
       // committed batch, no gap at the seam), which is precisely what the
@@ -1765,42 +1728,36 @@ object StreamLog {
         |  FROM events WHERE event_type <> 'error'))"""
     }) { (s, dir) =>
       import s.implicits._
-      val v0 = Tables.load(s, dir, "events")
-        .select($"event_id", $"event_type",
-          expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
-      val rootA = graft.LogFixtures.producedLog(dir, "q341") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          v0.select((lit(1700000000000L) + $"event_id").as("ms"),
-            $"event_id", $"event_type", $"vc"),
-          "ms", r, "events", orderCols = Seq("event_id"))
-      }
+      val rootA = pipeSourceLog(s, dir)
       val rootB = graft.TempDirs.scratch("graft-q342-replica")
       val ckpt = graft.TempDirs.scratch("graft-q342-ckpt")
-      def pipe(trigger: org.apache.spark.sql.streaming.Trigger,
-          cap: String): Unit = {
-        val q = graft.streaming.StreamHarness.start(s) {
-          s.readStream.format("graftlog")
-            .option("path", rootA).option("stream", "events")
-            .option("startingOffsets", "earliest")
-            .option("maxEntriesPerTrigger", cap)
-            .load()
-            .filter($"values".getItem("event_type") =!= "error")
-            .select($"values")
-            .writeStream.format("graftlog")
-            .option("path", rootB).option("stream", "replica")
-            .option("checkpointLocation", ckpt)
-            .trigger(trigger)
-        }
-        q.awaitTermination()
-      }
+      // cap scaled from the input so the phase split holds at any SF (a
+      // fixed 3000 meant 1+33 batches at sf0.1, and reads all of sf0.001)
+      val resumeCap = (Tables.rowCount(s, dir, "events") / 3 + 1).toString
+      def pipe = s.readStream.format("graftlog")
+        .option("path", rootA).option("stream", "events")
+        .option("startingOffsets", "earliest")
+        .option("maxEntriesPerTrigger", resumeCap)
+        .load()
+        .filter($"values".getItem("event_type") =!= "error")
+        .select($"values")
+        .writeStream.format("graftlog")
+        .option("path", rootB).option("stream", "replica")
+        .option("checkpointLocation", ckpt)
       // phase 1: one committed batch of ~a third of the stream, then stop
-      // (the "crash") — cap scaled from the input so the phase split holds
-      // at any SF (a fixed 3000 meant 1+33 batches at sf0.1)
-      val resumeCap = math.max(3000L,
-        Tables.rowCount(s, dir, "events") / 3 + 1).toString
-      pipe(org.apache.spark.sql.streaming.Trigger.Once(), resumeCap)
+      // (the "crash"), strictly below the stream head
+      val crashed = graft.streaming.StreamHarness.firstBatch(s, ckpt)(pipe)
+        .recentProgress
+      require(crashed.map(_.batchId).distinct.sameElements(Seq(0L)),
+        s"q342: phase 1 ran batches ${crashed.map(_.batchId).mkString(",")}, not one")
+      val seam = graft.sources.GraftLogOffset
+        .parse(crashed.head.sources.head.endOffset, "events").id("events")
+      require(seam < graft.log.LogStore.maxId(rootA, "events"),
+        s"q342: phase 1 read to $seam, the stream head; nothing is left to resume")
       // phase 2: resume from the checkpoint, drain the rest
-      pipe(org.apache.spark.sql.streaming.Trigger.AvailableNow(), resumeCap)
+      val resumed = graft.streaming.StreamHarness.drain(s)(pipe)
+        .recentProgress.map(_.numInputRows).sum
+      require(resumed > 0, "q342: phase 2 read no rows past the seam")
       s.read.format("graftlog")
         .option("path", rootB).option("stream", "replica")
         .option("valueSchema",
@@ -1846,7 +1803,7 @@ object StreamLog {
           "ms", r, "events", orderCols = Seq("event_id"))
       }
       val rootB = graft.TempDirs.scratch("graft-q343-replica")
-      val pipe = graft.streaming.StreamHarness.start(s) {
+      graft.streaming.StreamHarness.drain(s) {
         s.readStream.format("graftlog")
           .option("path", rootA).option("stream", "events")
           .option("startingOffsets", "earliest")
@@ -1863,9 +1820,7 @@ object StreamLog {
           .option("path", rootB).option("stream", "replica")
           .option("shards", "4").option("shardKey", "user_id")
           .option("checkpointLocation", graft.TempDirs.scratch("graft-q343-ckpt"))
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
       }
-      pipe.awaitTermination()
       // read all four shard streams back through the multi-stream reader
       val shardNames = (0 until 4).map(i => s"replica.s$i")
       val replica = s.read.format("graftlog")
@@ -2243,7 +2198,7 @@ object StreamLog {
             $"event_id", $"user_id", $"obs"),
           "ms", r, "events", orderCols = Seq("event_id"))
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q216", 4, rocksdb = true) {
+      graft.streaming.StreamHarness.runToMemory(s, "q216", 4) {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema", "event_id BIGINT, user_id BIGINT, obs BIGINT")
@@ -2296,7 +2251,7 @@ object StreamLog {
             $"event_id", $"event_type", $"vd"),
           "ms", r, "events", orderCols = Seq("event_id"))
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q224", 4, rocksdb = true) {
+      graft.streaming.StreamHarness.runToMemory(s, "q224", 4) {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema", "event_id BIGINT, event_type STRING, vd BIGINT")
@@ -2345,8 +2300,7 @@ object StreamLog {
             $"event_type"),
           "ms", r, "ev", orderCols = Seq("tsu", "event_id"))
       }
-      val fin = graft.streaming.StreamHarness.runToMemory(s, "q233", 4,
-        rocksdb = true) {
+      val fin = graft.streaming.StreamHarness.runToMemory(s, "q233", 4) {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("valueSchema",
@@ -2477,8 +2431,7 @@ object StreamLog {
             $"event_id", $"user_id", $"event_type", $"us"),
           "ms", r, "events", orderCols = Seq("event_id"))
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q300", 4,
-          rocksdb = true) {
+      graft.streaming.StreamHarness.runToMemory(s, "q300", 4) {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema",

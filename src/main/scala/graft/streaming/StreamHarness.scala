@@ -1,20 +1,20 @@
 package graft.streaming
 
+import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import java.nio.file.{Files, Paths}
+
 /** Where engine streaming queries start and drain. [[start]] is the one
-  * place a `DataStreamWriter` is started: it installs the java.nio
-  * checkpoint file manager and pins state-store sizing only for the
-  * duration of `start()` (safe to restore right after — the stream clones
-  * the session conf synchronously inside start). [[runToMemory]] drains a
-  * plan into a fresh uniquely-named memory sink under Trigger.AvailableNow
-  * with a temp checkpoint; the sink view is registered with
-  * [[graft.CacheScope]] before the wait, so the runner's per-query release
-  * drops the drained rows from driver memory even after a failed drain
-  * (per-row sinks would otherwise pin the whole stream for the session's
-  * lifetime); and, unless the caller opts out, a drain that dropped rows at
-  * the watermark fails instead of returning a short answer.
+  * place a `DataStreamWriter` is started. [[drain]] is the reference
+  * consumer's drain-the-backlog-then-stop (SURVEY §2A row 3) as one call;
+  * [[firstBatch]] runs exactly one committed micro-batch and stops; and
+  * [[runToMemory]] is the memory-sink case of [[drain]]. No engine query
+  * picks its own trigger, wait or stop (`SourceLayoutSpec` checks the
+  * compiled classes), except q144: it appends to its source between three
+  * `processAllAvailable` phases of ONE running query, and a memory sink
+  * restarted per phase would lose the rows the earlier phases emitted.
   */
 object StreamHarness {
 
@@ -23,6 +23,7 @@ object StreamHarness {
   private val StoreKey = "spark.sql.streaming.stateStore.providerClass"
   private val RocksDb =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+  private val FirstBatchTimeoutMs = 120000L
 
   /** Start `writer`'s query: the one place an engine streaming query is
     * started. While `writer.start()` runs, the session carries:
@@ -62,46 +63,88 @@ object StreamHarness {
     }
   }
 
-  /** Drain `build`'s streaming plan to a memory sink and return it as a
-    * (lazy) DataFrame. `statePartitions` sizes the state store to the key
-    * cardinality — each micro-batch pays one state commit per partition, so
-    * small state wants far fewer than the session's shuffle default.
-    * `rocksdb` selects the RocksDB provider (required by transformWithState
-    * for column families).
+  /** Drain `writer`'s query under `Trigger.AvailableNow`: start it (through
+    * [[start]], with `statePartitions`), wait until it has read everything
+    * that was in its sources when it started, and stop it. Returns the
+    * stopped query, whose `recentProgress` stays readable.
     *
-    * With `failOnLateDrop` (the default), a drained query that silently
-    * dropped rows at the watermark ABORTS instead of returning a plausible
-    * wrong answer: every engine-streaming oracle query's fixture is produced
-    * so nothing is ever late, so a nonzero drop count means the fixture's
-    * order/watermark discipline broke (round-4 advice: q139's 0 s watermark
-    * depends on cross-batch event-time order — make disorder fail loudly).
-    * q144, which oracle-checks the drop semantics themselves, opts out.
+    * A drain that dropped rows at the watermark FAILS instead of returning a
+    * plausible wrong answer: every engine-streaming oracle fixture is
+    * produced so nothing is ever late, so a nonzero drop count means the
+    * fixture's order/watermark discipline broke (q139's 0 s watermark
+    * depends on cross-batch event-time order).
+    */
+  def drain(s: SparkSession, statePartitions: Option[Int] = None)
+      (writer: => DataStreamWriter[_]): StreamingQuery =
+    drainWith(s, statePartitions, Nil)(writer)
+
+  private def drainWith(s: SparkSession, statePartitions: Option[Int],
+      pins: Seq[(String, String)])(writer: => DataStreamWriter[_]): StreamingQuery = {
+    val q = withConf(s, pins) {
+      start(s, statePartitions)(writer.trigger(Trigger.AvailableNow()))
+    }
+    try q.awaitTermination()
+    finally q.stop()
+    val dropped = q.recentProgress.iterator
+      .flatMap(p => Option(p.stateOperators).iterator.flatten)
+      .map(_.numRowsDroppedByWatermark)
+      .sum
+    require(dropped == 0L,
+      s"${Option(q.name).getOrElse(q.id.toString)} dropped $dropped late rows at " +
+        "the watermark — the fixture's event-time order or watermark delay no " +
+        "longer covers its disorder")
+    q
+  }
+
+  /** Run exactly ONE micro-batch of `writer`'s query on `checkpoint`, then
+    * stop: a processing-time trigger an hour long fires the first batch at
+    * once and the second an hour later, and the query stops as soon as its
+    * first batch is in the checkpoint's commit log (it fails after 120 s
+    * without one). A source cap (`maxEntriesPerTrigger`) bounds what that
+    * batch reads — unlike `Trigger.Once`, under which Spark reads every
+    * source to its head and ignores the cap. Returns the stopped query.
+    */
+  def firstBatch(s: SparkSession, checkpoint: String,
+      statePartitions: Option[Int] = None)
+      (writer: => DataStreamWriter[_]): StreamingQuery = {
+    val q = start(s, statePartitions) {
+      writer.option("checkpointLocation", checkpoint)
+        .trigger(Trigger.ProcessingTime("1 hour"))
+    }
+    try {
+      val commit0 = Paths.get(checkpoint, "commits", "0")
+      val deadline = System.currentTimeMillis() + FirstBatchTimeoutMs
+      while (!Files.exists(commit0) && q.isActive &&
+          System.currentTimeMillis() < deadline) Thread.sleep(50)
+      q.exception.foreach(e => throw e)
+      require(Files.exists(commit0),
+        s"the first micro-batch on $checkpoint did not commit within " +
+          s"${FirstBatchTimeoutMs / 1000} s")
+    } finally q.stop()
+    q
+  }
+
+  /** [[drain]] `build`'s streaming plan into a fresh, uniquely named memory
+    * sink on a temp checkpoint and return the sink as a (lazy) DataFrame.
+    * `statePartitions` sizes the state store to the key cardinality. The
+    * sink view is registered with [[graft.CacheScope]] first, so the
+    * runner's per-query release frees the drained rows even after a
+    * failed drain. A plan holding a `transformWithState` runs
+    * on the RocksDB state store, the one provider Spark accepts for it.
     */
   def runToMemory(s: SparkSession, prefix: String, statePartitions: Int,
-      mode: String = "append", rocksdb: Boolean = false,
-      failOnLateDrop: Boolean = true)
-      (build: => DataFrame): DataFrame = {
+      mode: String = "append")(build: => DataFrame): DataFrame = {
     val sinkName = s"${prefix}_sink_${System.nanoTime()}"
-    val q = withConf(s, if (rocksdb) Seq(StoreKey -> RocksDb) else Nil) {
-      start(s, Some(statePartitions)) {
-        build.writeStream.outputMode(mode)
-          .format("memory").queryName(sinkName)
-          .option("checkpointLocation", graft.TempDirs.scratch(s"graft-$prefix-ckpt"))
-          .trigger(Trigger.AvailableNow())
-      }
-    }
-    // register before waiting: a query that fails mid-drain must still get
-    // its partially filled sink dropped at the next release
+    val plan = build
+    val store =
+      if (plan.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
+        Seq(StoreKey -> RocksDb)
+      else Nil
     graft.CacheScope.sinkView(s, sinkName)
-    q.awaitTermination()
-    if (failOnLateDrop) {
-      val dropped = q.recentProgress.iterator
-        .flatMap(p => Option(p.stateOperators).iterator.flatten)
-        .map(_.numRowsDroppedByWatermark)
-        .sum
-      require(dropped == 0L,
-        s"$prefix dropped $dropped late rows at the watermark — the fixture's " +
-          "event-time order or watermark delay no longer covers its disorder")
+    drainWith(s, Some(statePartitions), store) {
+      plan.writeStream.outputMode(mode)
+        .format("memory").queryName(sinkName)
+        .option("checkpointLocation", graft.TempDirs.scratch(s"graft-$prefix-ckpt"))
     }
     s.table(sinkName)
   }

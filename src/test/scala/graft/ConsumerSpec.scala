@@ -18,6 +18,14 @@ object ConsumerSpec {
   val parallelSeen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
   val parallelHandler: (String, Option[String], String, Map[String, String]) => HandlerResult =
     (_, _, _, values) => { parallelSeen.add(values("n")); HandlerResult.Ok }
+  // parallel-mode dead-letter cases: every "job" but "poison" is recorded
+  val parallelJobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  val failPoison: (String, Option[String], String, Map[String, String]) => HandlerResult =
+    (_, _, _, values) =>
+      if (values("job") == "poison") HandlerResult.Err(new RuntimeException("boom"))
+      else { parallelJobs.add(values("job")); HandlerResult.Ok }
+  val recordJobs: (String, Option[String], String, Map[String, String]) => HandlerResult =
+    (_, _, _, values) => { parallelJobs.add(values("job")); HandlerResult.Ok }
 }
 
 class ConsumerSpec extends AnyFunSuite {
@@ -191,6 +199,54 @@ class ConsumerSpec extends AnyFunSuite {
     assert(!invocations.contains("poison"), "parked message must stay gone")
     assert(LogStore.readRange(root, "dlq", LogId.Zero,
       LogStore.maxId(root, "dlq")).size == 1)
+  }
+
+  test("parallel mode: poison message parks in the dead-letter stream after maxDeliveries, then stays gone") {
+    import graft.log.{LogId, LogStore}
+    // the ordered-mode case above with partition tasks dispatching: the
+    // first delivery fails in a task, which counts it in its own p<N>
+    // ledger, so the restart's drain is delivery 2 = maxDeliveries
+    val root = TestSpark.tmpDir("log")
+    val w = new LogWriter(root, "s")
+    w.produce(Map("job" -> "good"))
+    val pid = w.produce(Map("job" -> "poison")).toString
+    val shared = cfg(root, "s", Some("g1")).copy(ordered = false,
+      raiseErrors = false, maxDeliveries = Some(2), deadLetterStream = Some("dlq"))
+    def dlq = LogStore.readRange(root, "dlq", LogId.Zero, LogStore.maxId(root, "dlq"))
+    ConsumerSpec.parallelJobs.clear()
+    ConsumerRunner.runSupervised(spark, shared, ConsumerSpec.failPoison,
+      until = _ => !ConsumerSpec.parallelJobs.isEmpty).stop()
+    assert(dlq.isEmpty, "one failure must not dead-letter yet")
+    ConsumerRunner.runSupervised(spark, shared, ConsumerSpec.failPoison, until = _ => true).stop()
+    assert(dlq.size == 1, s"exactly one dead-lettered entry, got ${dlq.size}")
+    assert(dlq.head.values("job") == "poison")
+    assert(dlq.head.values("__dlq_id") == pid)
+    assert(dlq.head.values("__dlq_attempts") == "2")
+    // parked = acked: a further restart neither re-dispatches nor re-parks
+    ConsumerSpec.parallelJobs.clear()
+    val c = ConsumerRunner.runSupervised(spark, shared, ConsumerSpec.recordJobs, until = _ => true)
+    c.stop()
+    assert(!ConsumerSpec.parallelJobs.contains("poison"), "parked message must stay gone")
+    assert(c.pendingSummary().isEmpty)
+    assert(dlq.size == 1)
+  }
+
+  test("parallel mode: dead-letter routing in a task breaks a raiseErrors crash loop") {
+    import graft.log.{LogId, LogStore}
+    // every delivery raises inside a partition task and fails the batch;
+    // the third one, counted across the restarts' task ledgers, parks the
+    // message instead and the batch commits
+    val root = TestSpark.tmpDir("log")
+    val w = new LogWriter(root, "s")
+    w.produce(Map("job" -> "poison"))
+    w.produce(Map("job" -> "good"))
+    val shared = cfg(root, "s", Some("g1")).copy(ordered = false,
+      raiseErrors = true, maxDeliveries = Some(3), deadLetterStream = Some("dlq"))
+    ConsumerSpec.parallelJobs.clear()
+    ConsumerRunner.runSupervised(spark, shared, ConsumerSpec.failPoison,
+      maxRestarts = 5, until = _ => ConsumerSpec.parallelJobs.contains("good")).stop()
+    val dlq = LogStore.readRange(root, "dlq", LogId.Zero, LogStore.maxId(root, "dlq"))
+    assert(dlq.size == 1 && dlq.head.values("__dlq_attempts") == "3")
   }
 
   test("dead-letter routing breaks a raiseErrors crash loop") {

@@ -13,8 +13,10 @@ import scala.jdk.CollectionConverters._
   * one call per run) touch registration, the sink has one data writer per
   * write mode, only `SegmentFormat` tells formats apart by name or renames
   * a file into a stream, nothing outside `graft/log` encodes a values-only
-  * line, every streaming query starts through `StreamHarness.start`, and
-  * every temp directory comes from `TempDirs`.
+  * line, every streaming query starts through `StreamHarness.start` and
+  * takes its trigger and wait from `StreamHarness` (or the consumer), each
+  * memoized fixture log has one producer, and every temp directory comes
+  * from `TempDirs`.
   */
 class SourceLayoutSpec extends AnyFunSuite {
   private val root = Paths.get("src/main/scala")
@@ -109,6 +111,25 @@ class SourceLayoutSpec extends AnyFunSuite {
     assert(calls.nonEmpty, "the guard sees no start at all: is it reading the right classes?")
     val hits = calls.filterNot(_.startsWith("graft/streaming/StreamHarness.scala:"))
     assert(hits.isEmpty, "DataStreamWriter started outside StreamHarness.start:\n" + hits.mkString("\n"))
+  }
+
+  test("streaming triggers and waits are set only in StreamHarness and the consumer") {
+    val allowed = Set("graft/streaming/StreamHarness.scala", "graft/consumer/ConsumerRunner.scala")
+    val calls = compiledCalls("/DataStreamWriter", Set("trigger")) ++
+      compiledCalls("/StreamingQuery", Set("awaitTermination"))
+    assert(calls.nonEmpty, "the guard sees no trigger or wait at all: is it reading the right classes?")
+    val hits = calls.filterNot(c => allowed(c.substring(0, c.lastIndexOf(':'))))
+    assert(hits.isEmpty, "streaming drain hand-rolled outside StreamHarness:\n" + hits.mkString("\n"))
+  }
+
+  test("each memoized fixture log key is produced at one call site") {
+    val key = """producedLog\(\s*\w+\s*,\s*"([^"]+)"""".r
+    val sites = offenders(key.regex, Set.empty)
+      .flatMap(hit => key.findAllMatchIn(hit).map(m => m.group(1) -> hit))
+    assert(sites.nonEmpty, "the guard sees no producedLog call at all")
+    val shared = sites.groupBy(_._1).filter(_._2.size > 1)
+    assert(shared.isEmpty, "one fixture key, several producers:\n" +
+      shared.values.flatten.map(_._2).toSeq.sorted.mkString("\n"))
   }
 
   test("createTempDirectory appears only in TempDirs") {
