@@ -975,7 +975,11 @@ object StreamLog {
           .mode("append").save()
       append(ev.withColumn("keep", !isDropped && !isLateKept))
       val sinkName = s"q144_sink_${System.nanoTime()}"
-      val q = graft.streaming.StreamHarness.start(s, statePartitions = Some(4)) {
+      graft.CacheScope.sinkView(s, sinkName)
+      val flushMs = (mS + 72L * 3600) * 1000
+      // drains: the on-time phase (wm -> m - 1 h; evict), the deferred phase
+      // against the advanced watermark, the flush row closing every window
+      val q = graft.streaming.StreamHarness.drainAcross(s, statePartitions = 4) {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
@@ -988,21 +992,12 @@ object StreamLog {
           .writeStream.outputMode("append")
           .format("memory").queryName(sinkName)
           .option("checkpointLocation", graft.TempDirs.scratch("graft-q144-ckpt"))
-      }
-      graft.CacheScope.sinkView(s, sinkName)
-      q.processAllAvailable() // on-time phase drains; wm -> m - 1 h; evict
-      append(ev.withColumn("keep", isDropped || isLateKept))
-      q.processAllAvailable() // deferred phase meets the advanced watermark
-      val flushMs = (mS + 72L * 3600) * 1000
-      append(s.range(1).selectExpr("CAST(0 AS BIGINT) AS event_id",
-        "'__flush' AS event_type",
-        s"date_format(timestamp_millis($flushMs), '$tsFmt') AS ts_s",
-        "true AS keep"))
-      q.processAllAvailable() // finalizes every real window
-      q.stop()
-      val dropped = q.recentProgress.iterator
-        .flatMap(p => Option(p.stateOperators).iterator.flatten)
-        .map(_.numRowsDroppedByWatermark).sum
+      }(() => append(ev.withColumn("keep", isDropped || isLateKept)),
+        () => append(s.range(1).selectExpr("CAST(0 AS BIGINT) AS event_id",
+          "'__flush' AS event_type",
+          s"date_format(timestamp_millis($flushMs), '$tsFmt') AS ts_s",
+          "true AS keep")))
+      val dropped = graft.streaming.StreamHarness.droppedByWatermark(q)
       // numRowsDroppedByWatermark counts what reaches the state store,
       // which is POST-partial-aggregation rows: map-side combine can merge
       // several deferred input rows into one (window, type) group before

@@ -9,12 +9,12 @@ import java.nio.file.{Files, Paths}
 /** Where engine streaming queries start and drain. [[start]] is the one
   * place a `DataStreamWriter` is started. [[drain]] is the reference
   * consumer's drain-the-backlog-then-stop (SURVEY §2A row 3) as one call;
-  * [[firstBatch]] runs exactly one committed micro-batch and stops; and
-  * [[runToMemory]] is the memory-sink case of [[drain]]. No engine query
-  * picks its own trigger, wait or stop (`SourceLayoutSpec` checks the
-  * compiled classes), except q144: it appends to its source between three
-  * `processAllAvailable` phases of ONE running query, and a memory sink
-  * restarted per phase would lose the rows the earlier phases emitted.
+  * [[firstBatch]] runs exactly one committed micro-batch and stops;
+  * [[runToMemory]] is the memory-sink case of [[drain]]; and
+  * [[drainAcross]] keeps ONE query running while its source is appended to
+  * between drains (q144: a memory sink restarted per phase would lose the
+  * rows the earlier phases emitted). No engine query picks its own trigger,
+  * wait or stop: `SourceLayoutSpec` checks the compiled classes.
   */
 object StreamHarness {
 
@@ -63,16 +63,12 @@ object StreamHarness {
     }
   }
 
-  /** Drain `writer`'s query under `Trigger.AvailableNow`: start it (through
-    * [[start]], with `statePartitions`), wait until it has read everything
-    * that was in its sources when it started, and stop it. Returns the
-    * stopped query, whose `recentProgress` stays readable.
-    *
+  /** Drain `writer`'s query under `Trigger.AvailableNow` (started through
+    * [[start]]): wait until it has read what its sources held at the start,
+    * stop it, and return the stopped query (`recentProgress` stays readable).
     * A drain that dropped rows at the watermark FAILS instead of returning a
-    * plausible wrong answer: every engine-streaming oracle fixture is
-    * produced so nothing is ever late, so a nonzero drop count means the
-    * fixture's order/watermark discipline broke (q139's 0 s watermark
-    * depends on cross-batch event-time order).
+    * plausible wrong answer: every engine-streaming oracle fixture is made so
+    * nothing is late (q139's 0 s watermark relies on cross-batch order).
     */
   def drain(s: SparkSession, statePartitions: Option[Int] = None)
       (writer: => DataStreamWriter[_]): StreamingQuery =
@@ -85,16 +81,18 @@ object StreamHarness {
     }
     try q.awaitTermination()
     finally q.stop()
-    val dropped = q.recentProgress.iterator
-      .flatMap(p => Option(p.stateOperators).iterator.flatten)
-      .map(_.numRowsDroppedByWatermark)
-      .sum
+    val dropped = droppedByWatermark(q)
     require(dropped == 0L,
       s"${Option(q.name).getOrElse(q.id.toString)} dropped $dropped late rows at " +
         "the watermark — the fixture's event-time order or watermark delay no " +
         "longer covers its disorder")
     q
   }
+
+  /** Rows `q`'s state operators dropped at the watermark, over its recent progress. */
+  def droppedByWatermark(q: StreamingQuery): Long = q.recentProgress.iterator
+    .flatMap(p => Option(p.stateOperators).iterator.flatten)
+    .map(_.numRowsDroppedByWatermark).sum
 
   /** Run exactly ONE micro-batch of `writer`'s query on `checkpoint`, then
     * stop: a processing-time trigger an hour long fires the first batch at
@@ -104,10 +102,9 @@ object StreamHarness {
     * batch reads — unlike `Trigger.Once`, under which Spark reads every
     * source to its head and ignores the cap. Returns the stopped query.
     */
-  def firstBatch(s: SparkSession, checkpoint: String,
-      statePartitions: Option[Int] = None)
+  def firstBatch(s: SparkSession, checkpoint: String)
       (writer: => DataStreamWriter[_]): StreamingQuery = {
-    val q = start(s, statePartitions) {
+    val q = start(s) {
       writer.option("checkpointLocation", checkpoint)
         .trigger(Trigger.ProcessingTime("1 hour"))
     }
@@ -124,22 +121,32 @@ object StreamHarness {
     q
   }
 
-  /** [[drain]] `build`'s streaming plan into a fresh, uniquely named memory
-    * sink on a temp checkpoint and return the sink as a (lazy) DataFrame.
-    * `statePartitions` sizes the state store to the key cardinality. The
-    * sink view is registered with [[graft.CacheScope]] first, so the
-    * runner's per-query release frees the drained rows even after a
-    * failed drain. A plan holding a `transformWithState` runs
-    * on the RocksDB state store, the one provider Spark accepts for it.
+  /** Start `writer`'s query on the default trigger and let it read all it
+    * can; after each of `appends`, let the SAME query read again; stop. Late
+    * drops are the caller's to judge (q144 drops rows on purpose).
+    */
+  def drainAcross(s: SparkSession, statePartitions: Int)
+      (writer: => DataStreamWriter[_])(appends: (() => Unit)*): StreamingQuery = {
+    val q = start(s, Some(statePartitions))(writer)
+    try {
+      q.processAllAvailable()
+      appends.foreach { append => append(); q.processAllAvailable() }
+    } finally q.stop()
+    q
+  }
+
+  /** [[drain]] `build`'s plan into a fresh memory sink on a temp checkpoint
+    * and return the sink as a (lazy) DataFrame. The sink view is registered
+    * with [[graft.CacheScope]] first, so a failed drain's rows are freed too.
+    * A plan holding a `transformWithState` runs on RocksDB, the one state
+    * store Spark accepts for it.
     */
   def runToMemory(s: SparkSession, prefix: String, statePartitions: Int,
       mode: String = "append")(build: => DataFrame): DataFrame = {
     val sinkName = s"${prefix}_sink_${System.nanoTime()}"
     val plan = build
-    val store =
-      if (plan.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
-        Seq(StoreKey -> RocksDb)
-      else Nil
+    val store = if (plan.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
+      Seq(StoreKey -> RocksDb) else Nil
     graft.CacheScope.sinkView(s, sinkName)
     drainWith(s, Some(statePartitions), store) {
       plan.writeStream.outputMode(mode)

@@ -116,7 +116,7 @@ class SourceLayoutSpec extends AnyFunSuite {
   test("streaming triggers and waits are set only in StreamHarness and the consumer") {
     val allowed = Set("graft/streaming/StreamHarness.scala", "graft/consumer/ConsumerRunner.scala")
     val calls = compiledCalls("/DataStreamWriter", Set("trigger")) ++
-      compiledCalls("/StreamingQuery", Set("awaitTermination"))
+      compiledCalls("/StreamingQuery", Set("awaitTermination", "processAllAvailable"))
     assert(calls.nonEmpty, "the guard sees no trigger or wait at all: is it reading the right classes?")
     val hits = calls.filterNot(c => allowed(c.substring(0, c.lastIndexOf(':'))))
     assert(hits.isEmpty, "streaming drain hand-rolled outside StreamHarness:\n" + hits.mkString("\n"))
