@@ -76,10 +76,6 @@ object MediaPipeline {
     }
   }
 
-  /** Back-compat alias; prefer [[Decoder]]. */
-  @deprecated("use Decoder", "0.1.0")
-  val StubDecoder: Decoder.type = Decoder
-
   /** Wrap string content as media records (the fixture stand-in for blobs). */
   def fromText(spark: SparkSession, rows: Dataset[(Long, String)],
       mime: String): Dataset[MediaRecord] = {

@@ -1,6 +1,7 @@
 package graft.streaming
 
-import org.apache.spark.sql.catalyst.plans.logical.TransformWithState
+import org.apache.spark.sql.catalyst.plans.{Inner, LeftSemi}
+import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
@@ -21,6 +22,7 @@ object StreamHarness {
   private val ShuffleKey = "spark.sql.shuffle.partitions"
   private val ManagerKey = "spark.sql.streaming.checkpointFileManagerClass"
   private val StoreKey = "spark.sql.streaming.stateStore.providerClass"
+  private val NoDataKey = "spark.sql.streaming.noDataMicroBatches.enabled"
   private val RocksDb =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   private val FirstBatchTimeoutMs = 120000L
@@ -139,20 +141,48 @@ object StreamHarness {
     * and return the sink as a (lazy) DataFrame. The sink view is registered
     * with [[graft.CacheScope]] first, so a failed drain's rows are freed too.
     * A plan holding a `transformWithState` runs on RocksDB, the one state
-    * store Spark accepts for it.
+    * store Spark accepts for it. An [[evictionSilent]] plan drains without
+    * Spark's no-data micro-batches: the drain ends at its last data batch
+    * instead of running one more batch that only drops state it discards.
     */
   def runToMemory(s: SparkSession, prefix: String, statePartitions: Int,
       mode: String = "append")(build: => DataFrame): DataFrame = {
     val sinkName = s"${prefix}_sink_${System.nanoTime()}"
     val plan = build
-    val store = if (plan.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState]))
+    val analyzed = plan.queryExecution.analyzed
+    val store = if (analyzed.exists(_.isInstanceOf[TransformWithState]))
       Seq(StoreKey -> RocksDb) else Nil
+    val noData = if (evictionSilent(analyzed, mode)) Seq(NoDataKey -> "false") else Nil
     graft.CacheScope.sinkView(s, sinkName)
-    drainWith(s, Some(statePartitions), store) {
+    drainWith(s, Some(statePartitions), store ++ noData) {
       plan.writeStream.outputMode(mode)
         .format("memory").queryName(sinkName)
         .option("checkpointLocation", graft.TempDirs.scratch(s"graft-$prefix-ckpt"))
     }
     s.table(sinkName)
+  }
+
+  /** True when evicting state cannot add to `plan`'s output under output
+    * `mode`, so a no-data batch (which only evicts) emits nothing. The
+    * stateful nodes allowed are stream-stream `Inner`/`LeftSemi` joins (rows
+    * are emitted on match), deduplication, and aggregates outside `append`
+    * mode (a group is emitted when it changes); the stateless ones are the
+    * kinds the engine's plans use. Anything else is refused: outer and anti
+    * joins emit unmatched rows on eviction, append-mode aggregates (session
+    * windows too) emit closed windows, and `flatMapGroupsWithState` and
+    * `transformWithState` fire timers in no-data batches.
+    */
+  private def evictionSilent(plan: LogicalPlan, mode: String): Boolean = {
+    val append = mode.equalsIgnoreCase("append")
+    def silent(n: LogicalPlan): Boolean = n match {
+      case j: Join if j.left.isStreaming && j.right.isStreaming =>
+        j.joinType == Inner || j.joinType == LeftSemi
+      case _: Aggregate | _: Distinct => !append
+      case _: Deduplicate | _: DeduplicateWithinWatermark | _: LeafNode | _: Project |
+          _: Filter | _: SubqueryAlias | _: Union | _: Generate | _: EventTimeWatermark |
+          _: Join => true
+      case _ => false
+    }
+    !plan.exists(n => n.isStreaming && !silent(n))
   }
 }

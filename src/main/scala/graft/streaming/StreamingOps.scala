@@ -28,26 +28,6 @@ object StreamingOps {
         .as("win") +: keyed :+ col("n")): _*)
   }
 
-  /** Sliding event-time aggregation (window/slide), watermarked. */
-  def slidingCounts(events: DataFrame, tsCol: String, watermark: String,
-      window: String, slide: String): DataFrame =
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(F.window(col(tsCol), window, slide))
-      .agg(count(lit(1)).as("n"))
-      .select(col("window.start").as("start"), col("n"))
-
-  /** Session windows (gap-based), watermarked. */
-  def sessionCounts(events: DataFrame, tsCol: String, watermark: String,
-      gap: String, keyCols: String*): DataFrame = {
-    val keyed = keyCols.map(col)
-    events
-      .withWatermark(tsCol, watermark)
-      .groupBy(session_window(col(tsCol), gap) +: keyed: _*)
-      .agg(count(lit(1)).as("n"))
-      .select((col("session_window.start").as("start") +: keyed :+ col("n")): _*)
-  }
-
   /** Streaming deduplication with bounded state: duplicates of a key arriving
     * within the watermark horizon are dropped, state beyond it is pruned —
     * the streaming twin of the batch dedup family (operators.Dedup).

@@ -175,7 +175,8 @@ object ScaleCurve {
 
     // warm-up (codegen, parquet readers), same discipline as Bench
     try graft.SparkEntry.queries("q01_pricing_summary")(spark, baseDir).count()
-    catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      System.err.println(s"[warmup] q01_pricing_summary FAILED: $e") }
 
     def best2(name: String, dir: String): Double = {
       val fn = graft.SparkEntry.queries(name)

@@ -17,7 +17,8 @@ object TimeQueries {
     spark.sparkContext.setLogLevel("WARN")
     // fixed warmup, as in Bench
     try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      System.err.println(s"[warmup] q01_pricing_summary FAILED: $e") }
     // same methodology as Bench: caches live across the runs of one query
     // (the warm run is the measurement), released once at the end
     val out = names.map { name =>

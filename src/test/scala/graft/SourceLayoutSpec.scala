@@ -14,7 +14,8 @@ import scala.jdk.CollectionConverters._
   * write mode, only `SegmentFormat` tells formats apart by name or renames
   * a file into a stream, nothing outside `graft/log` encodes a values-only
   * line, every streaming query starts through `StreamHarness.start` and
-  * takes its trigger and wait from `StreamHarness` (or the consumer), each
+  * takes its trigger and wait from `StreamHarness` (or the consumer), the
+  * streaming conf keys `StreamHarness` pins are spelled only there, each
   * memoized fixture log has one producer, and every temp directory comes
   * from `TempDirs`.
   */
@@ -130,6 +131,13 @@ class SourceLayoutSpec extends AnyFunSuite {
     val shared = sites.groupBy(_._1).filter(_._2.size > 1)
     assert(shared.isEmpty, "one fixture key, several producers:\n" +
       shared.values.flatten.map(_._2).toSeq.sorted.mkString("\n"))
+  }
+
+  test("the streaming conf keys StreamHarness pins are spelled only in StreamHarness") {
+    val keys = Seq("noDataMicroBatches.enabled", "checkpointFileManagerClass",
+      "stateStore.providerClass").map(k => java.util.regex.Pattern.quote(s""""spark.sql.streaming.$k""""))
+    val hits = offenders(keys.mkString("|"), Set("StreamHarness.scala"))
+    assert(hits.isEmpty, hits.mkString("\n"))
   }
 
   test("createTempDirectory appears only in TempDirs") {
