@@ -118,42 +118,19 @@ object Bench {
     val bulkEps = best3eps("bulk_produce_eps")(bulkProduceEps(spark))
     val sinkEps = best3eps("sink_append_eps")(sinkAppendEps(spark))
     val shardedEps = best3eps("sink_append_sharded4_eps")(sinkAppendShardedEps(spark, 4))
-    // one untimed run to absorb session warmup (codegen, parquet reader JIT).
-    // FIXED query + sorted iteration order below: round-over-round deltas
-    // must compare like-for-like — a Map-order-dependent warm-up shifted
-    // whenever a query was added and made q01 look 5x slower in round 4.
-    probe("q01_warmup", 0L)(SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count())
+    QueryTimer.warmUp(spark, "bench", sfDir).foreach(e => probeErrors("q01_warmup") = e.toString)
     // best of 2 runs per query: single-run numbers on a shared box swing
     // ±20% with background load; the min is the engine's actual cost.
-    // A throwing query must NOT blend into the timings: an analysis error
-    // surfaces in ~50 ms, which reads as a 30-50x "speedup" (exactly the
-    // round-6 incident — a fixture-schema change broke every events query
-    // and the bench recorded them as fast). Failures are tracked by name
-    // and excluded from the per-query map and the suite total.
+    // Failures are tracked by name and excluded from the per-query map and
+    // the suite total.
     val failed = scala.collection.mutable.ArrayBuffer[String]()
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filterNot { case (name, _) => Bench.BenchExcluded(name) }
-      .flatMap { case (name, fn) =>
-      val runs = (1 to 2).map { i =>
-        // label jobs (optimization guide §1.5) so UI/event-log triage can
-        // attribute stages to queries; thread-local, cleared after the run
-        spark.sparkContext.setJobDescription(s"bench:$name run$i")
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case e: Throwable =>
-                   System.err.println(s"[bench] $name FAILED: $e")
-                   false
-                 }
-        finally spark.sparkContext.setJobDescription(null)
-        (ok, (System.nanoTime() - t0) / 1e9)
-      }
-      // drop query-internal caches AFTER both runs: storage memory must not
-      // grow across the full suite, but within one query's best-of-2
-      // the warm second run is the measurement (same as any warmed engine)
-      CacheScope.release()
-      if (runs.exists(_._1)) Some(name -> runs.filter(_._1).map(_._2).min)
-      else { failed += name; None }
-    }.toMap
+    val results = SparkEntry.queries.keys.toSeq.sorted
+      .filterNot(Bench.BenchExcluded)
+      .flatMap { name =>
+        val times = QueryTimer.times(spark, "bench", name, sfDir, 2)
+        if (times.nonEmpty) Some(name -> times.min)
+        else { failed += name; None }
+      }.toMap
     val wallSec = (System.nanoTime() - wallT0) / 1e9
     // Full per-query map goes to a repo file; stdout carries ONE compact
     // JSON line. The driver keeps only a ~2000-char tail of stdout, so a

@@ -31,20 +31,12 @@ final class LogWriter(root: String, stream: String,
     clock: () => Long = () => System.currentTimeMillis(),
     lockTimeoutMs: Long = 30000L,
     maxSegmentEntries: Int = 10000,
-    autoCompactSegments: Int = 0,
     compaction: Option[LogStore.CompactionPolicy] = None) {
 
   LogStore.ensureStream(root, stream)
   // the high-water id; every assignment first refreshes it from disk under
   // the stream lock (withStreamLock), so the constructor need not read it
   private var last: LogId = LogId.Zero
-
-  // `autoCompactSegments` is the shorthand for the default tiered policy;
-  // a full CompactionPolicy adds the parquet cold tier
-  private val policy: Option[LogStore.CompactionPolicy] =
-    compaction.orElse(
-      if (autoCompactSegments > 0) Some(LogStore.CompactionPolicy(autoCompactSegments))
-      else None)
 
   private def nextIdAt(now: Long): LogId = {
     last = if (now > last.millis) LogId(now, 0L) else LogId(last.millis, last.seq + 1)
@@ -84,7 +76,7 @@ final class LogWriter(root: String, stream: String,
     * writer's append (readers are compaction-safe by design). Keeps a
     * produce-heavy stream's file count O(log n) without a separate daemon.
     */
-  private def maybeAutoCompact(): Unit = policy.foreach { p =>
+  private def maybeAutoCompact(): Unit = compaction.foreach { p =>
     // count only the live JSONL tier against the trigger: frozen parquet
     // segments never merge away, so including them would leave the trigger
     // permanently exceeded and run no-op compaction passes on every append

@@ -246,21 +246,13 @@ object Assembly {
       // per source, bounded forever). The ppm readout happens batch-side
       // over the drained snapshot — the live infill-mix dashboard,
       // q414/q375's shape.
-      val v0 = T(s, dir, "documents")
-        .select($"doc_id", $"source", $"text")
-      val root = graft.LogFixtures.producedLog(dir, "q419") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          v0.select((lit(1700000000000L) + $"doc_id").as("ms"),
-            $"doc_id", $"source", $"text"),
-          "ms", r, "documents", orderCols = Seq("doc_id"))
-      }
+      val root = graft.LogFixtures.documents(s, dir)
       // trigger scales with the input so the drain stays ~3 micro-batches
       // at any SF (q352's lesson: a fixed small trigger is pure per-batch
       // commit overhead at 10x the rows; the complete-mode snapshot is
       // identical at any batch count)
-      val nIn = v0.count()
-      val agged = graft.streaming.StreamHarness.runToMemory(
-          s, "q419", 2, mode = "complete") {
+      val nIn = Tables.rowCount(s, dir, "documents")
+      val agged = graft.streaming.StreamHarness.runToMemory(s, "q419", mode = "complete") {
         fimAgg(
           s.readStream.format("graftlog")
             .option("path", root).option("stream", "documents")
@@ -342,19 +334,12 @@ object Assembly {
       // the batch-side ledger readout converts the live counts to the
       // composed (rho, epsilon) — the privacy dashboard a platform reads
       // between ingest batches, q375/q410's snapshot-readout shape.
-      val v0 = T(s, dir, "events").select($"event_id", $"event_type")
-      val root = graft.LogFixtures.producedLog(dir, "q414") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          v0.select((lit(1700000000000L) + $"event_id").as("ms"),
-            $"event_id", $"event_type"),
-          "ms", r, "events", orderCols = Seq("event_id"))
-      }
+      val root = graft.LogFixtures.eventTypes(s, dir)
       // trigger scales with the input (q352's lesson) — the complete-mode
       // snapshot is identical at any batch count, so drain in ~3 batches
       // at any SF instead of paying per-batch commit overhead
-      val nIn = v0.count()
-      val counts = graft.streaming.StreamHarness.runToMemory(
-          s, "q414", 2, mode = "complete") {
+      val nIn = Tables.rowCount(s, dir, "events")
+      val counts = graft.streaming.StreamHarness.runToMemory(s, "q414", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema", "event_id BIGINT, event_type STRING")
@@ -623,16 +608,10 @@ object Assembly {
         |    AS n_capped_users
         |FROM u GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
       import s.implicits._
-      val root = graft.LogFixtures.producedLog(dir, "q446") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          Tables.load(s, dir, "events")
-            .select((lit(1700000000000L) + $"event_id").as("ms"),
-              $"event_id", $"event_type", $"user_id"),
-          "ms", r, "ev", orderCols = Seq("event_id"))
-      }
-      graft.streaming.StreamHarness.runToMemory(s, "q446", 4) {
+      val root = graft.LogFixtures.eventTypeUser(s, dir)
+      graft.streaming.StreamHarness.runToMemory(s, "q446") {
         val src = s.readStream.format("graftlog")
-          .option("path", root).option("stream", "ev")
+          .option("path", root).option("stream", "events")
           .option("valueSchema",
             "event_id BIGINT, event_type STRING, user_id BIGINT")
           .option("startingOffsets", "earliest")

@@ -2383,30 +2383,23 @@ object Evaluation {
       // streamed counters must reproduce the batch estimator exactly.
       passAtKOracleSql) { (s, dir) =>
       import s.implicits._
-      val root = graft.LogFixtures.producedLog(dir, "q410") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          T(s, dir, "events")
-            .select((lit(1700000000000L) + $"event_id").as("ms"),
-              $"event_id", $"user_id", $"event_type"),
-          "ms", r, "events", orderCols = Seq("event_id"))
-      }
+      val root = graft.LogFixtures.eventTypeUser(s, dir)
       // trigger scales with the input (q352's lesson): the complete-mode
       // snapshot is identical at any batch count, so drain in ~3 batches
       // at any SF instead of 25 batches of commit overhead at sf0.1
-      val nIn = T(s, dir, "events").count()
-      val state = graft.streaming.StreamHarness
-        .runToMemory(s, "q410", 4, mode = "complete") {
-          s.readStream.format("graftlog")
-            .option("path", root).option("stream", "events")
-            .option("valueSchema",
-              "event_id BIGINT, user_id BIGINT, event_type STRING")
-            .option("startingOffsets", "earliest")
-            .option("maxEntriesPerTrigger", math.max(4000L, nIn / 3).toString)
-            .load()
-            .groupBy($"user_id")
-            .agg(count(lit(1)).as("n"),
-              sum(when($"event_type" === "purchase", 1L).otherwise(0L)).as("c"))
-        }
+      val nIn = Tables.rowCount(s, dir, "events")
+      val state = graft.streaming.StreamHarness.runToMemory(s, "q410", mode = "complete") {
+        s.readStream.format("graftlog")
+          .option("path", root).option("stream", "events")
+          .option("valueSchema",
+            "event_id BIGINT, event_type STRING, user_id BIGINT")
+          .option("startingOffsets", "earliest")
+          .option("maxEntriesPerTrigger", math.max(4000L, nIn / 3).toString)
+          .load()
+          .groupBy($"user_id")
+          .agg(count(lit(1)).as("n"),
+            sum(when($"event_type" === "purchase", 1L).otherwise(0L)).as("c"))
+      }
       passAtKReadout(s, state)
     },
 

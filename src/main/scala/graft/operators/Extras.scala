@@ -298,7 +298,7 @@ object Extras {
         sub.write.format("graftlog") // duplicate delivery
           .option("path", r).option("stream", "ev").mode("append").save()
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q91", 4) {
+      graft.streaming.StreamHarness.runToMemory(s, "q91") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
@@ -395,7 +395,7 @@ object Extras {
         append(reals); append(sentinels); append(flush)
       }
       val nBatch1 = reals.count() + sentinels.count() // flush lands in batch 2
-      graft.streaming.StreamHarness.runToMemory(s, "q94", 4) {
+      graft.streaming.StreamHarness.runToMemory(s, "q94") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")

@@ -752,8 +752,7 @@ object Monitoring {
               expr("CAST(floor(value * 100 + 0.5) AS BIGINT)").as("cents")),
           "ms", r, "ev", orderCols = Seq("event_id"))
       }
-      val c = graft.streaming.StreamHarness.runToMemory(
-        s, "q471", 4, mode = "complete") {
+      val c = graft.streaming.StreamHarness.runToMemory(s, "q471", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("valueSchema",

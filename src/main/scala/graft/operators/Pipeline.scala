@@ -666,7 +666,7 @@ object Pipeline {
               $"doc_id", $"lang", $"text"),
           "ms", r, "docs", orderCols = Seq("doc_id"))
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q157", 4, mode = "complete") {
+      graft.streaming.StreamHarness.runToMemory(s, "q157", mode = "complete") {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "docs")
           .option("valueSchema", "doc_id BIGINT, lang STRING, text STRING")
@@ -1193,34 +1193,26 @@ object Pipeline {
       // flag are pure projections), drained complete-mode. The oracle is
       // q433's batch statement verbatim: streamed roots must reproduce
       // the batch manifest bit for bit.
-      val root = graft.LogFixtures.producedLog(dir, "q434") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          T(s, dir, "documents")
-            .select((lit(1700000000000L) + $"doc_id").as("ms"),
-              $"doc_id", $"source", $"text"),
-          "ms", r, "docs", orderCols = Seq("doc_id"))
-      }
-      val nIn = T(s, dir, "documents").count()
-      graft.streaming.StreamHarness
-        .runToMemory(s, "q434", 4, mode = "complete") {
-          s.readStream.format("graftlog")
-            .option("path", root).option("stream", "docs")
-            .option("valueSchema", "doc_id BIGINT, source STRING, text STRING")
-            .option("startingOffsets", "earliest")
-            .option("maxEntriesPerTrigger", math.max(200L, nIn / 3).toString)
-            .load()
-            .select($"source",
-              expr("CASE WHEN substring(md5(CAST(CAST(doc_id AS STRING) AS " +
-                "BINARY)), 1, 2) < '80' THEN 1 ELSE 0 END").as("is_old"),
-              expr("graft_polyhash(text)").as("h"))
-            .groupBy($"source")
-            .agg(sum($"is_old").as("n_docs_prev"),
-              count(lit(1)).as("n_docs_now"),
-              sum($"is_old" * $"h").as("root_prev"),
-              sum($"h").as("root_now"),
-              sum((lit(1) - $"is_old") * $"h").as("delta_root"))
-        }
-        .orderBy($"source")
+      val root = graft.LogFixtures.documents(s, dir)
+      val nIn = Tables.rowCount(s, dir, "documents")
+      graft.streaming.StreamHarness.runToMemory(s, "q434", mode = "complete") {
+        s.readStream.format("graftlog")
+          .option("path", root).option("stream", "documents")
+          .option("valueSchema", "doc_id BIGINT, source STRING, text STRING")
+          .option("startingOffsets", "earliest")
+          .option("maxEntriesPerTrigger", math.max(200L, nIn / 3).toString)
+          .load()
+          .select($"source",
+            expr("CASE WHEN substring(md5(CAST(CAST(doc_id AS STRING) AS " +
+              "BINARY)), 1, 2) < '80' THEN 1 ELSE 0 END").as("is_old"),
+            expr("graft_polyhash(text)").as("h"))
+          .groupBy($"source")
+          .agg(sum($"is_old").as("n_docs_prev"),
+            count(lit(1)).as("n_docs_now"),
+            sum($"is_old" * $"h").as("root_prev"),
+            sum($"h").as("root_now"),
+            sum((lit(1) - $"is_old") * $"h").as("delta_root"))
+      }.orderBy($"source")
     },
 
     q("q435_gate_ablation", {
@@ -1881,7 +1873,7 @@ object Pipeline {
               $"doc_id", $"source", $"text"),
           "ms", r, "docs", orderCols = Seq("doc_id"))
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q388", 2, mode = "complete") {
+      graft.streaming.StreamHarness.runToMemory(s, "q388", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "docs")
           .option("valueSchema", "doc_id BIGINT, source STRING, text STRING")
@@ -2300,17 +2292,11 @@ object Pipeline {
       // oracle is q438's batch statement verbatim; streamed counters
       // must equal the batch aggregation exactly (row-for-row law in
       // QueriesSpec).
-      val root = graft.LogFixtures.producedLog(dir, "q445") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          T(s, dir, "documents")
-            .select((lit(1700000000000L) + $"doc_id").as("ms"),
-              $"doc_id", $"source", $"text"),
-          "ms", r, "docs", orderCols = Seq("doc_id"))
-      }
+      val root = graft.LogFixtures.documents(s, dir)
       val sparkLuhn = Pipeline.luhnValidSparkSql
-      graft.streaming.StreamHarness.runToMemory(s, "q445", 2, mode = "complete") {
+      graft.streaming.StreamHarness.runToMemory(s, "q445", mode = "complete") {
         s.readStream.format("graftlog")
-          .option("path", root).option("stream", "docs")
+          .option("path", root).option("stream", "documents")
           .option("valueSchema", "doc_id BIGINT, source STRING, text STRING")
           .option("startingOffsets", "earliest")
           .option("maxEntriesPerTrigger", "3000")

@@ -2051,28 +2051,27 @@ object Similarity {
         s"named_struct('c', CAST($c AS BIGINT), 'cm', array(${cm.mkString("L,") + "L"}))"
       }.mkString("array(", ", ", ")")
       val nDelta = e.count() - nBase
-      val state = graft.streaming.StreamHarness
-        .runToMemory(s, "q452", 4, mode = "complete") {
-          s.readStream.format("graftlog")
-            .option("path", root).option("stream", "embeddings")
-            .option("valueSchema", "vec_id BIGINT, emb STRING")
-            .option("startingOffsets", "earliest")
-            // >= 3 micro-batches at every SF so the bounded state really
-            // carries across batch boundaries (q424's trigger discipline)
-            .option("maxEntriesPerTrigger", math.max(64L, nDelta / 3).toString)
-            .load()
-            .select(expr(
-              s"""transform(split(emb, ','),
-                 |  x -> CAST(floor(CAST(CAST(x AS FLOAT) AS DOUBLE)
-                 |    * 127.0 / CAST('$gmV' AS DOUBLE) + 0.5) AS BIGINT) + 127)"""
-                .stripMargin).as("qv"))
-            .select(expr(
-              s"""array_min(transform($centArr,
-                 |  s -> named_struct('dist', graft_sqdisti(qv, s.cm),
-                 |                    'c', s.c)))""".stripMargin).as("mc"))
-            .groupBy($"mc.c".as("cell"))
-            .agg(count(lit(1)).as("n_delta"), sum($"mc.dist").as("sd"))
-        }
+      val state = graft.streaming.StreamHarness.runToMemory(s, "q452", mode = "complete") {
+        s.readStream.format("graftlog")
+          .option("path", root).option("stream", "embeddings")
+          .option("valueSchema", "vec_id BIGINT, emb STRING")
+          .option("startingOffsets", "earliest")
+          // >= 3 micro-batches at every SF so the bounded state really
+          // carries across batch boundaries (q424's trigger discipline)
+          .option("maxEntriesPerTrigger", math.max(64L, nDelta / 3).toString)
+          .load()
+          .select(expr(
+            s"""transform(split(emb, ','),
+               |  x -> CAST(floor(CAST(CAST(x AS FLOAT) AS DOUBLE)
+               |    * 127.0 / CAST('$gmV' AS DOUBLE) + 0.5) AS BIGINT) + 127)"""
+              .stripMargin).as("qv"))
+          .select(expr(
+            s"""array_min(transform($centArr,
+               |  s -> named_struct('dist', graft_sqdisti(qv, s.cm),
+               |                    'c', s.c)))""".stripMargin).as("mc"))
+          .groupBy($"mc.c".as("cell"))
+          .agg(count(lit(1)).as("n_delta"), sum($"mc.dist").as("sd"))
+      }
       state
         .select($"cell".cast("long").as("cell"),
           $"n_delta".cast("long").as("n_delta"), $"sd".cast("long").as("sd"))
@@ -2127,25 +2126,24 @@ object Similarity {
           "ms", r, "embeddings", orderCols = Seq("vec_id"))
       }
       val nIn = T(s, dir, "embeddings").count()
-      val state = graft.streaming.StreamHarness
-        .runToMemory(s, "q424", 4, mode = "complete") {
-          s.readStream.format("graftlog")
-            .option("path", root).option("stream", "embeddings")
-            .option("valueSchema", "vec_id BIGINT, emb STRING")
-            .option("startingOffsets", "earliest")
-            .option("maxEntriesPerTrigger", math.max(200L, nIn / 3).toString)
-            .load()
-            // float -> string -> float is exact (shortest round-trip repr),
-            // so the fixed-scale quantization matches the parquet oracle
-            .select(expr(
-              """concat(array(CAST(1 AS BIGINT)),
-                |  transform(split(emb, ','),
-                |    x -> CAST(floor(CAST(CAST(x AS FLOAT) AS DOUBLE)
-                |      * 32767.0 + 0.5) AS BIGINT)))""".stripMargin).as("qx"))
-            .select($"qx", posexplode($"qx").as(Seq("i", "xi")))
-            .select($"i", $"xi", posexplode($"qx").as(Seq("j", "xj")))
-            .groupBy($"i", $"j").agg(sum($"xi" * $"xj").as("g"))
-        }
+      val state = graft.streaming.StreamHarness.runToMemory(s, "q424", mode = "complete") {
+        s.readStream.format("graftlog")
+          .option("path", root).option("stream", "embeddings")
+          .option("valueSchema", "vec_id BIGINT, emb STRING")
+          .option("startingOffsets", "earliest")
+          .option("maxEntriesPerTrigger", math.max(200L, nIn / 3).toString)
+          .load()
+          // float -> string -> float is exact (shortest round-trip repr),
+          // so the fixed-scale quantization matches the parquet oracle
+          .select(expr(
+            """concat(array(CAST(1 AS BIGINT)),
+              |  transform(split(emb, ','),
+              |    x -> CAST(floor(CAST(CAST(x AS FLOAT) AS DOUBLE)
+              |      * 32767.0 + 0.5) AS BIGINT)))""".stripMargin).as("qx"))
+          .select($"qx", posexplode($"qx").as(Seq("i", "xi")))
+          .select($"i", $"xi", posexplode($"qx").as(Seq("j", "xj")))
+          .groupBy($"i", $"j").agg(sum($"xi" * $"xj").as("g"))
+      }
       val cells = state.collect()
         .map(r => ((r.getInt(0), r.getInt(1)), BigInt(r.getLong(2)))).toMap
       val d = 64

@@ -144,21 +144,6 @@ object StreamLog {
     }
   }
 
-  /** Shared source log (memoized per sfDir) of the replication pipes q341
-    * and q342: (event_id, event_type, vc) per event, ids from event_id.
-    */
-  private def pipeSourceLog(s: SparkSession, dir: String): String = {
-    import s.implicits._
-    graft.LogFixtures.producedLog(dir, "q341") { r =>
-      graft.log.LogBulkProducer.produceAt(
-        Tables.load(s, dir, "events")
-          .select((lit(1700000000000L) + $"event_id").as("ms"),
-            $"event_id", $"event_type",
-            expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc")),
-        "ms", r, "events", orderCols = Seq("event_id"))
-    }
-  }
-
   /** 12 h past the stream's first event — the cutoff q131/q132 replay from.
     * Memoized per sfDir: one single-column min-scan per JVM instead of 4+
     * redundant jobs per bench invocation of either query.
@@ -170,22 +155,6 @@ object StreamLog {
       Tables.load(s, dir, "events")
         .agg(min(unix_millis($"ts"))).head().getLong(0) + 43200000L)
   }
-
-  /** Scale-adaptive micro-batch caps for streams carrying the FULL events
-    * table (optimization guide §2: derive sizing from the input, never a
-    * constant tuned for one SF). A fixed 8000-entry cap that meant 2
-    * micro-batches at the sf0.01 gate degenerated to 13 batches at sf0.1 —
-    * each paying the fixed per-batch commit floor (the q352 pathology,
-    * round-9) — for results that are batch-count-invariant complete-mode
-    * aggregations. `twoBatchCap` drains in 2 batches at any SF ≥ 0.01
-    * (state still crosses a batch boundary); `severalBatchCap` keeps the
-    * multi-commit exercise the replication pipes document, at 4 batches.
-    * Floors keep the sf0.001 gate's batch counts as they were.
-    */
-  private def twoBatchCap(s: SparkSession, dir: String): String =
-    Tables.twoBatchCap(s, dir)
-  private def severalBatchCap(s: SparkSession, dir: String): String =
-    Tables.severalBatchCap(s, dir)
 
   val defs: Seq[QueryDef] = Seq(
 
@@ -257,21 +226,14 @@ object StreamLog {
           .option("path", r).option("stream", "ev")
           .mode("append").save()
       }
-      // Streaming-state tuning: the windowed agg's state store is hash
-      // partitioned by the shuffle-partition count frozen at checkpoint
-      // creation, and every micro-batch pays one state commit per partition
-      // (measured: 4 batches × 8 partitions ≈ 2.2× slower than × 2). The
-      // distinct-key cardinality here is tiny (hours × event_types), so 4
-      // state partitions beats the session default 32 — fewer stateful tasks
-      // per micro-batch, same parallelism where it matters (the source scan).
-      graft.streaming.StreamHarness.runToMemory(s, "q78", 4, mode = "complete") {
+      graft.streaming.StreamHarness.runToMemory(s, "q78", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
           // 2 micro-batches at bench scale (sf0.1 = 100k events): state
           // still crosses a batch boundary, without paying the fixed
           // per-batch commit overhead twice more (measured ~0.5 s/batch)
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir)) // 2 batches at any SF >= 0.01 (1 below the floor)
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .select(to_timestamp($"values.ts_s").as("ets"),
             $"values.event_type".as("event_type"))
@@ -301,12 +263,11 @@ object StreamLog {
         .filter($"user_id" % 3 =!= 0)
         .select($"user_id".cast("string").as("d_user_id"),
           ($"user_id" % 5).as("cohort"))
-      // 4 state partitions: tiny state keyspace
-      graft.streaming.StreamHarness.runToMemory(s, "q105", 4, mode = "complete") {
+      graft.streaming.StreamHarness.runToMemory(s, "q105", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir)) // 2 batches at any SF >= 0.01 (1 below the floor)
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .select($"values.user_id".as("user_id"),
             $"values.event_type".as("event_type"))
@@ -337,11 +298,11 @@ object StreamLog {
         .select($"user_id").distinct()
         .filter($"user_id" % 3 === 0)
         .select($"user_id".cast("string").as("b_user_id"))
-      graft.streaming.StreamHarness.runToMemory(s, "q245", 4, mode = "complete") {
+      graft.streaming.StreamHarness.runToMemory(s, "q245", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir)) // 2 batches at any SF >= 0.01 (1 below the floor)
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .select($"values.user_id".as("user_id"),
             $"values.event_type".as("event_type"))
@@ -386,9 +347,7 @@ object StreamLog {
           // oracle — correctness first, state size is tiny at this key count
           .withWatermark(tsCol, "2 hours")
       val fmt = "yyyy-MM-dd HH:mm:ss"
-      // stream-stream join keeps four state stores per partition; with a
-      // tiny key space, 2 partitions halves the per-batch commit cost
-      graft.streaming.StreamHarness.runToMemory(s, "q107", 2) {
+      graft.streaming.StreamHarness.runToMemory(s, "q107") {
         src("clicks", "cts", "cu")
           .join(src("purchases", "pts", "pu"),
             expr("cu = pu AND pts >= cts AND pts < cts + INTERVAL 10 MINUTES"))
@@ -429,7 +388,7 @@ object StreamLog {
             $"values.user_id".as(userCol))
           .withWatermark(tsCol, "2 hours") // q107's late-safety rationale
       val fmt = "yyyy-MM-dd HH:mm:ss"
-      graft.streaming.StreamHarness.runToMemory(s, "q242", 2) {
+      graft.streaming.StreamHarness.runToMemory(s, "q242") {
         src("clicks", "cts", "cu")
           .join(src("purchases", "pts", "pu"),
             expr("cu = pu AND pts >= cts AND pts < cts + INTERVAL 10 MINUTES"),
@@ -458,11 +417,11 @@ object StreamLog {
           .option("path", r).option("stream", "ev")
           .mode("append").save()
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q115", 4) {
+      graft.streaming.StreamHarness.runToMemory(s, "q115") {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir)) // 2 batches at any SF >= 0.01 (1 below the floor)
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .selectExpr("values['event_type'] AS k", "values['event_id'] AS v")
         graft.streaming.StreamingOps.runningCountByKeyTws(s, src, "k", "v")
@@ -492,11 +451,11 @@ object StreamLog {
           .option("path", r).option("stream", "ev")
           .mode("append").save()
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q125", 4) {
+      graft.streaming.StreamHarness.runToMemory(s, "q125") {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir)) // 2 batches at any SF >= 0.01 (1 below the floor)
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .selectExpr("values['event_type'] AS k",
             "CAST(values['user_id'] AS BIGINT) % 10 AS b")
@@ -572,7 +531,7 @@ object StreamLog {
       import s.implicits._
       val root = eventTimeLog(s, dir)
       val startMs = cutoffMs(s, dir)
-      graft.streaming.StreamHarness.runToMemory(s, "q131", 4, mode = "complete") {
+      graft.streaming.StreamHarness.runToMemory(s, "q131", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingTimestamp", startMs.toString)
@@ -640,8 +599,7 @@ object StreamLog {
         .filter($"ts" < lit(new java.sql.Timestamp(cut)))
         .groupBy($"values.event_type".as("event_type"))
         .agg(count(lit(1)).as("n_batch"))
-      val tail = graft.streaming.StreamHarness.runToMemory(
-          s, "q259", 4, mode = "complete") {
+      val tail = graft.streaming.StreamHarness.runToMemory(s, "q259", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingTimestamp", cut.toString)
@@ -682,11 +640,11 @@ object StreamLog {
           .option("path", r).option("stream", "ev")
           .mode("append").save()
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q128", 4) {
+      graft.streaming.StreamHarness.runToMemory(s, "q128") {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir)) // 2 batches at any SF >= 0.01 (1 below the floor)
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .selectExpr("values['event_type'] AS k", "values['event_id'] AS id")
         graft.streaming.StreamingOps.recentIdsByKeyTws(s, src, "k", "id", 3)
@@ -749,7 +707,7 @@ object StreamLog {
         graft.log.LogBulkProducer.produceAt(docs, "ms", r, "docs",
           orderCols = Seq("doc_id"))
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q120", 4) {
+      graft.streaming.StreamHarness.runToMemory(s, "q120") {
         val banded = s.readStream.format("graftlog")
           .option("path", root).option("stream", "docs")
           .option("startingOffsets", "earliest")
@@ -810,7 +768,7 @@ object StreamLog {
       import s.implicits._
       val src = sentinelJoinSide(s, dir) _
       val fmt = "yyyy-MM-dd HH:mm:ss"
-      graft.streaming.StreamHarness.runToMemory(s, "q138", 2) {
+      graft.streaming.StreamHarness.runToMemory(s, "q138") {
         src("clicks", "cts", "cu")
           .join(src("purchases", "pts", "pu"),
             expr("cu = pu AND pts >= cts AND pts < cts + INTERVAL 10 MINUTES"),
@@ -843,7 +801,7 @@ object StreamLog {
       import s.implicits._
       val src = sentinelJoinSide(s, dir) _
       val fmt = "yyyy-MM-dd HH:mm:ss"
-      graft.streaming.StreamHarness.runToMemory(s, "q150", 2) {
+      graft.streaming.StreamHarness.runToMemory(s, "q150") {
         src("clicks", "cts", "cu")
           .join(src("purchases", "pts", "pu"),
             expr("cu = pu AND pts >= cts AND pts < cts + INTERVAL 10 MINUTES"),
@@ -904,7 +862,7 @@ object StreamLog {
           s"date_format(timestamp_millis($flushMs), '$tsFmt') AS ts_s"))
       }
       val fmt = "yyyy-MM-dd HH:mm:ss"
-      graft.streaming.StreamHarness.runToMemory(s, "q139", 4) {
+      graft.streaming.StreamHarness.runToMemory(s, "q139") {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
@@ -979,7 +937,7 @@ object StreamLog {
       val flushMs = (mS + 72L * 3600) * 1000
       // drains: the on-time phase (wm -> m - 1 h; evict), the deferred phase
       // against the advanced watermark, the flush row closing every window
-      val q = graft.streaming.StreamHarness.drainAcross(s, statePartitions = 4) {
+      val q = graft.streaming.StreamHarness.drainAcross(s) {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
@@ -1037,7 +995,7 @@ object StreamLog {
       val root = userEventLog(s, dir)
       val ckpt = graft.TempDirs.scratch("graft-q145-ckpt")
       // the answer is read from the state store, so the sink discards rows
-      graft.streaming.StreamHarness.drain(s, statePartitions = Some(4)) { // tiny state keyspace
+      graft.streaming.StreamHarness.drain(s) {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("startingOffsets", "earliest")
@@ -1166,23 +1124,15 @@ object StreamLog {
       val v0 = Tables.load(s, dir, "events")
         .select($"event_id", $"event_type",
           expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
-      val root = graft.LogFixtures.producedLog(dir, "q182") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          v0.select((lit(1700000000000L) + $"event_id").as("ms"),
-            $"event_id", $"event_type", $"vc"),
-          "ms", r, "events", orderCols = Seq("event_id"))
-      }
+      val root = graft.LogFixtures.eventTypeCents(s, dir)
       val bounds = v0.agg(min($"vc").as("lo"),
         (max($"vc") - min($"vc") + 1).as("w"))
-      // 2 state partitions: the keyspace is (5 types x <=64 bins); each
-      // extra partition costs a state commit per micro-batch (NOTES floor)
-      val sketch = graft.streaming.StreamHarness.runToMemory(
-          s, "q182", 2, mode = "complete") {
+      val sketch = graft.streaming.StreamHarness.runToMemory(s, "q182", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema", "event_id BIGINT, event_type STRING, vc BIGINT")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir))
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .crossJoin(broadcast(bounds))
           .select($"event_type", expr("((vc - lo) * 64) DIV w").as("bin"), $"w")
@@ -1344,14 +1294,7 @@ object StreamLog {
       """SELECT event_type, CAST(COUNT(*) AS BIGINT) AS n_events
         |FROM events GROUP BY event_type ORDER BY event_type""") { (s, dir) =>
       import s.implicits._
-      val v0 = Tables.load(s, dir, "events")
-        .select($"event_id", $"event_type")
-      val rootA = graft.LogFixtures.producedLog(dir, "q352") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          v0.select((lit(1700000000000L) + $"event_id").as("ms"),
-            $"event_id", $"event_type"),
-          "ms", r, "events", orderCols = Seq("event_id"))
-      }
+      val rootA = graft.LogFixtures.eventTypes(s, dir)
       // the changelog: update-mode deltas appended per micro-batch. The
       // trigger scales with the input so the query always drains in ~5
       // snapshot epochs: a FIXED 3000-entry trigger degenerates to ~34
@@ -1360,14 +1303,9 @@ object StreamLog {
       // RESULT is identical at any batch count (that indifference is the
       // materialized-view contract itself, and the multi-epoch drain
       // still exercises it).
-      val nIn = v0.count()
+      val nIn = Tables.rowCount(s, dir, "events")
       val rootB = graft.TempDirs.scratch("graft-q352-ktable")
-      // state store sized to the key cardinality (a handful of event types):
-      // each of the ~5 epochs pays one state commit per partition, and the
-      // session default (= core count) meant 32 commits a batch for state
-      // that fits in one — ~2 s of pure commit overhead at sf0.1 (guide §2:
-      // size from the data; the changelog CONTENT is partition-invariant)
-      graft.streaming.StreamHarness.drain(s, statePartitions = Some(4)) {
+      graft.streaming.StreamHarness.drain(s) {
         s.readStream.format("graftlog")
           .option("path", rootA).option("stream", "events")
           .option("startingOffsets", "earliest")
@@ -1445,13 +1383,12 @@ object StreamLog {
       val bounds = e0.agg(min($"vc").as("lo"),
         (max($"vc") - min($"vc") + 1).as("w"),
         expr("(MIN(ms) + MAX(ms)) div 2").as("mid"))
-      val sink = graft.streaming.StreamHarness.runToMemory(
-          s, "q353", 2, mode = "complete") {
+      val sink = graft.streaming.StreamHarness.runToMemory(s, "q353", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema", "event_id BIGINT, vc BIGINT, ms BIGINT")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir))
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .crossJoin(broadcast(bounds))
           .select(expr("((vc - lo) * 10) div w").as("bin"),
@@ -1523,19 +1460,14 @@ object StreamLog {
       val v0 = Tables.load(s, dir, "events")
         .select($"event_id", $"event_type",
           expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("vc"))
-      val rootA = graft.LogFixtures.producedLog(dir, "q355") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          v0.select((lit(1700000000000L) + $"event_id").as("ms"),
-            $"event_id", $"event_type", $"vc"),
-          "ms", r, "events", orderCols = Seq("event_id"))
-      }
+      val rootA = graft.LogFixtures.eventTypeCents(s, dir)
       val rootB = graft.TempDirs.scratch("graft-q355-lanes")
       val badPred = "values['event_type'] = 'error' OR " +
         "CAST(values['vc'] AS BIGINT) < 0"
       // trigger scales with the input (q352's lesson): the lane digests
       // read payload values only, so they are identical at any batch
       // count — drain each lane in ~4 commits instead of 25 at sf0.1
-      val nIn = v0.count()
+      val nIn = Tables.rowCount(s, dir, "events")
       def lane(stream: String, keep: String): Unit =
         graft.streaming.StreamHarness.drain(s) {
           s.readStream.format("graftlog")
@@ -1673,14 +1605,14 @@ object StreamLog {
         |  FROM events WHERE event_type <> 'error'))"""
     }) { (s, dir) =>
       import s.implicits._
-      val rootA = pipeSourceLog(s, dir)
+      val rootA = graft.LogFixtures.eventTypeCents(s, dir)
       // the pipe: source A -> handler filter -> engine streaming sink B
       val rootB = graft.TempDirs.scratch("graft-q341-replica")
       graft.streaming.StreamHarness.drain(s) {
         s.readStream.format("graftlog")
           .option("path", rootA).option("stream", "events")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", severalBatchCap(s, dir)) // several commits
+          .option("maxEntriesPerTrigger", Tables.severalBatchCap(s, dir)) // several commits
           .load()
           .filter($"values".getItem("event_type") =!= "error")
           .select($"values")
@@ -1723,7 +1655,7 @@ object StreamLog {
         |  FROM events WHERE event_type <> 'error'))"""
     }) { (s, dir) =>
       import s.implicits._
-      val rootA = pipeSourceLog(s, dir)
+      val rootA = graft.LogFixtures.eventTypeCents(s, dir)
       val rootB = graft.TempDirs.scratch("graft-q342-replica")
       val ckpt = graft.TempDirs.scratch("graft-q342-ckpt")
       // cap scaled from the input so the phase split holds at any SF (a
@@ -1802,7 +1734,7 @@ object StreamLog {
         s.readStream.format("graftlog")
           .option("path", rootA).option("stream", "events")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", severalBatchCap(s, dir))
+          .option("maxEntriesPerTrigger", Tables.severalBatchCap(s, dir))
           .load()
           .filter($"values".getItem("event_type") =!= "error")
           // the sharded sink routes on a top-level column of the write
@@ -1885,14 +1817,13 @@ object StreamLog {
           "ms", r, "events", orderCols = Seq("event_id"))
       }
       // streaming state = one counter per (type, day) — calendar-bounded
-      val sink = graft.streaming.StreamHarness.runToMemory(
-          s, "q336", 2, mode = "complete") {
+      val sink = graft.streaming.StreamHarness.runToMemory(s, "q336", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema",
             "event_id BIGINT, event_type STRING, day STRING")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir))
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .groupBy($"event_type", $"day".cast("date").as("day"))
           .agg(count(lit(1)).as("n"))
@@ -1968,21 +1899,13 @@ object StreamLog {
       // sketch is deterministic in the data.
       val kmvK = graft.operators.UdfSurface.KmvK
       val kmv = udaf(graft.operators.UdfSurface.KmvSketch)
-      val v0 = Tables.load(s, dir, "events")
-        .select($"event_id", $"event_type", $"user_id")
-      val root = graft.LogFixtures.producedLog(dir, "q191") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          v0.select((lit(1700000000000L) + $"event_id").as("ms"),
-            $"event_id", $"event_type", $"user_id"),
-          "ms", r, "events", orderCols = Seq("event_id"))
-      }
-      val sk = graft.streaming.StreamHarness.runToMemory(
-          s, "q191", 2, mode = "complete") {
+      val root = graft.LogFixtures.eventTypeUser(s, dir)
+      val sk = graft.streaming.StreamHarness.runToMemory(s, "q191", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema", "event_id BIGINT, event_type STRING, user_id BIGINT")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir))
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .select($"event_type", expr(
             s"(graft_polyhash(CAST(user_id AS STRING)) * 2654435761) % ${graft.functions.TextHash.P}")
@@ -2017,21 +1940,13 @@ object StreamLog {
       // exactness). Estimates are finalized batch-side off the drained
       // sketch, q182/q191's dashboard-read pattern.
       val mg = udaf(graft.operators.UdfSurface.MisraGries)
-      val v0 = Tables.load(s, dir, "events")
-        .select($"event_id", $"event_type", $"user_id")
-      val root = graft.LogFixtures.producedLog(dir, "q200") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          v0.select((lit(1700000000000L) + $"event_id").as("ms"),
-            $"event_id", $"event_type", $"user_id"),
-          "ms", r, "events", orderCols = Seq("event_id"))
-      }
-      val sk = graft.streaming.StreamHarness.runToMemory(
-          s, "q200", 2, mode = "complete") {
+      val root = graft.LogFixtures.eventTypeUser(s, dir)
+      val sk = graft.streaming.StreamHarness.runToMemory(s, "q200", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema", "event_id BIGINT, event_type STRING, user_id BIGINT")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir))
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .select($"event_type",
             expr("CAST(user_id % 40 AS STRING)").as("k"))
@@ -2088,13 +2003,12 @@ object StreamLog {
             $"event_id", $"user_id"),
           "ms", r, "events", orderCols = Seq("event_id"))
       }
-      val cms = graft.streaming.StreamHarness.runToMemory(
-          s, "q375", 2, mode = "complete") {
+      val cms = graft.streaming.StreamHarness.runToMemory(s, "q375", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema", "event_id BIGINT, user_id BIGINT")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir))
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .select($"user_id", explode(sequence(lit(0L), lit(3L))).as("r"))
           .select($"r", expr(cellExpr).as("c"))
@@ -2137,26 +2051,17 @@ object StreamLog {
       // sink table. Distinct from q78 (windowed event-time agg) and
       // q191/q200 (sketch state): plain keyed aggregates as long-lived
       // streaming state through the engine's source.
-      val v0 = Tables.load(s, dir, "events")
-        .select($"event_id", $"event_type",
-          expr("CAST(FLOOR(value * 100 + 0.5) AS BIGINT)").as("value_c"))
-      val root = graft.LogFixtures.producedLog(dir, "q209") { r =>
-        graft.log.LogBulkProducer.produceAt(
-          v0.select((lit(1700000000000L) + $"event_id").as("ms"),
-            $"event_id", $"event_type", $"value_c"),
-          "ms", r, "events", orderCols = Seq("event_id"))
-      }
-      graft.streaming.StreamHarness.runToMemory(
-          s, "q209", 2, mode = "complete") {
+      val root = graft.LogFixtures.eventTypeCents(s, dir)
+      graft.streaming.StreamHarness.runToMemory(s, "q209", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
-          .option("valueSchema", "event_id BIGINT, event_type STRING, value_c BIGINT")
+          .option("valueSchema", "event_id BIGINT, event_type STRING, vc BIGINT")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir))
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .groupBy($"event_type")
-          .agg(count(lit(1)).as("n"), min($"value_c").as("min_c"),
-            max($"value_c").as("max_c"), sum($"value_c").as("sum_c"))
+          .agg(count(lit(1)).as("n"), min($"vc").as("min_c"),
+            max($"vc").as("max_c"), sum($"vc").as("sum_c"))
       }.orderBy($"event_type")
     },
 
@@ -2193,12 +2098,12 @@ object StreamLog {
             $"event_id", $"user_id", $"obs"),
           "ms", r, "events", orderCols = Seq("event_id"))
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q216", 4) {
+      graft.streaming.StreamHarness.runToMemory(s, "q216") {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema", "event_id BIGINT, user_id BIGINT, obs BIGINT")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir)) // 2 batches at any SF >= 0.01 (1 below the floor)
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
         graft.streaming.StreamingOps
           .forwardFillByKeyTws(s, src, "user_id", "event_id", "obs")
@@ -2246,12 +2151,12 @@ object StreamLog {
             $"event_id", $"event_type", $"vd"),
           "ms", r, "events", orderCols = Seq("event_id"))
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q224", 4) {
+      graft.streaming.StreamHarness.runToMemory(s, "q224") {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema", "event_id BIGINT, event_type STRING, vd BIGINT")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir)) // 2 batches at any SF >= 0.01 (1 below the floor)
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
         graft.streaming.StreamingOps
           .anomalyFlagsByKeyTws(s, src, "event_type", "event_id", "vd", 30L)
@@ -2295,13 +2200,13 @@ object StreamLog {
             $"event_type"),
           "ms", r, "ev", orderCols = Seq("tsu", "event_id"))
       }
-      val fin = graft.streaming.StreamHarness.runToMemory(s, "q233", 4) {
+      val fin = graft.streaming.StreamHarness.runToMemory(s, "q233") {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "ev")
           .option("valueSchema",
             "tsu BIGINT, event_id BIGINT, user_id STRING, event_type STRING")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir)) // 2 batches at any SF >= 0.01 (1 below the floor)
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
         graft.streaming.StreamingOps
           .funnelByUserTws(s, src, "user_id", "tsu", "event_type", "event_id",
@@ -2362,13 +2267,12 @@ object StreamLog {
             $"event_id", $"cents"),
           "ms", r, "events", orderCols = Seq("event_id"))
       }
-      val streamed = graft.streaming.StreamHarness.runToMemory(
-          s, "q282", 2, mode = "complete") {
+      val streamed = graft.streaming.StreamHarness.runToMemory(s, "q282", mode = "complete") {
         s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema", "event_id BIGINT, cents BIGINT")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir))
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
           .filter($"cents" > 0)
           .select(substring($"cents".cast("string"), 1, 1).cast("long")
@@ -2426,13 +2330,13 @@ object StreamLog {
             $"event_id", $"user_id", $"event_type", $"us"),
           "ms", r, "events", orderCols = Seq("event_id"))
       }
-      graft.streaming.StreamHarness.runToMemory(s, "q300", 4) {
+      graft.streaming.StreamHarness.runToMemory(s, "q300") {
         val src = s.readStream.format("graftlog")
           .option("path", root).option("stream", "events")
           .option("valueSchema",
             "event_id BIGINT, user_id BIGINT, event_type STRING, us BIGINT")
           .option("startingOffsets", "earliest")
-          .option("maxEntriesPerTrigger", twoBatchCap(s, dir)) // 2 batches at any SF >= 0.01 (1 below the floor)
+          .option("maxEntriesPerTrigger", Tables.twoBatchCap(s, dir))
           .load()
         graft.streaming.StreamingOps
           .cepMatchesByKeyTws(s, src, "user_id", "event_id", "us",

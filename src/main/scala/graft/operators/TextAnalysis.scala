@@ -2237,21 +2237,20 @@ object TextAnalysis {
           "ms", r, "docs", orderCols = Seq("doc_id"))
       }
       val nIn = T(s, dir, "documents").count()
-      val state = graft.streaming.StreamHarness
-        .runToMemory(s, "q427", 4, mode = "complete") {
-          s.readStream.format("graftlog")
-            .option("path", root).option("stream", "docs")
-            .option("valueSchema", "doc_id BIGINT, source STRING, text STRING")
-            .option("startingOffsets", "earliest")
-            .option("maxEntriesPerTrigger", math.max(200L, nIn / 3).toString)
-            .load()
-            .select($"source", split($"text", " ").as("t"))
-            .select($"source", expr(periodExprSpark("t")).as("p"))
-            .groupBy($"source")
-            .agg(count(lit(1)).as("n_docs"),
-              sum(when($"p" > 0, 1L).otherwise(0L)).as("n_periodic"),
-              min(when($"p" > 0, $"p")).as("minp"))
-        }
+      val state = graft.streaming.StreamHarness.runToMemory(s, "q427", mode = "complete") {
+        s.readStream.format("graftlog")
+          .option("path", root).option("stream", "docs")
+          .option("valueSchema", "doc_id BIGINT, source STRING, text STRING")
+          .option("startingOffsets", "earliest")
+          .option("maxEntriesPerTrigger", math.max(200L, nIn / 3).toString)
+          .load()
+          .select($"source", split($"text", " ").as("t"))
+          .select($"source", expr(periodExprSpark("t")).as("p"))
+          .groupBy($"source")
+          .agg(count(lit(1)).as("n_docs"),
+            sum(when($"p" > 0, 1L).otherwise(0L)).as("n_periodic"),
+            min(when($"p" > 0, $"p")).as("minp"))
+      }
       state
         .select($"source", $"n_docs", $"n_periodic",
           expr("(n_periodic * 1000000) DIV n_docs").as("periodic_ppm"),

@@ -949,7 +949,7 @@ object GraftLogWritePath {
         .map { case (p, c) => (java.nio.file.Paths.get(p), c) }
       // the LogWriter constructor materializes an empty stream when no task
       // staged anything, so an all-empty write still creates the stream
-      new LogWriter(root, targets(k), autoCompactSegments = 64)
+      new LogWriter(root, targets(k), compaction = Some(LogStore.CompactionPolicy(64)))
         .publishStagedValues(staged)
       sweepStaleStaging(root, targets(k), queryId, stagingTtlMs)
     }

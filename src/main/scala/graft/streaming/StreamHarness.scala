@@ -27,6 +27,11 @@ object StreamHarness {
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
   private val FirstBatchTimeoutMs = 120000L
 
+  /** The shuffle (and so state-store) partition count of every query
+    * [[start]] starts; see there.
+    */
+  private[graft] val StateWidth = 2
+
   /** Start `writer`'s query: the one place an engine streaming query is
     * started. While `writer.start()` runs, the session carries:
     *  - [[LocalCheckpointFileManager]] as the checkpoint file manager, unless
@@ -35,23 +40,24 @@ object StreamHarness {
     *    are then written with java.nio, not through Hadoop's local
     *    `FileContext`, which spawns `chmod`/`ls` processes for every write
     *    where libhadoop is missing (tens of ms per file, every micro-batch);
-    *  - with `statePartitions`, that shuffle-partition count, which a NEW
-    *    checkpoint freezes as its state-store partition count. Stateful
-    *    queries size it to the KEY CARDINALITY: each micro-batch pays one
-    *    state commit per partition, so a handful-of-keys aggregation on a
-    *    32-partition store pays 32 commits a batch for state that fits in
-    *    one (q352: 5 epochs x 32 commits was ~2 s of commit overhead).
+    *  - [[StateWidth]] shuffle partitions, which a NEW checkpoint freezes as
+    *    its state-store partition count. Every micro-batch pays one state
+    *    commit per partition, and at the engine's state sizes that fixed
+    *    cost, not the state itself, is what a wider store adds: q352 once
+    *    paid 32 commits a batch on a core-count width for a handful of
+    *    keys. So the width is one constant for every query, never the
+    *    caller's choice nor the core count. It also sizes the query's
+    *    other shuffles; the consumer's batch plans have none.
     * Both are restored right after: the stream clones the session conf
     * synchronously inside `start()`. A start racing another on the same
     * session may see or miss the other's manager setting; both managers
     * write the same bytes, so that only changes the write cost.
     */
-  def start(s: SparkSession, statePartitions: Option[Int] = None)
-      (writer: => DataStreamWriter[_]): StreamingQuery = {
+  def start(s: SparkSession)(writer: => DataStreamWriter[_]): StreamingQuery = {
     val manager =
       if (s.conf.getOption(ManagerKey).isDefined) None
       else Some(ManagerKey -> classOf[LocalCheckpointFileManager].getName)
-    withConf(s, manager.toSeq ++ statePartitions.map(n => ShuffleKey -> n.toString))(writer.start())
+    withConf(s, manager.toSeq :+ (ShuffleKey -> StateWidth.toString))(writer.start())
   }
 
   /** Run `body` with `pins` set on the session conf, then restore each key. */
@@ -72,15 +78,12 @@ object StreamHarness {
     * plausible wrong answer: every engine-streaming oracle fixture is made so
     * nothing is late (q139's 0 s watermark relies on cross-batch order).
     */
-  def drain(s: SparkSession, statePartitions: Option[Int] = None)
-      (writer: => DataStreamWriter[_]): StreamingQuery =
-    drainWith(s, statePartitions, Nil)(writer)
+  def drain(s: SparkSession)(writer: => DataStreamWriter[_]): StreamingQuery =
+    drainWith(s, Nil)(writer)
 
-  private def drainWith(s: SparkSession, statePartitions: Option[Int],
-      pins: Seq[(String, String)])(writer: => DataStreamWriter[_]): StreamingQuery = {
-    val q = withConf(s, pins) {
-      start(s, statePartitions)(writer.trigger(Trigger.AvailableNow()))
-    }
+  private def drainWith(s: SparkSession, pins: Seq[(String, String)])
+      (writer: => DataStreamWriter[_]): StreamingQuery = {
+    val q = withConf(s, pins)(start(s)(writer.trigger(Trigger.AvailableNow())))
     try q.awaitTermination()
     finally q.stop()
     val dropped = droppedByWatermark(q)
@@ -127,9 +130,9 @@ object StreamHarness {
     * can; after each of `appends`, let the SAME query read again; stop. Late
     * drops are the caller's to judge (q144 drops rows on purpose).
     */
-  def drainAcross(s: SparkSession, statePartitions: Int)
+  def drainAcross(s: SparkSession)
       (writer: => DataStreamWriter[_])(appends: (() => Unit)*): StreamingQuery = {
-    val q = start(s, Some(statePartitions))(writer)
+    val q = start(s)(writer)
     try {
       q.processAllAvailable()
       appends.foreach { append => append(); q.processAllAvailable() }
@@ -145,8 +148,8 @@ object StreamHarness {
     * Spark's no-data micro-batches: the drain ends at its last data batch
     * instead of running one more batch that only drops state it discards.
     */
-  def runToMemory(s: SparkSession, prefix: String, statePartitions: Int,
-      mode: String = "append")(build: => DataFrame): DataFrame = {
+  def runToMemory(s: SparkSession, prefix: String, mode: String = "append")
+      (build: => DataFrame): DataFrame = {
     val sinkName = s"${prefix}_sink_${System.nanoTime()}"
     val plan = build
     val analyzed = plan.queryExecution.analyzed
@@ -154,7 +157,7 @@ object StreamHarness {
       Seq(StoreKey -> RocksDb) else Nil
     val noData = if (evictionSilent(analyzed, mode)) Seq(NoDataKey -> "false") else Nil
     graft.CacheScope.sinkView(s, sinkName)
-    drainWith(s, Some(statePartitions), store ++ noData) {
+    drainWith(s, store ++ noData) {
       plan.writeStream.outputMode(mode)
         .format("memory").queryName(sinkName)
         .option("checkpointLocation", graft.TempDirs.scratch(s"graft-$prefix-ckpt"))

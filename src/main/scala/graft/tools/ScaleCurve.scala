@@ -148,12 +148,6 @@ object ScaleCurve {
     }, "events")
   }
 
-  private def time(fn: => Long): Double = {
-    val t0 = System.nanoTime()
-    fn
-    (System.nanoTime() - t0) / 1e9
-  }
-
   /** Usage: ScaleCurve [baseDir] [factor] [realScaledDir]
     *
     * With a third argument, the 10x point is measured on that pre-built
@@ -173,23 +167,14 @@ object ScaleCurve {
       d
     }
 
-    // warm-up (codegen, parquet readers), same discipline as Bench
-    try graft.SparkEntry.queries("q01_pricing_summary")(spark, baseDir).count()
-    catch { case e: Throwable =>
-      System.err.println(s"[warmup] q01_pricing_summary FAILED: $e") }
+    graft.QueryTimer.warmUp(spark, "scalecurve", baseDir)
+    def best2(name: String, dir: String): Option[Double] =
+      graft.QueryTimer.times(spark, "scalecurve", name, dir, 2).minOption
 
-    def best2(name: String, dir: String): Double = {
-      val fn = graft.SparkEntry.queries(name)
-      val ts = (1 to 2).map(_ => time(fn(spark, dir).count()))
-      graft.CacheScope.release()
-      ts.min
-    }
-
-    val rows = Queries.map { name =>
-      val t1 = best2(name, baseDir)
-      val tN = best2(name, scaledDir)
-      val exp = math.log(tN / t1) / math.log(factor.toDouble)
-      (name, t1, tN, exp)
+    // a query that fails at either scale is left out of the curve
+    val rows = Queries.flatMap { name =>
+      for (t1 <- best2(name, baseDir); tN <- best2(name, scaledDir))
+        yield (name, t1, tN, math.log(tN / t1) / math.log(factor.toDouble))
     }
     val mode = if (realDir.isDefined) "real" else "synthetic"
     val json = rows.map { case (n, t1, tN, e) =>

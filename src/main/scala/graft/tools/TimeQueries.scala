@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{CacheScope, GraftSession, SparkEntry}
+import graft.{GraftSession, QueryTimer}
 
 /** Time one or more named queries in ONE session (best of N each) — the
   * round-12 measurement workhorse: one JVM/JIT warmup shared across the
@@ -15,23 +15,11 @@ object TimeQueries {
     val n = if (args.length > 2) args(2).toInt else 3
     val spark = GraftSession.builder(GraftSession.envCpus).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // fixed warmup, as in Bench
-    try SparkEntry.queries("q01_pricing_summary")(spark, sfDir).count()
-    catch { case e: Throwable =>
-      System.err.println(s"[warmup] q01_pricing_summary FAILED: $e") }
-    // same methodology as Bench: caches live across the runs of one query
-    // (the warm run is the measurement), released once at the end
-    val out = names.map { name =>
-      val fn = SparkEntry.queries(name)
-      val times = try (1 to n).map { _ =>
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        (System.nanoTime() - t0) / 1e9
-      } finally CacheScope.release()
-      name -> times
-    }
-    out.foreach { case (name, ts) =>
-      println(f"[timeq] $name best ${ts.min}%.3f s  (runs: ${ts.map(t => f"$t%.2f").mkString(" ")})")
+    QueryTimer.warmUp(spark, "timeq", sfDir)
+    names.foreach { name =>
+      val ts = QueryTimer.times(spark, "timeq", name, sfDir, n)
+      if (ts.nonEmpty)
+        println(f"[timeq] $name best ${ts.min}%.3f s  (runs: ${ts.map(t => f"$t%.2f").mkString(" ")})")
     }
     spark.stop()
   }

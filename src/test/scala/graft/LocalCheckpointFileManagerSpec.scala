@@ -150,10 +150,10 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
   /** Start through the wrapper, with the session naming `manager` (or no
     * manager) at the time.
     */
-  private def startWith(manager: Option[String], statePartitions: Option[Int] = None)
+  private def startWith(manager: Option[String])
       (writer: => DataStreamWriter[_]): StreamingQuery = {
     manager.foreach(spark.conf.set(ManagerKey, _))
-    try StreamHarness.start(spark, statePartitions)(writer)
+    try StreamHarness.start(spark)(writer)
     finally spark.conf.unset(ManagerKey)
   }
 
@@ -174,14 +174,16 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     val root = smallLog()
     val shuffle = spark.conf.get("spark.sql.shuffle.partitions")
     assert(spark.conf.getOption(ManagerKey).isEmpty)
-    val q = StreamHarness.start(spark, statePartitions = Some(3))(noopQuery(root))
+    val width = StreamHarness.StateWidth.toString
+    assert(shuffle != width, "the session must differ from the harness width")
+    val q = StreamHarness.start(spark)(noopQuery(root))
     q.awaitTermination()
-    assert(managerOf(q) == LocalManager && shuffleOf(q) == "3")
+    assert(managerOf(q) == LocalManager && shuffleOf(q) == width)
     assert(spark.conf.getOption(ManagerKey).isEmpty)
     assert(spark.conf.get("spark.sql.shuffle.partitions") == shuffle)
     val own = startWith(Some(SparkManager))(noopQuery(root))
     own.awaitTermination()
-    assert(managerOf(own) == SparkManager && shuffleOf(own) == shuffle)
+    assert(managerOf(own) == SparkManager && shuffleOf(own) == width)
   }
 
   /** A q342-style pipe, stopped after a first drain and resumed after more
@@ -238,7 +240,7 @@ class LocalCheckpointFileManagerSpec extends AnyFunSuite {
     def produce(r: Range): Unit = w.produceAll(r.map(i => Map[String, Any]("k" -> i % 3)))
     def drain(manager: Option[String]): Map[String, Long] = {
       val sink = s"ckfm_state_${System.nanoTime()}"
-      val q = startWith(manager, statePartitions = Some(2)) {
+      val q = startWith(manager) {
         spark.readStream.format("graftlog")
           .option("path", root).option("stream", "src")
           .option("startingOffsets", "earliest")

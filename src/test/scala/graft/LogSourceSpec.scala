@@ -1098,7 +1098,7 @@ class LogSourceSpec extends AnyFunSuite {
   test("tiered compaction merges small-segment runs; auto-compact bounds file count") {
     val root = TestSpark.tmpDir("graftlog")
     var now = 1000L
-    val w = new LogWriter(root, "s", () => now, autoCompactSegments = 8)
+    val w = new LogWriter(root, "s", () => now, compaction = Some(LogStore.CompactionPolicy(8)))
     (1 to 100).foreach { i => now += 10; w.produce(Map("i" -> i)) }
     val segs = LogStore.segments(root, "s")
     assert(segs.size < 20, s"auto-compact should bound file count, got ${segs.size}")

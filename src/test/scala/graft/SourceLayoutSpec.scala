@@ -134,9 +134,12 @@ class SourceLayoutSpec extends AnyFunSuite {
   }
 
   test("the streaming conf keys StreamHarness pins are spelled only in StreamHarness") {
+    def quoted(key: String) = java.util.regex.Pattern.quote(s""""$key"""")
     val keys = Seq("noDataMicroBatches.enabled", "checkpointFileManagerClass",
-      "stateStore.providerClass").map(k => java.util.regex.Pattern.quote(s""""spark.sql.streaming.$k""""))
-    val hits = offenders(keys.mkString("|"), Set("StreamHarness.scala"))
+      "stateStore.providerClass").map(k => quoted(s"spark.sql.streaming.$k"))
+    val hits = offenders(keys.mkString("|"), Set("StreamHarness.scala")) ++
+      // the session default is set where the session is built
+      offenders(quoted("spark.sql.shuffle.partitions"), Set("StreamHarness.scala", "GraftSession.scala"))
     assert(hits.isEmpty, hits.mkString("\n"))
   }
 

@@ -9,6 +9,7 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import java.nio.file.{Files, Path, Paths}
 import java.util.UUID
 import java.util.concurrent.{ConcurrentHashMap, ConcurrentLinkedQueue}
 import scala.jdk.CollectionConverters._
@@ -17,7 +18,8 @@ import scala.jdk.CollectionConverters._
   * evicting state cannot add output: inner and left-semi stream-stream joins
   * skip the trailing no-data batch, while an append-mode window aggregation
   * and a left-outer join keep it, because that batch emits their final
-  * windows and their null-padded rows.
+  * windows and their null-padded rows. Every query the harness starts keeps
+  * its state at the harness's one width, whatever the session's own.
   */
 class StreamHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   private lazy val spark = TestSpark.spark
@@ -89,7 +91,7 @@ class StreamHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def rows(df: DataFrame): Seq[Row] = df.collect().toSeq.sortBy(_.toString)
 
   private def drain(prefix: String, mode: String = "append")(build: => DataFrame): Seq[Row] =
-    try rows(StreamHarness.runToMemory(spark, prefix, 1, mode)(build))
+    try rows(StreamHarness.runToMemory(spark, prefix, mode)(build))
     finally CacheScope.release()
 
   test("an inner interval join ends at its last data batch with the batch join's rows") {
@@ -127,5 +129,39 @@ class StreamHarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(got.filter(_.isNullAt(3)).map(_.getString(1)) == Seq("u2"))
     assert(got.filterNot(_.isNullAt(3)) == inner)
     assert(Batches.of("harness_outer").contains(0L))
+  }
+
+  /** State partition directories of `ckpt`'s first stateful operator. */
+  private def stateDirs(ckpt: Path): Set[String] = {
+    val ls = Files.list(ckpt.resolve("state").resolve("0"))
+    try ls.iterator().asScala.map(_.getFileName.toString).filter(_.forall(_.isDigit)).toSet
+    finally ls.close()
+  }
+
+  test("a drain's state width is the harness's, not the session's shuffle width") {
+    val session = spark.newSession()
+    session.conf.set("spark.sql.shuffle.partitions", "7")
+    val want = (0 until StreamHarness.StateWidth).map(_.toString).toSet
+    def counts: DataFrame = session.readStream.format("graftlog")
+      .options(Map("path" -> root, "stream" -> "clicks", "startingOffsets" -> "earliest"))
+      .load().selectExpr("values['user'] AS user").groupBy("user").count()
+
+    val prefix = s"harness_width_${System.nanoTime()}"
+    try assert(StreamHarness.runToMemory(session, prefix, "complete")(counts).count() == 4L)
+    finally CacheScope.release()
+    val tmp = Files.list(Paths.get(System.getProperty("java.io.tmpdir")))
+    val sinkCkpt = try tmp.iterator().asScala
+      .filter(_.getFileName.toString.startsWith(s"graft-$prefix-ckpt")).toSeq
+    finally tmp.close()
+    assert(sinkCkpt.size == 1, sinkCkpt)
+    assert(stateDirs(sinkCkpt.head) == want)
+
+    val ckpt = Paths.get(TestSpark.tmpDir("harness-width"))
+    StreamHarness.drain(session) {
+      counts.writeStream.outputMode("complete").format("noop")
+        .option("checkpointLocation", ckpt.toString)
+    }
+    assert(stateDirs(ckpt) == want)
+    assert(session.conf.get("spark.sql.shuffle.partitions") == "7")
   }
 }

@@ -22,7 +22,9 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   AO="$AO --add-opens=java.base/$p=ALL-UNNAMED"
 done
-JAVA="java -Xmx24g -cp $CP $AO"
+# heap: half of the box's memory (as the test command sizes SPARK_DRIVER_MEM),
+# at least 2g and at most 24g
+JAVA="java -Xmx$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 24 ? 24 : g) "g"}' /proc/meminfo) -cp $CP $AO"
 
 for sf in sf0.01 sf0.001; do
   out="/tmp/gate_verify_$sf"
